@@ -1,20 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.llm.{AnnIndex, Components}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // testdata tables are single small parquet files; smaller input
-      // splits let scans/partial aggs use all local cores (on a real
-      // cluster the 128m default is right)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     // NOTE for log readers: any `WindowExec: No Partition Defined` WARN
     // in this run comes from a reviewed BOUNDED global window (inputs
     // pre-aggregated to domain size) — the full allowlist with per-site
@@ -69,6 +58,14 @@ object Bench {
         System.err.println(s"[bench] $tag $name failed: ${e.getMessage}"); name -> -1.0
       }
     }.toMap
+    // cold index build in pass 1: the on-disk indexes (pair graph and its
+    // derived artifacts, the IVF-PQ index) are keyed by the dataset's file
+    // metadata and reused across JVMs, so whatever an earlier process left
+    // in /tmp would otherwise hide their build cost. Dropping them here
+    // makes value_first always include the first consumer's build; pass 2
+    // measures the warm reads.
+    Components.dropPairGraphCache(sfDir)
+    AnnIndex.dropIndexCache(sfDir)
     val pass1 = onePass("pass1")
     val pass2 = onePass("pass2")
     // (min, pass1 time, spread = slower/faster across the two passes).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness for plan/storage iteration:
   * `SPARK_GRAFT_SF_DIR=… runMain graft.BenchOne q_dedup_near [q_x …]`.
   * Warms each query at sf0.001 (codegen/JIT), then times two runs at the
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     args.foreach { name =>
       val q = Registry.all(name)
       try q.fn(spark, "/root/testdata/sf0.001").count()

@@ -88,16 +88,26 @@ object Engine {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     tableNames.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 
-  /** Library-user entry point: a session tuned for the local[32] harness.
-    * On a real cluster the same knobs come from spark-submit; AQE stays on
-    * so shuffle partition counts + skew joins re-plan from runtime stats.
+  /** Local parallelism of every entry point: `SPARK_GRAFT_CPUS` when set,
+    * else the JVM's available processors.
     */
-  def session(appName: String = "graft", master: String = "local[32]"): SparkSession = {
+  private lazy val defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory: Bench, BenchOne, Verify, Explain, ScaleUp
+    * and library users all start here. One shuffle partition per local
+    * core; AQE (Spark's default) re-plans partition counts and skew joins
+    * from runtime stats. On a real cluster the same knobs come from
+    * spark-submit.
+    */
+  def session(cpus: Int = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
-      .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // testdata tables are single small parquet files; smaller input
+      // splits let scans/partial aggs use all local cores (on a real
+      // cluster the 128m default is right)
+      .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -8,11 +8,11 @@ import graft.functions.ArrayDot
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so `spark.sql` users (the
-  * reference's passthrough surface) can call them too:
+  * reference's passthrough surface) can call them too. Enable with
+  * `spark.sql.extensions=graft.GraftExtensions` (or `withExtensions(new
+  * GraftExtensions)` on a session builder), then:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * // or: spark.sql.extensions=graft.GraftExtensions
   * spark.sql("SELECT array_dot(a, b) FROM vectors")
   * }}}
   */

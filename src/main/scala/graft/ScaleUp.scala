@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Local scale-up generator for scale-proofing the engine beyond the
@@ -54,7 +54,7 @@ object ScaleUp {
     // measuring a degenerate corpus.
     require(reps >= 1 && reps <= 100,
       s"reps must be in 1..100 (text-bijection family is 10x10 rotations); got $reps")
-    val spark = Engine.session("graft-scaleup")
+    val spark = Engine.session()
 
     def off(i: Int) = lit(i * keyStride)
     def shiftKeys(cols: String*)(df: DataFrame, i: Int): DataFrame =

@@ -19,8 +19,9 @@ import graft.Engine
   * where the retired fixed 16-cell grid scanned 50% of codes at every
   * corpus size. The rerank shortlist is ~10·k with a √n headroom term
   * (the residual codebooks carry most of the recall, but a purely fixed
-  * shortlist measurably cliffs as the corpus grows — PqCurve round 12:
-  * mean recall 0.58 at fixed 100 on the 10× corpus); its float reads
+  * shortlist measurably cliffs as the corpus grows — mean recall 0.58 at
+  * fixed 100 on the 10× corpus, DESIGN.md "Round-12: the quantization
+  * tier completed"); its float reads
   * also grow as √n, not n (the retired n/25 rule was corpus-LINEAR).
   *
   * Artifacts:
@@ -64,8 +65,9 @@ object AnnIndex {
     math.min(65536, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
 
   /** Probes ≈ 2·√cells (floor 8, capped at the cell count): the measured
-    * operating point on this near-uniform corpus (IvfPqCurve round 13 —
-    * at sf0.1 1·√cells drops min recall to 0.70 where 2·√cells holds
+    * operating point on this near-uniform corpus (DESIGN.md "Round-13:
+    * the ANN tier finished" — at sf0.1 1·√cells drops min recall to
+    * 0.70 where 2·√cells holds
     * 0.80; from 10× up the two tie at 0.96-0.98 mean, so the factor 2 is
     * small-corpus insurance). The probed FRACTION 2/√cells still
     * vanishes as n grows — 13% of cells at 30× vs the retired fixed
@@ -76,7 +78,8 @@ object AnnIndex {
       math.max(8, math.ceil(2.0 * math.sqrt(nCells.toDouble)).toInt))
 
   /** Rerank shortlist: 10·k floor plus a 4·√n headroom term (see the
-    * object scaladoc; measured in IvfPqCurve round 13).
+    * object scaladoc; measured in DESIGN.md "Round-13: the ANN tier
+    * finished").
     */
   def adcShortlistFor(k: Int, n: Long): Int =
     math.max(10 * k, math.ceil(4.0 * math.sqrt(n.toDouble)).toInt)
@@ -718,7 +721,8 @@ object AnnIndex {
     needsRetrain(indexStats(spark, path), trainedRows(spark, path))
 
   /** Retrain trigger. Two independent drift signals, each with a
-    * measured rationale (AppendDriftCurve round 14, sf0.1 base):
+    * measured rationale (round-14 drift curve, sf0.1 base; DESIGN.md
+    * "Round-13: the ANN tier finished"):
     *  - the corpus OUTGREW its grid: cells ≈ √n was derived at build
     *    time, so once live rows exceed 4× the trained size the probe
     *    fraction and per-cell scan are both ~2× off their operating
@@ -827,7 +831,8 @@ object AnnIndex {
     // coarseIters defaults to the FIRST BUILD's 1 so retrain is, by
     // construction, exactly the fresh-build pipeline on the live rows —
     // "post-retrain recall ≥ the fresh-build curve" is then an identity,
-    // measured equal in RetrainDiag. The knob is exposed because the
+    // measured equal (DESIGN.md "Round-15: the lifecycle loop closed").
+    // The knob is exposed because the
     // trade is real and measured (drifted sf0.1 corpus, fresh builds):
     // ci=1 skew 18.4 / recall 0.84-0.97; ci=5 11.3 / 0.74-0.80; ci=10
     // 8.6 / 0.74-0.87 — converged Lloyd tightens base-region cells and

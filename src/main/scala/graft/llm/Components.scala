@@ -569,19 +569,6 @@ object Components {
       .limit(25)
   }
 
-  /** The shared simhash near-dup pair pipeline (d1 < d2) — the graph
-    * family's common upstream, derivable per query. Kept as the
-    * recompute baseline for [[graft.PairGraphBench]].
-    */
-  private[graft] def simhashPairsRecompute(s: SparkSession, dir: String): DataFrame = {
-    val docs = Engine.table(s, dir, "documents")
-    val bits = Dedup.simhashBitsFor(docs.count())
-    Dedup.simhashNearDup(
-        Dedup.simhashSignaturesStateless(docs, bits),
-        maxHamming = Dedup.simhashMaxHamming, bits = bits)
-      .select(col("d1"), col("d2"))
-  }
-
   /** Bump when EITHER signature pipeline's semantics change (shingle
     * config, SimHash/MinHash signature derivation, banding, hamming
     * radius) — one version covers every artifact suffix (`""`/`_cc`/
@@ -636,14 +623,6 @@ object Components {
     }
   }
 
-  /** Bench hook: forget only the labels memo so the next
-    * [[simhashLabels]] call re-checks the filesystem (and rebuilds if
-    * the dir was deleted).
-    */
-  private[graft] def dropLabelMemo(dir: String): Unit = {
-    builtIndexes.remove(s"${pairGraphPath(dir)}_cc"): Unit
-  }
-
   /** Test hook + hygiene: forget this JVM's memo and delete the given
     * dataset's index dirs (pair graph + labels).
     */
@@ -663,10 +642,11 @@ object Components {
 
   /** The shared pair graph, materialized ONCE per dataset and read back
     * by every graph-family consumer — the writeIvfIndex pattern applied
-    * to the graph family's common upstream. Measured (PairGraphBench,
-    * round 8, sf0.1 local[32], min-of-2): five-consumer recompute 16.2 s
-    * vs 1.5 s write + 9.0 s reads = 10.5 s (1.54×); every consumer wins
-    * individually (e.g. q_graph_degree_hist 1.87 → 0.50 s). CLAUDE.md's
+    * to the graph family's common upstream. Measured (round 8, DESIGN.md
+    * "Pair-graph materialize-once", sf0.1 local[32], min-of-2):
+    * five-consumer recompute 16.2 s vs 1.5 s write + 9.0 s reads =
+    * 10.5 s (1.54×); every consumer wins individually (e.g.
+    * q_graph_degree_hist 1.87 → 0.50 s). CLAUDE.md's
     * negative result on caching exploded SHINGLE intermediates doesn't
     * apply: the pair graph is edge-list-sized. Rows are bit-identical to
     * the recompute (same pipeline, one parquet round-trip of longs), so
@@ -697,10 +677,11 @@ object Components {
     * suffices. Labels are vertex-sized (smaller than the edge list), the
     * loop's output is deterministic (min-id labels independent of round
     * schedule), and the production dedup pipeline labels once, then
-    * selects/audits against the labeling. Measured (LabelCacheBench,
-    * round 9, sf0.1 local[32], min-of-2): three-consumer recompute
-    * 8.22 s vs 3.07 s build+write + 0.61 s reads = 3.68 s (2.2×; every
-    * consumer individually 2.7-2.8 s → 0.12-0.25 s) — amortizing
+    * selects/audits against the labeling. Measured (round 9, DESIGN.md
+    * "CC-labeling materialize-once", sf0.1 local[32], min-of-2):
+    * three-consumer recompute 8.22 s vs 3.07 s build+write + 0.61 s
+    * reads = 3.68 s (2.2×; every consumer individually 2.7-2.8 s →
+    * 0.12-0.25 s) — amortizing
     * further with every added consumer. Returns `(id, label)` for every
     * vertex incident to an edge, exactly [[connectedComponents]]'
     * contract.
@@ -726,8 +707,8 @@ object Components {
     * signature table is doc-sized (6 fixed-width hex strings per doc),
     * values are engine-deterministic strings (parquet round-trip is
     * bit-exact), and the production ingest persists exactly this: sign
-    * once, band/probe everywhere. Measured in MinhashCacheBench
-    * (round 10, DESIGN.md).
+    * once, band/probe everywhere. Measured in round 10 (DESIGN.md
+    * "MinHash sig+candidate materialize-once").
     */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame = {
     val path = s"${pairGraphPath(dir)}_mh"
@@ -758,14 +739,6 @@ object Components {
       }
     })
     s.read.parquet(path).select(col("d1"), col("d2"))
-  }
-
-  /** Bench hook: forget the MinHash memos so the next call re-checks the
-    * filesystem (and rebuilds if the dirs were deleted).
-    */
-  private[graft] def dropMinhashMemo(dir: String): Unit = {
-    builtIndexes.remove(s"${pairGraphPath(dir)}_mh")
-    builtIndexes.remove(s"${pairGraphPath(dir)}_mhc"): Unit
   }
 
   /** The df-capped jaccard-SCORED pair index `(d1, d2, n1, n2, inter)`
@@ -1113,13 +1086,6 @@ object Components {
       .orderBy(col("cluster_id"))
   }
 
-  /** [[keepBestFromLabels]] with the closure run inline — the
-    * LabelCacheBench recompute baseline and the generic-edge-list entry
-    * point.
-    */
-  private[graft] def keepBestFromPairs(pairs: DataFrame, docs: DataFrame): DataFrame =
-    keepBestFromLabels(connectedComponents(pairs), docs)
-
   /** q_dedup_cc's downstream from a `(id, label)` labeling: per-cluster
     * size attached to every member. The window partitions by label —
     * cluster-sized partitions, never corpus-wide.
@@ -1131,12 +1097,6 @@ object Components {
       .select(col("id").as("doc_id"), col("label").as("cluster_id"),
         col("cluster_size"))
       .orderBy(col("doc_id"))
-
-  /** [[ccFromLabels]] with the closure run inline (LabelCacheBench
-    * recompute baseline / generic edge lists).
-    */
-  private[graft] def ccFromPairs(pairs: DataFrame): DataFrame =
-    ccFromLabels(connectedComponents(pairs))
 
   /** One oracle PageRank round: contributions from `p${k-1}`, then the
     * damped update — the SQL twin of the loop body in [[pageRank]].
@@ -1600,7 +1560,8 @@ object Components {
       // 100× 45 → 48 s — cache serialization beats the exchange-reused
       // recompute; the CLAUDE.md materialize-vs-recompute rule, measured
       // before trusting), so the shared shuffle rides ReuseExchange.
-      // Round-11 negative (HitsBucketedBench at 100×, VERDICT r10 #4):
+      // Round-11 negative (100×, VERDICT r10 #4; DESIGN.md "Round-11:
+      // the DuckDB chained-CTE cliff"):
       // bucketBy(8, o_orderkey) artifacts for both join sides make the
       // orders join exchange-free, but cold build+consume measured
       // 9.1 + 39.6 s vs the shipped plan's 43.7 s min-of-2 — a wash at

@@ -133,10 +133,11 @@ object Dedup {
     * array per candidate side, where the previous exploded formulation
     * (expand candidates by d1's shingles, equi-join on (d2, shingle))
     * shuffled ~shingles-per-doc ROWS per candidate (~230M rows at the
-    // 100× corpus; PrefixDiag measured 45.7 s → 7.2 s at identical
-    * output). Arrays are doc-sized (ONE document's distinct shingles),
-    * never corpus-sized. Pairs with an empty intersection are dropped,
-    * matching the old aggregate-of-matches contract (every candidate
+    * 100× corpus; measured 45.7 s → 7.2 s at identical output, DESIGN.md
+    * "30×/100× scale proof (round 8)"). Arrays are doc-sized (ONE
+    * document's distinct shingles), never corpus-sized. Pairs with an
+    * empty intersection are dropped, matching the old
+    * aggregate-of-matches contract (every candidate
     * generator here guarantees a shared shingle anyway).
     */
   def jaccardForCandidates(sh: DataFrame, cands: DataFrame): DataFrame = {
@@ -287,7 +288,8 @@ object Dedup {
     // while jac ≥ num/den needs inter·(num+den) ≥ num·(n1+n2). Both are
     // output-neutral, but they prune candidates BEFORE the expensive
     // intersection expansion, which is where the join's time goes
-    // (PrefixDiag at the 100× corpus: 63% of 11.9M candidates are
+    // (DESIGN.md "30×/100× scale proof (round 8)", at the 100× corpus:
+    // 63% of 11.9M candidates are
     // length-incompatible; verify 128.6 s → ~46 s). The sizes join keys
     // on doc ids — two hash joins against a doc-count-sized table,
     // never broadcast-dependent.
@@ -633,9 +635,9 @@ object Dedup {
   /** Materialize the shared simhash near-dup pair graph once (the
     * writeIvfIndex pattern): one signature+band+verify pass, persisted as
     * (d1, d2, hamming) parquet for every graph-family consumer to read
-    * instead of re-deriving. [[graft.PairGraphBench]] measures this
-    * trade; the per-query graded plans stay self-contained (recompute)
-    * because the driver runs each `queries` entry independently.
+    * instead of re-deriving. DESIGN.md "Pair-graph materialize-once"
+    * measures this trade; the per-query graded plans stay self-contained
+    * (recompute) because the driver runs each `queries` entry independently.
     */
   def writePairGraph(docs: DataFrame, path: String): Unit = {
     val bits = simhashBitsFor(docs.count())

@@ -325,7 +325,8 @@ object Similarity {
     * aggregation. (Round 12: this replaced a crossJoin + max_by/first
     * shape whose aggregate buffers carried the embedding ARRAY and fell
     * out of fast hash aggregation — the same ObjectHashAggregate sort
-    * fallback PqDiag measured on the PQ E-step.) Results are
+    * fallback measured on the PQ E-step, DESIGN.md "Round-12: the
+    * quantization tier completed".) Results are
     * bit-identical to the join form: each (v, c) cosine is the same IEEE
     * expression (ArrayDot ≡ the HOF fold, LlmSpec-pinned), and the
     * first-max position over the cent_id-sorted literal is exactly the
@@ -376,8 +377,9 @@ object Similarity {
     * (64× shuffle volume at dim 64; the round-2 verdict's "wrong constant
     * at 100 TB").
     *
-    * Default iters = 1, from the measured recall curve (graft.IvfCurve,
-    * recorded in DESIGN.md): on this near-uniform corpus one refinement
+    * Default iters = 1, from the measured recall curve (DESIGN.md
+    * "Known gaps / decisions", ANN operating point): on this
+    * near-uniform corpus one refinement
     * beats raw seeds at every probe count, while 2-3 iterations never
     * improve on 1 (tighter cells concentrate coverage, so recall at a
     * fixed probe budget plateaus or drops). Probes, not iterations, are
@@ -419,8 +421,9 @@ object Similarity {
 
   /** Default nProbe = 8 of 16 cells: the measured operating point for
     * this near-uniform corpus (mean recall 0.92-0.94 over 5 queries at
-    * both sf0.001 and sf0.01 vs 0.70-0.76 at 4 probes — see IvfCurve /
-    * DESIGN.md). Higher-contrast corpora run more cells and fewer
+    * both sf0.001 and sf0.01 vs 0.70-0.76 at 4 probes — see DESIGN.md
+    * "Known gaps / decisions", ANN operating point). Higher-contrast
+    * corpora run more cells and fewer
     * probes; the probed fraction, not the iteration count, is what buys
     * recall here.
     */
@@ -617,7 +620,8 @@ object Similarity {
     * round-12 rewrite of a min_by-over-join E-step whose
     * aggregate-buffer arrays fell out of fast hash aggregation
     * (ObjectHashAggregate sort fallback: 16.5 s/iteration at 60 k
-    * vectors, vs ~1 s in this shape; PqDiag).
+    * vectors, vs ~1 s in this shape; DESIGN.md "Round-12: the
+    * quantization tier completed").
     */
   private def pqArgmin(sv: Column, sub: Column,
       cb: Array[Array[Array[Double]]]): Column = {
@@ -742,10 +746,12 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     // shortlist = 10·k + a 4√n headroom term (round 13 — the retired n/25
     // rule was corpus-LINEAR float reads, VERDICT-r12; a purely FIXED
-    // shortlist measurably cliffs as the corpus grows: PqCurve round 12
+    // shortlist measurably cliffs as the corpus grows: DESIGN.md
+    // "Round-12: the quantization tier completed",
     // mean recall 0.58 at fixed 100 on the 10× corpus. √n splits the
     // difference: vanishing rerank fraction, measured recall held —
-    // PqCurve round 13); one metadata-cheap count derives it
+    // DESIGN.md "Round-13: the ANN tier finished"); one metadata-cheap
+    // count derives it
     val sl = if (shortlist > 0) shortlist
       else AnnIndex.adcShortlistFor(k, emb.count())
     // one driver collect of the codebook feeds BOTH the encode pass and
@@ -1330,7 +1336,8 @@ object Similarity {
     // (q_sim_batch's one-scan ranking): 16 rows of
     // (query_id, n_results, recall_ok), floor 6/10 — the LlmSpec
     // worst-query discipline (mean recall runs 0.86-0.98 by corpus size,
-    // IvfPqCurve; individual queries bottom out near 0.7 on the tiny
+    // DESIGN.md "Round-13: the ANN tier finished"; individual queries
+    // bottom out near 0.7 on the tiny
     // 500-vector gate corpora).
     "q_sim_batch_ann" -> Q(
       s"""SELECT vec_id AS query_id,

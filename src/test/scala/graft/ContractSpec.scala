@@ -12,6 +12,25 @@ class ContractSpec extends AnyFunSuite {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 
+  test("sessions come from Engine.session; mains are the five entry points") {
+    // one session factory, one set of runners: a new SparkSession.builder
+    // or a new one-off main belongs in Engine.session or BenchOne instead
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"missing ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val sources = walk(root).map(f =>
+      root.toPath.relativize(f.toPath).toString ->
+        java.nio.file.Files.readString(f.toPath))
+    def filesWith(token: String): Set[String] =
+      sources.collect { case (p, s) if s.contains(token) => p }.toSet
+    assert(filesWith("SparkSession.builder") == Set("graft/Engine.scala"))
+    assert(filesWith("def main") ==
+      Set("Bench", "BenchOne", "Verify", "Explain", "ScaleUp")
+        .map(n => s"graft/$n.scala"))
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracles without queries: $missing")

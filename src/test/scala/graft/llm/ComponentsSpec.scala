@@ -107,8 +107,8 @@ class ComponentsSpec extends AnyFunSuite {
     }
     try {
       // the REAL graded upstream at sf0.001: the simhash pair graph
-      val labels = Components.ccFromPairs(
-        Components.simhashPairs(spark, TestSpark.sfDir))
+      val labels = Components.ccFromLabels(Components.connectedComponents(
+        Components.simhashPairs(spark, TestSpark.sfDir)))
       assert(labels.count() > 0)
     } finally Components.ccRoundObserver = None
     assert(plans.nonEmpty, "observer saw no rounds — hook detached?")

@@ -367,7 +367,8 @@ class LlmSpec extends AnyFunSuite {
 
   test("IVF topK at defaults: mean recall >= 0.9 over 5 queries, min >= 0.8") {
     // multi-query recall at the measured operating point (8/16 probes,
-    // 1 Lloyd iteration — see IvfCurve / DESIGN.md); a single lucky
+    // 1 Lloyd iteration — see DESIGN.md "Known gaps / decisions"); a
+    // single lucky
     // query would overstate the operator
     val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
     val recalls = queryIds.map { q =>
@@ -2512,8 +2513,9 @@ class LlmSpec extends AnyFunSuite {
     // here: a 2.0-shifted replica is an angular point mass that NO
     // cosine quantizer — fresh or retrained — can split across cells,
     // so post-retrain skew would stay above the trigger by data shape,
-    // not by staleness; AppendDriftCurve at sf0.1 carries the heavy-
-    // drift skew story, where mass spreads over 245 cells.)
+    // not by staleness; the sf0.1 drift curve (DESIGN.md "Round-13: the
+    // ANN tier finished") carries the heavy-drift skew story, where
+    // mass spreads over 245 cells.)
     var live = base
     (1 to 5).foreach { round =>
       val add = base

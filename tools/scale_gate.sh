@@ -37,7 +37,7 @@ else
   echo "[scale_gate] reusing existing $DST (delete to force regen)"
 fi
 
-echo "[scale_gate] timing ${#QUERIES[@]} queries at ${FACTOR}x (local[${SPARK_GRAFT_CPUS:-32}])"
+echo "[scale_gate] timing ${#QUERIES[@]} queries at ${FACTOR}x (local[${SPARK_GRAFT_CPUS:-$(nproc)}])"
 SPARK_GRAFT_SF_DIR="$DST" sbt -batch "runMain graft.BenchOne ${QUERIES[*]}" \
   | grep -E "\[benchone\]" || true
 
