@@ -231,9 +231,26 @@ object Connector {
     val validated = laid.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       validated.count()
-      validated.write.mode(SaveMode.Append).insertInto(tableName)
+      tableLock(tableName).synchronized {
+        validated.write.mode(SaveMode.Append).insertInto(tableName)
+      }
     } finally validated.unpersist()
   }
+
+  /** One lock per target table. Spark's file commit protocol stages every
+    * job that writes a table under the same `<table>/_temporary/0`, and
+    * the first job to commit deletes that directory, task files of a
+    * concurrent append to the same table included (that append then fails
+    * with "No such file"). Inserts into one table from this JVM therefore
+    * commit one at a time; the CSV parse and validation above still run
+    * concurrently. Writers in other processes are not covered.
+    */
+  private val tableLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def tableLock(tableName: String): AnyRef =
+    tableLocks.computeIfAbsent(tableName.toLowerCase(java.util.Locale.ROOT),
+      _ => new Object)
 
   /** Redshift COPY format tokens → java.time patterns (the two formats the
     * reference README documents; pass-through otherwise).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Engine
+import graft.functions.BoundParam.bind
 
 /** The persisted IVF-PQ serving layout (round 13, VERDICT-r12 #1/#2):
   * train once → write a packed CODE table partitioned by coarse cell →
@@ -79,7 +80,11 @@ object AnnIndex {
 
   /** Rerank shortlist: 10·k floor plus a 4·√n headroom term (see the
     * object scaladoc; measured in DESIGN.md "Round-13: the ANN tier
-    * finished").
+    * finished"). A persisted index passes its TRAINED size (the `meta`
+    * sidecar), as cells and probes already derive from it: appends grow
+    * the live size past it, but the 4× grow trigger ([[needsRetrain]])
+    * bounds that gap, so the √n term lags the live size by at most
+    * √4 = 2× before a retrain re-derives it.
     */
   def adcShortlistFor(k: Int, n: Long): Int =
     math.max(10 * k, math.ceil(4.0 * math.sqrt(n.toDouble)).toInt)
@@ -291,7 +296,10 @@ object AnnIndex {
     * every shortlist id came from a probed cell's codes, so the pruned
     * fetch is lossless (round 14, VERDICT-r13 #1); without it (the
     * self-contained train-and-search variant) it falls back to the full
-    * source table.
+    * source table. `n` sizes the shortlist: the persisted serves pass the
+    * index's trained size; the default (-1) counts `emb`, which only the
+    * train-and-search variant relies on (`emb` is then the indexed
+    * corpus itself). `emb` is otherwise read only for the query vector.
     */
   def topKFromCodes(emb: DataFrame, codes: DataFrame, model: IvfPqModel,
       queryId: Long, k: Int, nProbe: Int = 0, shortlist: Int = 0,
@@ -299,11 +307,12 @@ object AnnIndex {
     val nn = if (n >= 0) n else emb.count()
     val nP = if (nProbe > 0) nProbe else ivfProbesFor(model.nCells)
     val sl = if (shortlist > 0) shortlist else adcShortlistFor(k, nn)
-    val qv = emb.filter(col("vec_id") === queryId)
+    val qid = bind(queryId)
+    val qv = emb.filter(col("vec_id") === qid)
       .select(Similarity.toDouble(col("embedding")))
       .head().getSeq[Double](0).toArray
     val probed = probeCells(model, qv, nP)
-    val short = adcCoarse(codes.filter(col("vec_id") =!= queryId), model,
+    val short = adcCoarse(codes.filter(col("vec_id") =!= qid), model,
         qv, probed)
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(sl)
@@ -314,12 +323,16 @@ object AnnIndex {
       case None => emb.select(col("vec_id"),
         Similarity.toDouble(col("embedding")).as("v"))
     }
-    // query vector and norm as plan literals (qv is already collected for
-    // probing): same ArrayDot fold driver-side, bit-identical to the
-    // retired crossJoin(broadcast(q)) form, and the rerank no longer
-    // anchors a second full-table subquery just to re-read one row
+    // query vector as a plan literal and its norm as a bound parameter
+    // (qv is already collected for probing): same ArrayDot fold
+    // driver-side, bit-identical to the retired crossJoin(broadcast(q))
+    // form, and the rerank no longer anchors a second full-table subquery
+    // just to re-read one row. The array literal already rides the
+    // codegen references array; the scalar norm would be inlined into the
+    // generated code, so it is bound (BoundParam) to keep one compiled
+    // class across queries.
     val qvLit = typedLit(qv.toSeq)
-    val qnLit = lit(math.sqrt(selfDot(qv)))
+    val qnLit = bind(math.sqrt(selfDot(qv)))
     short.join(withV, "vec_id")
       .withColumn("cos_r", round(
         Similarity.dot(col("v"), qvLit) /
@@ -371,29 +384,26 @@ object AnnIndex {
     * served twin of [[Similarity.mipsTopK]], riding the SAME persisted
     * index as the cosine path (same cells, same codes, same float
     * partitions; only the driver-side tables and the rerank score
-    * expression differ).
+    * expression differ). `n` is the index's trained size, `vecs` its
+    * float sidecar.
     */
-  def mipsTopKFromCodes(emb: DataFrame, codes: DataFrame, model: IvfPqModel,
-      queryId: Long, k: Int, nProbe: Int = 0, shortlist: Int = 0,
-      n: Long = -1L, vecs: Option[DataFrame] = None): DataFrame = {
-    val nn = if (n >= 0) n else emb.count()
+  def mipsTopKFromCodes(emb: DataFrame, codes: DataFrame, vecs: DataFrame,
+      model: IvfPqModel, queryId: Long, k: Int, n: Long,
+      nProbe: Int = 0, shortlist: Int = 0): DataFrame = {
     val nP = if (nProbe > 0) nProbe else ivfProbesFor(model.nCells)
-    val sl = if (shortlist > 0) shortlist else adcShortlistFor(k, nn)
-    val qv = emb.filter(col("vec_id") === queryId)
+    val sl = if (shortlist > 0) shortlist else adcShortlistFor(k, n)
+    val qid = bind(queryId)
+    val qv = emb.filter(col("vec_id") === qid)
       .select(Similarity.toDouble(col("embedding")))
       .head().getSeq[Double](0).toArray
     val probed = probeCellsIp(model, qv, nP)
-    val short = adcCoarseIp(codes.filter(col("vec_id") =!= queryId), model,
+    val short = adcCoarseIp(codes.filter(col("vec_id") =!= qid), model,
         qv, probed)
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(sl)
       .select("vec_id")
-    val withV = vecs match {
-      case Some(vf) => vf.filter(col("cell").isin(probed: _*))
-        .select(col("vec_id"), col("v"))
-      case None => emb.select(col("vec_id"),
-        Similarity.toDouble(col("embedding")).as("v"))
-    }
+    val withV = vecs.filter(col("cell").isin(probed: _*))
+      .select(col("vec_id"), col("v"))
     val qvLit = typedLit(qv.toSeq)
     short.join(withV, "vec_id")
       .withColumn("dot_r", round(Similarity.dot(col("v"), qvLit), 6))
@@ -407,17 +417,11 @@ object AnnIndex {
     * inner-product contract, tombstones honored.
     */
   def servedMipsTopK(s: SparkSession, dir: String, queryId: Long,
-      k: Int): DataFrame = {
-    val emb = Engine.table(s, dir, "embeddings")
-    val path = indexPath(dir)
-    builtIndexes.getOrElseUpdate(path, {
-      buildAtomically(path)(tmp => { writeIndex(emb, tmp); () })
-    })
-    val root = artifactRoot(path)
-    val model = modelMemo.getOrElseUpdate(root, readModel(s, root))
-    mipsTopKFromCodes(emb, liveCodes(s, root), model, queryId, k,
-      vecs = Some(s.read.parquet(s"$root/vecs")))
-  }
+      k: Int): DataFrame =
+    served(s, dir) { (emb, ix) =>
+      mipsTopKFromCodes(emb, ix.codes, ix.vecs, ix.model, queryId, k,
+        ix.trainedRows)
+    }
 
   /** Train on the corpus and persist the serving artifacts at `path`
     * (codes partitioned by cell + cents + books + a `_SUCCESS` marker).
@@ -459,6 +463,10 @@ object AnnIndex {
     // caller re-plumbing the build-time count
     Seq(Tuple1(nTrained)).toDF("trained_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    // whatever this JVM memoized for `path` (or an epoch under it) was read
+    // from the artifacts just overwritten: without the eviction the next
+    // serve scores the new codes against the old model
+    evictServing(path)
     model
   }
 
@@ -477,15 +485,15 @@ object AnnIndex {
     * for top-k). Scan cost: |∪ probed cells| code rows ≈ the SINGLE-query
     * probe volume when the batch's probe sets overlap (they do — probes
     * concentrate in the query-dense region), never nQueries × it.
-    * Returns (query_id, vec_id, cos_r, rk).
+    * Returns (query_id, vec_id, cos_r, rk). `n` is the index's trained
+    * size, `vecs` its float sidecar.
     */
-  def topKBatchFromCodes(emb: DataFrame, codes: DataFrame, model: IvfPqModel,
-      queryIds: Seq[Long], k: Int, nProbe: Int = 0, shortlist: Int = 0,
-      n: Long = -1L, vecs: Option[DataFrame] = None): DataFrame = {
+  def topKBatchFromCodes(emb: DataFrame, codes: DataFrame, vecs: DataFrame,
+      model: IvfPqModel, queryIds: Seq[Long], k: Int, n: Long,
+      nProbe: Int = 0, shortlist: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nn = if (n >= 0) n else emb.count()
     val nP = if (nProbe > 0) nProbe else ivfProbesFor(model.nCells)
-    val sl = if (shortlist > 0) shortlist else adcShortlistFor(k, nn)
+    val sl = if (shortlist > 0) shortlist else adcShortlistFor(k, n)
     val m = model.m
     val subDim = model.subDim
     val nEntries = model.books(0).length
@@ -567,17 +575,13 @@ object AnnIndex {
       .filter(col("srk") <= sl)
       .select(col("query_id"), col("qpos"), col("vec_id"))
     // ONE float join for the union of shortlists, then the exact rerank.
-    // With the persisted sidecar the fetch prunes to the UNION of probed
-    // cells (every shortlist id lives in one of them) instead of scanning
-    // the full embeddings parquet (round 14, VERDICT-r13 #1).
+    // The persisted sidecar's fetch prunes to the UNION of probed cells
+    // (every shortlist id lives in one of them) instead of scanning the
+    // full embeddings parquet (round 14, VERDICT-r13 #1).
     val qMat = typedLit(qs.map(_._2.toSeq).toSeq)
     val qNorms = typedLit(qs.map(q => math.sqrt(dotR(q._2, 0, q._2))))
-    val withV = vecs match {
-      case Some(vf) => vf.filter(col("cell").isin(unionCells: _*))
-        .select(col("vec_id"), col("v"))
-      case None => emb.select(col("vec_id"),
-        Similarity.toDouble(col("embedding")).as("v"))
-    }
+    val withV = vecs.filter(col("cell").isin(unionCells: _*))
+      .select(col("vec_id"), col("v"))
     short.join(withV, "vec_id")
       .withColumn("cos_r", round(
         Similarity.dot(col("v"), element_at(qMat, col("qpos") + 1)) /
@@ -593,17 +597,11 @@ object AnnIndex {
     * backing (builds on first use exactly like [[servedTopK]]).
     */
   def servedBatchTopK(s: SparkSession, dir: String, queryIds: Seq[Long],
-      k: Int): DataFrame = {
-    val emb = Engine.table(s, dir, "embeddings")
-    val path = indexPath(dir)
-    builtIndexes.getOrElseUpdate(path, {
-      buildAtomically(path)(tmp => { writeIndex(emb, tmp); () })
-    })
-    val root = artifactRoot(path)
-    val model = modelMemo.getOrElseUpdate(root, readModel(s, root))
-    topKBatchFromCodes(emb, liveCodes(s, root), model,
-      queryIds, k, vecs = Some(s.read.parquet(s"$root/vecs")))
-  }
+      k: Int): DataFrame =
+    served(s, dir) { (emb, ix) =>
+      topKBatchFromCodes(emb, ix.codes, ix.vecs, ix.model, queryIds, k,
+        ix.trainedRows)
+    }
 
   /** Append NEW vectors to an existing index: assign + encode against
     * the PUBLISHED model (read back from the sidecars, so appended codes
@@ -619,12 +617,11 @@ object AnnIndex {
     // epoch-aware (round 15): resolve the CURRENT epoch root first, so a
     // frozen-model append lands in (and encodes against) the epoch that
     // is actually serving — after a retrain the next micro-batch
-    // automatically targets the new epoch, and the model memo (keyed by
+    // automatically targets the new epoch, and the serving memo (keyed by
     // the RESOLVED root, VERDICT-r14 #8) reads each epoch's sidecars
     // exactly once per JVM, not once per batch
     val root = artifactRoot(path)
-    val model = modelMemo.getOrElseUpdate(root,
-      readModel(newEmb.sparkSession, root))
+    val model = servingState(newEmb.sparkSession, root).model
     // vecs FIRST, codes SECOND — the reachability ordering: a vector is
     // only servable once its CODE row lands, so a crash between the two
     // appends leaves orphan float rows (harmless — nothing shortlists
@@ -665,9 +662,9 @@ object AnnIndex {
     * RESOLVED epoch root ([[artifactRoot]]).
     */
   private def liveCodes(spark: SparkSession, root: String): DataFrame = {
-    val codes = spark.read.parquet(s"$root/codes")
+    val codes = readArtifact(spark, root, "codes")
     if (new java.io.File(s"$root/tombstones").exists())
-      codes.join(spark.read.parquet(s"$root/tombstones"),
+      codes.join(readArtifact(spark, root, "tombstones"),
         Seq("vec_id"), "left_anti")
     else codes
   }
@@ -676,10 +673,10 @@ object AnnIndex {
     * on (the index's OWN partitions; the source table is never read).
     */
   private def liveVecs(spark: SparkSession, root: String): DataFrame = {
-    val vecs = spark.read.parquet(s"$root/vecs")
+    val vecs = readArtifact(spark, root, "vecs")
       .select(col("vec_id"), col("v").as("embedding"))
     if (new java.io.File(s"$root/tombstones").exists())
-      vecs.join(spark.read.parquet(s"$root/tombstones"),
+      vecs.join(readArtifact(spark, root, "tombstones"),
         Seq("vec_id"), "left_anti")
     else vecs
   }
@@ -700,7 +697,7 @@ object AnnIndex {
 
   def indexStats(spark: SparkSession, path: String): IndexStats = {
     val root = artifactRoot(path)
-    val model = modelMemo.getOrElseUpdate(root, readModel(spark, root))
+    val model = servingState(spark, root).model
     val row = liveCodes(spark, root).groupBy(col("cell"))
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c")), max(col("c"))).head()
@@ -709,9 +706,12 @@ object AnnIndex {
     IndexStats(model.nCells, total, mx, total.toDouble / model.nCells)
   }
 
-  /** The trained-size sidecar written by [[writeIndex]] (round 15). */
+  /** The trained-size sidecar written by [[writeIndex]] (round 15), read
+    * fresh from the current epoch (the monitor's live signal; serves use
+    * the per-epoch [[servingState]]).
+    */
   def trainedRows(spark: SparkSession, path: String): Long =
-    spark.read.parquet(s"${artifactRoot(path)}/meta").head().getLong(0)
+    readArtifact(spark, artifactRoot(path), "meta").head().getLong(0)
 
   /** Self-serving retrain verdict: [[indexStats]] vs the persisted
     * trained size — what [[retrainIndex]] and the streaming monitor
@@ -742,10 +742,10 @@ object AnnIndex {
       stats.skew > maxSkew
 
   def readModel(spark: SparkSession, path: String): IvfPqModel = {
-    val cents = spark.read.parquet(s"$path/cents").collect()
+    val cents = readArtifact(spark, path, "cents").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
-    val bookRows = spark.read.parquet(s"$path/books").collect()
+    val bookRows = readArtifact(spark, path, "books").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
       .toMap
     val m = bookRows.keys.map(_._1).max + 1
@@ -754,20 +754,21 @@ object AnnIndex {
       Array.tabulate(m, nE)((s, c) => bookRows((s, c))))
   }
 
-  /** Query the PERSISTED index: read the model sidecars, scan only the
-    * probed cells' partitions of the code table (partition pruning —
-    * pinned in LlmSpec), rerank the shortlist against the probed cells'
-    * partitions of the FLOAT sidecar (round 14 — the full-embeddings
-    * rerank scan was the last corpus-linear serve term), minus any
-    * tombstoned keys.
+  /** Query the PERSISTED index: take the model from the per-epoch
+    * serving state, scan only the probed cells' partitions of the code
+    * table (partition pruning — pinned in LlmSpec), rerank the shortlist
+    * against the probed cells' partitions of the FLOAT sidecar (round 14
+    * — the full-embeddings rerank scan was the last corpus-linear serve
+    * term), minus any tombstoned keys. `emb` only has to hold the query
+    * vector: the shortlist is sized from the index's trained size (the
+    * `meta` sidecar), never from `emb`, so a one-row query frame and the
+    * whole corpus get the same shortlist and neither is counted.
     */
   def serveTopK(spark: SparkSession, path: String, emb: DataFrame,
       queryId: Long, k: Int, nProbe: Int = 0, shortlist: Int = 0): DataFrame = {
-    val root = artifactRoot(path)
-    val model = modelMemo.getOrElseUpdate(root, readModel(spark, root))
-    topKFromCodes(emb, liveCodes(spark, root), model,
-      queryId, k, nProbe, shortlist,
-      vecs = Some(spark.read.parquet(s"$root/vecs")))
+    val ix = openIndex(spark, path)
+    topKFromCodes(emb, ix.codes, ix.model, queryId, k, nProbe, shortlist,
+      ix.trainedRows, Some(ix.vecs))
   }
 
   // ---- epoch lifecycle (round 15, VERDICT-r14 #1): retrain consumes
@@ -810,9 +811,9 @@ object AnnIndex {
     *     rows and starts with an empty tombstone set (LSM compaction);
     *  4. publish `path/epoch=<n+1>` aside, then swap the CURRENT
     *     pointer with an atomic rename — serve continuity is the
-    *     pointer read ([[artifactRoot]]); the model memo is keyed by
+    *     pointer read ([[artifactRoot]]); the serving memo is keyed by
     *     resolved root, so the new epoch's sidecars are read once and
-    *     the old epoch's memo entry simply stops being resolved;
+    *     the old epoch's entry is evicted;
     *  5. drop the old epoch's artifacts (local-fs immediate; an object
     *     store would grace-period this for in-flight readers).
     *
@@ -853,7 +854,8 @@ object AnnIndex {
       new java.io.File(path, "CURRENT").toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // reclaim the retired epoch's artifacts
+    // reclaim the retired epoch's artifacts and its serving state
+    servingMemo.remove(oldRoot)
     if (oldRoot == path)
       Seq("codes", "vecs", "cents", "books", "tombstones", "meta")
         .foreach(a => graft.util.Fs.deleteRecursively(s"$path/$a"))
@@ -872,8 +874,67 @@ object AnnIndex {
 
   private val builtIndexes =
     scala.collection.concurrent.TrieMap.empty[String, Unit]
-  private val modelMemo =
-    scala.collection.concurrent.TrieMap.empty[String, IvfPqModel]
+
+  /** What a serve needs from an epoch beyond its data files, read once
+    * per resolved epoch root per JVM: the model (`cents` + `books`) and
+    * the trained size (`meta`), which sizes the rerank shortlist.
+    */
+  private final case class ServingState(model: IvfPqModel, trainedRows: Long)
+
+  private val servingMemo =
+    scala.collection.concurrent.TrieMap.empty[String, ServingState]
+
+  /** The serving state of a RESOLVED epoch root ([[artifactRoot]]). An
+    * epoch's sidecars never change after publish, except when
+    * [[writeIndex]] rewrites a root in place, and that evicts it.
+    */
+  private def servingState(spark: SparkSession, root: String): ServingState =
+    servingMemo.getOrElseUpdate(root,
+      ServingState(readModel(spark, root), trainedRows(spark, root)))
+
+  /** Forget the serving state memoized at `path` or any epoch under it. */
+  private def evictServing(path: String): Unit =
+    servingMemo.keys.filter(k => k == path || k.startsWith(s"$path/"))
+      .foreach(servingMemo.remove)
+
+  /** Declared schema of each index artifact, exactly as Spark reads back
+    * what [[writeIndex]], [[appendToIndex]] and [[deleteFromIndex]] write
+    * (a file source reads every field nullable; `cell` is the partition
+    * column of `codes` and `vecs`). Reading through them means no read of
+    * an index runs a Parquet schema-inference job; LlmSpec pins each one
+    * against inference.
+    */
+  private[graft] val artifactSchemas: Map[String, StructType] = {
+    def st(fields: (String, DataType)*): StructType =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    val vec = ArrayType(DoubleType)
+    Map(
+      "codes" -> st("vec_id" -> LongType, "codes64" -> LongType,
+        "cell" -> IntegerType),
+      "vecs" -> st("vec_id" -> LongType, "v" -> vec, "cell" -> IntegerType),
+      "tombstones" -> st("vec_id" -> LongType),
+      "meta" -> st("trained_rows" -> LongType),
+      "cents" -> st("cent_id" -> IntegerType, "cv" -> vec),
+      "books" -> st("sub" -> IntegerType, "cent_id" -> IntegerType,
+        "cv" -> vec))
+  }
+
+  private def readArtifact(spark: SparkSession, root: String,
+      name: String): DataFrame =
+    spark.read.schema(artifactSchemas(name)).parquet(s"$root/$name")
+
+  /** One serve's view of the current epoch: its live codes, its float
+    * sidecar and its serving state.
+    */
+  private final case class ServingIndex(codes: DataFrame, vecs: DataFrame,
+      model: IvfPqModel, trainedRows: Long)
+
+  private def openIndex(spark: SparkSession, path: String): ServingIndex = {
+    val root = artifactRoot(path)
+    val st = servingState(spark, root)
+    ServingIndex(liveCodes(spark, root), readArtifact(spark, root, "vecs"),
+      st.model, st.trainedRows)
+  }
 
   /** Content-derived index path for a dataset's embeddings (the
     * pairGraphPath discipline — file metadata digest + version).
@@ -913,9 +974,8 @@ object AnnIndex {
   private[graft] def dropIndexCache(dir: String): Unit = {
     val p = indexPath(dir)
     builtIndexes.remove(p)
-    // epoch roots key the model memo as "<p>/epoch=<n>" — sweep them too
-    modelMemo.keys.filter(k => k == p || k.startsWith(s"$p/"))
-      .foreach(modelMemo.remove)
+    // epoch roots key the serving memo as "<p>/epoch=<n>" — sweep them too
+    evictServing(p)
     graft.util.Fs.deleteRecursively(p)
   }
 
@@ -969,7 +1029,20 @@ object AnnIndex {
     * Lloyd trainers per invocation and leaked a DISK_ONLY residual frame
     * each time.
     */
-  def servedTopK(s: SparkSession, dir: String, queryId: Long, k: Int): DataFrame = {
+  def servedTopK(s: SparkSession, dir: String, queryId: Long, k: Int): DataFrame =
+    served(s, dir) { (emb, ix) =>
+      topKFromCodes(emb, ix.codes, ix.model, queryId, k,
+        n = ix.trainedRows, vecs = Some(ix.vecs))
+    }
+
+  /** The serve entry shared by [[servedTopK]], [[servedMipsTopK]] and
+    * [[servedBatchTopK]]: the dataset's embeddings, its index built once
+    * per JVM (or reused from disk), and the current epoch opened for
+    * `serve`. No serve counts the corpus: the shortlist is sized from the
+    * index's trained size.
+    */
+  private def served(s: SparkSession, dir: String)(
+      serve: (DataFrame, ServingIndex) => DataFrame): DataFrame = {
     val emb = Engine.table(s, dir, "embeddings")
     val path = indexPath(dir)
     builtIndexes.getOrElseUpdate(path, {
@@ -977,9 +1050,9 @@ object AnnIndex {
       // build loses a concurrent-publish race, the surviving index was
       // trained by the other writer (float-sum order makes Lloyd runs
       // JVM-local), and serving must read the model that matches the
-      // PUBLISHED codes — serveTopK memoizes the read-back instead.
+      // PUBLISHED codes — openIndex memoizes the read-back instead.
       buildAtomically(path)(tmp => { writeIndex(emb, tmp); () })
     })
-    serveTopK(s, path, emb, queryId, k)
+    serve(emb, openIndex(s, path))
   }
 }

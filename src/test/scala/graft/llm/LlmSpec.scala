@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Counted, TestSpark}
 
 /** Behavior specs for the LLM-pipeline operators that the DuckDB oracle
   * cannot fully pin: sketch recall vs exact computations, ANN recall vs
@@ -2578,5 +2578,168 @@ class LlmSpec extends AnyFunSuite {
     assert(epoch2 === 2 && AnnIndex.currentEpoch(path).contains(2))
     assert(!new java.io.File(s"$path/epoch=1").exists())
     assert(AnnIndex.trainedRows(spark, path) === liveCount + 3)
+  }
+
+  // ---- serve fixed cost, shortlist sizing, index rewrite in place ----
+
+  /** `n` clustered 64-d vectors (24 gaussian centres, σ 0.6), seeded. */
+  private def clustered(seed: Long, n: Int, firstId: Long = 0L)
+      : Seq[(Long, Array[Float])] = {
+    val r = new java.util.SplittableRandom(seed)
+    def gauss(): Double = {
+      val u = 1.0 - r.nextDouble(); val v = r.nextDouble()
+      math.sqrt(-2 * math.log(u)) * math.cos(2 * math.Pi * v)
+    }
+    val centres = Array.fill(24)(Array.fill(64)(gauss()))
+    (0 until n).map { i =>
+      val c = centres(r.nextInt(centres.length))
+      (firstId + i, Array.tabulate(64)(d => (c(d) + 0.6 * gauss()).toFloat))
+    }
+  }
+
+  /** A local (vec_id, embedding array<float>) frame, as a caller holding
+    * query vectors in memory builds it.
+    */
+  private def vecFrame(vs: Seq[(Long, Array[Float])]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      vs.map { case (id, v) => Row(id, v.toSeq) }.asJava,
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType, containsNull = false)))))
+  }
+
+  private def recallAt10(path: String, corpus: org.apache.spark.sql.DataFrame,
+      queryIds: Seq[Long]): Seq[Double] = queryIds.map { q =>
+    val exact = Similarity.topK(corpus, q, 10).select("vec_id")
+      .collect().map(_.getLong(0)).toSet
+    val got = AnnIndex.serveTopK(spark, path, corpus, q, 10)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    exact.intersect(got).size.toDouble / exact.size
+  }
+
+  test("writeIndex over a served path evicts its serving state: the rewrite serves the new model") {
+    val path = "/tmp/graft_test_stage/ann_rewrite_index"
+    val fresh = "/tmp/graft_test_stage/ann_rewrite_fresh"
+    Seq(path, fresh).foreach(graft.util.Fs.deleteRecursively)
+    val a = vecFrame(clustered(seed = 1L, n = 500))
+    val b = vecFrame(clustered(seed = 2L, n = 500))
+    val queries = Seq(0L, 7L, 42L, 99L, 123L)
+    AnnIndex.writeIndex(a, path)
+    AnnIndex.serveTopK(spark, path, a, 0L, 10).collect()
+    // same path, new corpus: a JVM that kept A's model would probe B's
+    // cells by A's centroids and score B's codes against A's codebooks
+    AnnIndex.writeIndex(b, path)
+    AnnIndex.writeIndex(b, fresh)
+    val rewritten = recallAt10(path, b, queries)
+    val baseline = recallAt10(fresh, b, queries)
+    info(s"recall@10 rewritten path $rewritten, fresh path $baseline")
+    assert(rewritten.sum / rewritten.size >= 0.8,
+      s"rewritten index served with a stale model: $rewritten vs $baseline")
+  }
+
+  test("artifact schemas: each declared schema is what Parquet inference reads back") {
+    val path = "/tmp/graft_test_stage/ann_schema_index"
+    graft.util.Fs.deleteRecursively(path)
+    val base = emb.select(col("vec_id"), col("embedding"))
+    AnnIndex.writeIndex(base, path)
+    AnnIndex.appendToIndex(base.filter(col("vec_id") < 3)
+      .select((col("vec_id") + 400000L).as("vec_id"), col("embedding")), path)
+    AnnIndex.deleteFromIndex(spark, path, Seq(400000L))
+    assert(AnnIndex.artifactSchemas.keySet ===
+      Set("codes", "vecs", "tombstones", "meta", "cents", "books"))
+    AnnIndex.artifactSchemas.foreach { case (name, declared) =>
+      val inferred = spark.read.parquet(s"$path/$name").schema
+      assert(inferred === declared, name)
+      assert(spark.read.schema(declared).parquet(s"$path/$name").schema ===
+        declared, name)
+    }
+  }
+
+  test("serve fixed cost: a warm serveTopK with a new query compiles nothing and runs 2 jobs") {
+    val path = "/tmp/graft_test_stage/ann_serve_cost_index"
+    graft.util.Fs.deleteRecursively(path)
+    val corpus = clustered(seed = 3L, n = 500)
+    AnnIndex.writeIndex(vecFrame(corpus), path)
+    val held = clustered(seed = 4L, n = 2, firstId = 1000000001L)
+    def serve(q: (Long, Array[Float])): Seq[Long] =
+      AnnIndex.serveTopK(spark, path, vecFrame(Seq(q)), q._1, 10)
+        .collect().map(_.getLong(0)).toSeq
+    assert(serve(held(0)).size === 10)
+    val second = Counted(spark)(serve(held(1)))
+    assert(second.result.size === 10)
+    assert(second.compiles === 0L,
+      s"warm serve compiled ${second.compiles} classes")
+    assert(second.jobs === 2, s"warm serve ran ${second.jobs} jobs: " +
+      second.stageDetails.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n"))
+  }
+
+  /** The rerank shortlist a serve plan carries: its larger row limit
+    * (the other is k).
+    */
+  private def shortlistOf(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit =>
+        l.maxRows.get.toInt
+    }.max
+
+  test("serve shortlist is sized from the trained size, not the query frame; recall holds at 3x growth") {
+    val path = "/tmp/graft_test_stage/ann_shortlist_index"
+    graft.util.Fs.deleteRecursively(path)
+    val base = emb.select(col("vec_id"), col("embedding"))
+    AnnIndex.writeIndex(base, path)
+    val trained = AnnIndex.trainedRows(spark, path)
+    // k = 5: the 4·√n headroom term (90 at 500 rows) is above the 10·k
+    // floor (50), so a shortlist sized from a one-row frame shows
+    val want = AnnIndex.adcShortlistFor(5, trained)
+    assert(want > 50)
+    val one = base.filter(col("vec_id") === 7L)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    assert(shortlistOf(AnnIndex.serveTopK(spark, path, vecFrame(one), 7L, 5)) === want)
+    assert(shortlistOf(AnnIndex.serveTopK(spark, path, base, 7L, 5)) === want)
+    // grow the index to 3x its trained size with jittered copies: below
+    // the 4x grow trigger the shortlist stays at the trained size's
+    var live = base
+    (1 to 2).foreach { round =>
+      val add = base.select((col("vec_id") + round * 20000000L).as("vec_id"),
+        transform(col("embedding"), (x, i) =>
+          (x + sin(i * lit(round) + col("vec_id")) * lit(0.05))
+            .cast(org.apache.spark.sql.types.FloatType)).as("embedding"))
+      AnnIndex.appendToIndex(add, path)
+      live = live.unionByName(add)
+    }
+    assert(AnnIndex.indexStats(spark, path).liveRows === 3 * trained)
+    assert(!AnnIndex.needsRetrainAt(spark, path))
+    assert(shortlistOf(AnnIndex.serveTopK(spark, path, live, 7L, 10)) ===
+      AnnIndex.adcShortlistFor(10, trained))
+    val recalls = recallAt10(path, live, Seq(0L, 7L, 42L, 20000099L, 40000123L))
+    info(s"recall@10 at 3x growth: $recalls")
+    assert(recalls.sum / recalls.size >= 0.8, s"recall fell at 3x growth: $recalls")
+  }
+
+  test("index reads run no Parquet schema-inference job: serve, monitor trigger, retrain read") {
+    val path = "/tmp/graft_test_stage/ann_inference_index"
+    graft.util.Fs.deleteRecursively(path)
+    val base = emb.select(col("vec_id"), col("embedding"))
+    AnnIndex.writeIndex(base, path)
+    AnnIndex.deleteFromIndex(spark, path, Seq(3L))
+    // a job launched from inside DataFrameReader (its call site's first
+    // frame) is the read's own: with no declared schema, the Parquet
+    // footer merge that infers one
+    def inference(r: Counted.Run[_]): Seq[String] =
+      r.stageDetails.filter(_.linesIterator.next().contains("DataFrameReader."))
+    // the detector sees an inferred read
+    assert(inference(Counted(spark)(spark.read.parquet(s"$path/meta"))).size === 1)
+    val monitor = Counted(spark)(graft.streaming.Streams
+      .indexMonitorBatchHandler(path)(base.limit(1), 0L))
+    assert(inference(monitor).isEmpty, inference(monitor).mkString("\n"))
+    val serve = Counted(spark)(
+      AnnIndex.serveTopK(spark, path, base, 0L, 10).collect())
+    assert(inference(serve).isEmpty, inference(serve).mkString("\n"))
+    val retrain = Counted(spark)(AnnIndex.retrainIndex(spark, path))
+    assert(retrain.result === 1)
+    assert(inference(retrain).isEmpty, inference(retrain).mkString("\n"))
   }
 }
