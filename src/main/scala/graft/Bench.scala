@@ -1,5 +1,5 @@
 package graft
-import graft.llm.{AnnIndex, Components}
+import graft.llm.IndexStore
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,8 +67,7 @@ object Bench {
     // in /tmp would otherwise hide their build cost. Dropping them here
     // makes value_first always include the first consumer's build; pass 2
     // measures the warm reads.
-    Components.dropPairGraphCache(sfDir)
-    AnnIndex.dropIndexCache(sfDir)
+    IndexStore.drop(sfDir)
     val pass1 = onePass("pass1")
     val pass2 = onePass("pass2")
     // (min, pass1 time, spread = slower/faster across the two passes).

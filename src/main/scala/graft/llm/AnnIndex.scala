@@ -863,23 +863,18 @@ object AnnIndex {
     nextEpoch
   }
 
-  // ---- per-dataset memoized index (the Components.simhashPairs
-  // discipline): content-derived path, atomic publish, per-JVM memo ----
-
   /** Bump when anything in the layout or training pipeline changes
-    * (packing, grid derivation, codebook trainer) so a code change never
-    * reads a stale index built by an older JVM.
+    * (packing, grid derivation, codebook trainer): the version is part of
+    * the [[IndexStore]] key, so a code change never reads a stale index
+    * built by an older JVM.
     */
-  private val annIndexVersion = 3
-
-  private val builtIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
+  private[llm] val annIndexVersion = 3
 
   /** What a serve needs from an epoch beyond its data files, read once
     * per resolved epoch root per JVM: the model (`cents` + `books`) and
     * the trained size (`meta`), which sizes the rerank shortlist.
     */
-  private final case class ServingState(model: IvfPqModel, trainedRows: Long)
+  private[graft] final case class ServingState(model: IvfPqModel, trainedRows: Long)
 
   private val servingMemo =
     scala.collection.concurrent.TrieMap.empty[String, ServingState]
@@ -888,12 +883,12 @@ object AnnIndex {
     * epoch's sidecars never change after publish, except when
     * [[writeIndex]] rewrites a root in place, and that evicts it.
     */
-  private def servingState(spark: SparkSession, root: String): ServingState =
+  private[graft] def servingState(spark: SparkSession, root: String): ServingState =
     servingMemo.getOrElseUpdate(root,
       ServingState(readModel(spark, root), trainedRows(spark, root)))
 
   /** Forget the serving state memoized at `path` or any epoch under it. */
-  private def evictServing(path: String): Unit =
+  private[llm] def evictServing(path: String): Unit =
     servingMemo.keys.filter(k => k == path || k.startsWith(s"$path/"))
       .foreach(servingMemo.remove)
 
@@ -921,7 +916,7 @@ object AnnIndex {
 
   private def readArtifact(spark: SparkSession, root: String,
       name: String): DataFrame =
-    spark.read.schema(artifactSchemas(name)).parquet(s"$root/$name")
+    IndexStore.read(spark, artifactSchemas(name), s"$root/$name")
 
   /** One serve's view of the current epoch: its live codes, its float
     * sidecar and its serving state.
@@ -934,91 +929,6 @@ object AnnIndex {
     val st = servingState(spark, root)
     ServingIndex(liveCodes(spark, root), readArtifact(spark, root, "vecs"),
       st.model, st.trainedRows)
-  }
-
-  /** Content-derived index path for a dataset's embeddings (the
-    * pairGraphPath discipline — file metadata digest + version).
-    * Round 14 (ADVICE-r13): the walk is RECURSIVE with dataset-relative
-    * paths (a partitioned layout's changes live in nested dirs the old
-    * top-level listing never saw), `listFiles` is null-guarded (an
-    * unreadable dir NPE'd), and the digest carries leaf count + total
-    * length + max mtime as an aggregate signal on top of the per-file
-    * triples, so a regenerated dataset with coincidentally matching
-    * top-level metadata cannot silently serve a stale /tmp index.
-    */
-  private[graft] def indexPath(dir: String): String = {
-    val root = new java.io.File(dir, "embeddings.parquet")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-          .sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val files = walk(root)
-    val rootPath = root.getAbsolutePath
-    val totalLen = files.map(_.length).sum
-    val maxMtime = if (files.isEmpty) 0L else files.map(_.lastModified).max
-    val meta = files
-      .map(f => s"${f.getAbsolutePath.stripPrefix(rootPath)}:${f.length}:${f.lastModified}")
-      .mkString(
-        s"v$annIndexVersion|$rootPath|n=${files.size}|len=$totalLen|mt=$maxMtime|",
-        "|", "")
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(meta.getBytes("UTF-8"))
-    val hex = md.map(b => f"$b%02x").mkString.take(16)
-    s"/tmp/graft_ann_index_$hex"
-  }
-
-  /** Test hook + hygiene: forget this JVM's memo and delete the given
-    * dataset's index dir.
-    */
-  private[graft] def dropIndexCache(dir: String): Unit = {
-    val p = indexPath(dir)
-    builtIndexes.remove(p)
-    // epoch roots key the serving memo as "<p>/epoch=<n>" — sweep them too
-    evictServing(p)
-    graft.util.Fs.deleteRecursively(p)
-  }
-
-  /** Build `path` atomically (the Components.buildIndexAtomically
-    * discipline, with an explicit top-level `_SUCCESS` marker because the
-    * index is a directory of THREE parquet dirs): build aside into a UUID
-    * tmp dir, mark, rename; losers of a concurrent race fail the rename
-    * and delete their tmp.
-    */
-  private def buildAtomically(path: String)(build: String => Unit): Unit = {
-    if (new java.io.File(path, "_SUCCESS").exists()) return
-    // hygiene sweep (ADVICE-r13): a crashed build leaks its UUID tmp dir
-    // forever — remove stale siblings, but only ones older than an hour
-    // so a CONCURRENT builder's live tmp is never swept out from under it
-    val parent = new java.io.File(path).getParentFile
-    val base = new java.io.File(path).getName
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
-    Option(parent.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.getName.startsWith(s"$base.tmp-") && f.lastModified < cutoff)
-        graft.util.Fs.deleteRecursively(f.getAbsolutePath)
-    }
-    def attempt(): Boolean = {
-      val tmp = s"$path.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-      build(tmp)
-      require(new java.io.File(tmp, "_SUCCESS").createNewFile() ||
-        new java.io.File(tmp, "_SUCCESS").exists(),
-        s"could not mark $tmp complete")
-      val ok = new java.io.File(tmp).renameTo(new java.io.File(path))
-      if (!ok) graft.util.Fs.deleteRecursively(tmp)
-      ok || new java.io.File(path, "_SUCCESS").exists()
-    }
-    if (!attempt()) {
-      // rename failed and the occupant has no _SUCCESS: an incomplete
-      // publish (e.g. a tmp cleaner pruned the marker, or a crashed
-      // half-rename). Self-heal ONCE — delete the wreck and retry —
-      // instead of permanently failing every subsequent build
-      // (ADVICE-r13).
-      graft.util.Fs.deleteRecursively(path)
-      if (!attempt())
-        throw new IllegalStateException(
-          s"ann-index publish failed twice: $path exists but is " +
-            "incomplete; remove it and retry")
-    }
   }
 
   /** The memoized per-(JVM, dataset) serve entry — q_sim_ivfpq's backing:
@@ -1044,15 +954,14 @@ object AnnIndex {
   private def served(s: SparkSession, dir: String)(
       serve: (DataFrame, ServingIndex) => DataFrame): DataFrame = {
     val emb = Engine.table(s, dir, "embeddings")
-    val path = indexPath(dir)
-    builtIndexes.getOrElseUpdate(path, {
-      // deliberately NOT memoizing the model the build trained: if this
-      // build loses a concurrent-publish race, the surviving index was
-      // trained by the other writer (float-sum order makes Lloyd runs
-      // JVM-local), and serving must read the model that matches the
-      // PUBLISHED codes — openIndex memoizes the read-back instead.
-      buildAtomically(path)(tmp => { writeIndex(emb, tmp); () })
-    })
+    // deliberately NOT memoizing the model the build trained: if this
+    // build loses a concurrent-publish race, the surviving index was
+    // trained by the other writer (float-sum order makes Lloyd runs
+    // JVM-local), and serving must read the model that matches the
+    // PUBLISHED codes — openIndex memoizes the read-back instead.
+    val path = IndexStore.publish(IndexStore.Ann, dir, "ivfpq") { tmp =>
+      writeIndex(emb, tmp)
+    }
     serve(emb, openIndex(s, path))
   }
 }

@@ -15,19 +15,18 @@ import graft.{Engine, Q}
   * Not in the reference (`/root/reference/pandas_redshift/core.py` has no
   * relational operators at all) — `EXT` like the rest of the dedup family.
   *
-  * Two algorithms, both free of any all-pairs shape (see the method docs):
-  * alternating large-star/small-star edge contraction (default;
-  * polylog worst-case rounds INDEPENDENT of graph diameter — Kiveris et
-  * al. prove O(log² n), observed ~6 on the sf0.1/sf1.0 near-dup graphs
-  * whose chain shape forces propagation through 18+ rounds) and
-  * min-label propagation with pointer jumping (fallback,
-  * `GRAFT_CC_ALGO=jump`).
+  * The algorithm is alternating large-star/small-star edge contraction,
+  * free of any all-pairs shape: polylog worst-case rounds INDEPENDENT of
+  * graph diameter (Kiveris et al. prove O(log² n), observed ~6 on the
+  * sf0.1/sf1.0 near-dup graphs whose chain shape forces min-label
+  * propagation through 18+ rounds; the propagation variant lives in test
+  * scope as the specs' differential reference).
   *
   * Scale notes:
   *  - Per-round lineage is re-rooted over persisted RDDs and the edge
   *    list is materialized once (details on
-  *    [[connectedComponentsStars]] / [[connectedComponentsJump]]) — the
-  *    loop is O(1) driver cost per round.
+  *    [[connectedComponentsStars]]) — the loop is O(1) driver cost per
+  *    round.
   *  - Loop shuffles are sized to the GRAPH (~100k edges/partition, AQE
   *    off inside the loop, shared [[withGraphLoopConf]] scaffolding):
   *    an iterative algorithm over a small derived
@@ -36,32 +35,19 @@ import graft.{Engine, Q}
   *    time at sf0.1).
   *  - The maxIters guard fails loudly rather than returning a
   *    half-propagated labeling; 25 rounds sits far above the observed
-  *    ~6-round contraction convergence (and covers 2^25-diameter graphs
-  *    for the jump variant).
+  *    ~6-round contraction convergence.
   */
 object Components {
 
   /** Connected components over an undirected edge list `(d1, d2)`.
     * Returns `(id, label)` for every vertex incident to at least one edge,
-    * where `label` = the smallest vertex id in the component.
-    *
-    * Dispatches between two implementations (env `GRAFT_CC_ALGO`):
-    * alternating large-star/small-star edge contraction (`stars`, the
-    * default — polylog rounds regardless of diameter) and min-label
-    * propagation with pointer jumping (`jump` — O(log diameter) in tree
-    * depth but diameter-bound on residual chains; kept as the measured
-    * fallback and for A/B tracing). Any other value fails loudly — a
-    * typo silently running the wrong variant would poison an A/B trace.
+    * where `label` = the smallest vertex id in the component, by
+    * large-star/small-star contraction ([[connectedComponentsStars]]).
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 25): DataFrame =
-    sys.env.getOrElse("GRAFT_CC_ALGO", "stars") match {
-      case "jump"  => connectedComponentsJump(edges, maxIters)
-      case "stars" => connectedComponentsStars(edges, maxIters)
-      case other => throw new IllegalArgumentException(
-        s"GRAFT_CC_ALGO must be 'stars' or 'jump'; got '$other'")
-    }
+    connectedComponentsStars(edges, maxIters)
 
-  /** Shared iterative-loop scaffolding for both CC variants: size the
+  /** Shared iterative-loop scaffolding for the graph loops: size the
     * loop's shuffle partitions to the derived graph (~100k rows per
     * partition — a 100 TB pair graph stays fully parallel, a small graph
     * runs in a handful of tasks) and disable AQE inside the eager loop
@@ -90,7 +76,7 @@ object Components {
   @volatile private[graft] var ccRoundObserver
       : Option[(DataFrame, Int) => Unit] = None
 
-  private def withGraphLoopConf[T](spark: SparkSession, graphRows: Long)(
+  private[graft] def withGraphLoopConf[T](spark: SparkSession, graphRows: Long)(
       body: (SparkSession, Int) => T): T = {
     val nPart = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (graphRows / 100000L).toInt + 1))
@@ -123,8 +109,8 @@ object Components {
     *
     * Scale shape: every round is 2 groupBy-min + 2 equi-joins + distinct
     * over the EDGE set (which only shrinks as stars form) — never a
-    * corpus-sized shuffle, never all-pairs. Same iterative-loop
-    * disciplines as the jump variant: edge RDD re-rooted per round via
+    * corpus-sized shuffle, never all-pairs. Iterative-loop disciplines:
+    * edge RDD re-rooted per round via
     * `createDataFrame(rdd, schema)`, graph-sized shuffle partitions,
     * AQE off inside the loop, loud non-convergence failure.
     */
@@ -153,7 +139,7 @@ object Components {
       return emptyLabels
     }
     // self-loop vertices are incident to an edge (the contract labels
-    // them, and the jump variant does) but VANISH under star contraction
+    // them) but VANISH under star contraction
     // — split them out and self-label at the end. The common case (pair
     // generators emit strict d1 < d2) pays only one count over cached
     // blocks and skips the split entirely.
@@ -205,9 +191,6 @@ object Components {
         cur = next
         curCount = nextCount
         it += 1
-        if (sys.env.contains("GRAFT_CC_TRACE"))
-          System.err.println(s"[cc-stars] round $it edges=$curCount " +
-            s"done=$done t=${System.nanoTime() / 1000000}ms")
       }
       if (!done) {
         // release every block this call pinned — allRdd (kept for the
@@ -219,8 +202,7 @@ object Components {
         allRdd.unpersist()
         throw new IllegalArgumentException(
           s"connected components did not converge in $maxIters rounds — " +
-            "star contraction found no fixed point (pathological edge " +
-            "set?); inspect with GRAFT_CC_TRACE")
+            "star contraction found no fixed point (pathological edge set?)")
       }
       curRdd
       }
@@ -243,127 +225,6 @@ object Components {
     }
   }
 
-  /** Min-label propagation with pointer jumping over an undirected edge
-    * list `(d1, d2)` — the pre-round-6 default, kept selectable via
-    * `GRAFT_CC_ALGO=jump`.
-    *
-    * Two iterative-algorithm disciplines keep rounds O(1) in driver cost
-    * (first learned the hard way: without them the loop OOMs the driver
-    * long before the executors feel anything):
-    *  - the edge list is persisted ONCE — otherwise every round's action
-    *    re-runs the whole upstream candidate pipeline (the banded SimHash
-    *    join, for q_dedup_cc) from the source scan;
-    *  - each round's labels are re-rooted as a `LogicalRDD` over a
-    *    persisted RDD (`createDataFrame(rdd, schema)`). A DataFrame
-    *    persist caches DATA but not the LOGICAL plan — chaining rounds
-    *    directly nests join/union/agg plans one level deeper per round,
-    *    and Catalyst re-analyzes the whole history every round (the same
-    *    reason GraphX's Pregel periodically materializes). The RDD chain
-    *    keeps recompute-on-loss lineage (previous round's blocks, then
-    *    their ancestors), the same fault-tolerance story as DISK_ONLY
-    *    persist everywhere else.
-    */
-  def connectedComponentsJump(edges: DataFrame, maxIters: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
-    val symSrc = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-    val symSchema = symSrc.schema
-    val symRdd = symSrc.rdd.persist(StorageLevel.DISK_ONLY)
-    // Size the loop's shuffles to the graph, not the session default:
-    // withGraphLoopConf sizes the loop's shuffles to the 2× symmetric
-    // edge count — on an isolated child session, so the parent's confs
-    // are never touched
-    val finalRdd = withGraphLoopConf(spark, symRdd.count()) { (loop, _) =>
-    val sym = loop.createDataFrame(symRdd, symSchema)
-    val seed = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    val schema = seed.schema
-    var labelsRdd = seed.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = loop.createDataFrame(labelsRdd, schema)
-    var changed = 1L
-    var prevSum: java.math.BigDecimal = null
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      // propagate: take the min of own and neighbors' labels — merges
-      // adjacent label trees, but alone needs diameter rounds (a chain
-      // of pairwise near-dups at sf0.1 exceeds any fixed budget)
-      val neighborLabels = sym
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .select(col("src").as("id"), col("label"))
-      val propRdd = labels.select("id", "label").union(neighborLabels)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val prop = loop.createDataFrame(propRdd, schema)
-      // shortcut (pointer jumping): label ← label(label). Every label IS
-      // a vertex id, so a self-join follows the pointer a hop; paths
-      // compress geometrically and the propagate/shortcut alternation
-      // converges in O(log diameter) rounds (the star-contraction idea
-      // of Kiveris et al., SOCC'14, as DataFrame ops). Measured at
-      // sf0.1: jumping from the STALE pre-propagate labels is ~30%
-      // slower (more rounds), a second jump per round is ~35% slower
-      // (plan duplication outweighs the round savings) — one fresh jump
-      // is the operating point.
-      // Round-4 measurement (GRAFT_CC_TRACE): a SECOND materialized jump
-      // per round left the round count at exactly 18 and ran 1.5 s
-      // slower — the convergence tail is min-PROPAGATION along residual
-      // chains (a new minimum still travels one edge-join hop per round),
-      // not pointer-tree depth, so extra jumps have nothing to compress.
-      // Cutting the tail needs edge-rewiring contraction
-      // (large-star/small-star), which rewrites the edge set per round —
-      // landed in round 6 as [[connectedComponentsStars]] (6 rounds vs
-      // 18, ~1.8× faster); this variant stays as the measured fallback.
-      val nextRdd = prop
-        .join(prop.select(col("id").as("label"), col("label").as("label2")),
-          Seq("label"), "left")
-        .select(col("id"), coalesce(col("label2"), col("label")).as("label"))
-        .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val next = loop.createDataFrame(nextRdd, schema)
-      // convergence via the monotone label sum: labels only ever
-      // decrease, so sum(label) strictly decreases iff any vertex
-      // changed — one scan of the (persisted) next round, no join with
-      // the previous labels. Decimal(38) keeps the sum exact for any
-      // realistic id range × vertex count; this agg is also the action
-      // materializing nextRdd's blocks.
-      val sumNext = next
-        .agg(sum(col("label").cast(DecimalType(38, 0))).as("s"))
-        .head().getDecimal(0)
-      // sum over ZERO rows is null: an empty edge list (no near-dup
-      // pairs at all) is converged-by-vacuity, not a diameter problem
-      changed =
-        if (sumNext == null) 0L
-        else if (prevSum == null || sumNext.compareTo(prevSum) < 0) 1L
-        else 0L
-      prevSum = sumNext
-      labelsRdd.unpersist()
-      propRdd.unpersist()
-      labelsRdd = nextRdd
-      labels = next
-      it += 1
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"[cc] round $it sum=$prevSum changed=$changed " +
-          s"t=${System.nanoTime() / 1000000}ms")
-    }
-    symRdd.unpersist()
-    if (changed != 0) {
-      // don't leak the final round's blocks on the failure path (the
-      // converged labels RDD stays persisted for the caller and is
-      // reclaimed by the ContextCleaner once unreferenced)
-      labelsRdd.unpersist()
-      throw new IllegalArgumentException(
-        s"connected components did not converge in $maxIters rounds — " +
-          "graph diameter exceeds the propagation budget; switch to " +
-          "large-star/small-star for chain-shaped graphs")
-    }
-    labelsRdd
-    }
-    // re-root the converged labels on the parent session (see
-    // withGraphLoopConf — downstream consumers plan under defaults)
-    spark.createDataFrame(finalRdd,
-      StructType(Seq(
-        StructField("id", symSchema("src").dataType),
-        StructField("label", symSchema("src").dataType))))
-  }
-
   /** Fixed-iteration integer-exact PageRank over an undirected edge list
     * `(d1, d2)` plus a vertex frame `(doc_id)` — the centrality score a
     * curation pipeline uses to weight documents by how referenced they
@@ -379,7 +240,7 @@ object Components {
     * keep teleport-only mass (their leaked share is not redistributed —
     * deliberate, mirrored on both engines, and irrelevant to ranking).
     *
-    * Scale shape: same iterative discipline as the CC variants — the
+    * Scale shape: same iterative discipline as the CC loop — the
     * symmetric edge RDD and degree RDD are persisted ONCE, each round is
     * two equi-joins + one map-side-combinable sum re-rooted via
     * `createDataFrame(rdd, schema)` on the [[withGraphLoopConf]] child
@@ -571,74 +432,40 @@ object Components {
 
   /** Bump when EITHER signature pipeline's semantics change (shingle
     * config, SimHash/MinHash signature derivation, banding, hamming
-    * radius) — one version covers every artifact suffix (`""`/`_cc`/
-    * `_mh`/`_mhc`), and versioning the index path is what lets a code
-    * change never read a stale index built by an older JVM.
-    */
-  private val pairIndexVersion = 2
-
-  /** Content-derived index path for a dataset's pair graph: a digest of
-    * the documents.parquet FILE METADATA (sorted name/length/mtime — the
-    * same signal Spark's own file-index caching keys on; regeneration in
-    * place changes mtimes, so a rewritten /tmp/sf1.0 never aliases) plus
-    * the pipeline version. Deterministic across JVMs, so repeated
-    * processes REUSE one index dir instead of orphaning a UUID dir each
-    * (the round-8 hygiene finding). SimHash bits/hamming need no
-    * explicit digest input: bits is a pure function of the doc count
+    * radius) — one version covers every pair-family artifact, and the
+    * version is part of the [[IndexStore]] key, so a code change never
+    * reads a stale index built by an older JVM. SimHash bits/hamming need
+    * no key input of their own: bits is a pure function of the doc count
     * (itself file-metadata-determined) and the radius is versioned code.
     */
-  private[graft] def pairGraphPath(dir: String): String = {
-    val root = new java.io.File(dir, "documents.parquet")
-    val files: Seq[java.io.File] =
-      if (root.isDirectory) root.listFiles().toSeq.sortBy(_.getName)
-      else Seq(root)
-    val meta = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(s"v$pairIndexVersion|${root.getAbsolutePath}|", "|", "")
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(meta.getBytes("UTF-8"))
-    val hex = md.map(b => f"$b%02x").mkString.take(16)
-    s"/tmp/graft_pair_index_$hex"
-  }
+  private[llm] val pairIndexVersion = 2
 
-  /** Build `path` atomically from `build` (which must write a parquet
-    * dir at the path it is given): writers build aside into a UUID tmp
-    * dir, then rename onto `path` — the losers of a concurrent race fail
-    * the rename (POSIX refuses to replace a non-empty dir) and delete
-    * their tmp, so exactly one index survives and no orphans accumulate.
-    * An existing complete index (`_SUCCESS` present) is reused as-is.
+  /** Declared schema of each pair-family artifact, exactly as Spark reads
+    * back what its builder writes (a file source reads every field
+    * nullable). Reading through them means no consumer read runs a
+    * Parquet schema-inference job; ComponentsSpec pins each one against
+    * inference.
     */
-  private def buildIndexAtomically(path: String)(build: String => Unit): Unit = {
-    if (new java.io.File(path, "_SUCCESS").exists()) return
-    val tmp = s"$path.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-    build(tmp)
-    val ok = new java.io.File(tmp).renameTo(new java.io.File(path))
-    if (!ok) {
-      graft.util.Fs.deleteRecursively(tmp)
-      // lost the race (or a stale half-built dir blocks the rename): a
-      // complete index must now exist — anything else is a real error
-      if (!new java.io.File(path, "_SUCCESS").exists())
-        throw new IllegalStateException(
-          s"pair-index publish failed: $path exists but is incomplete; " +
-            "remove it and retry")
-    }
+  private[graft] val pairArtifactSchemas: Map[String, StructType] = {
+    def longs(names: String*): StructType =
+      StructType(names.map(StructField(_, LongType)))
+    Map(
+      "pairs" -> longs("d1", "d2", "hamming"),
+      "cc" -> longs("id", "label"),
+      "mh" -> StructType(StructField("doc_id", LongType) +:
+        Dedup.minhashSeeds.indices.map(i => StructField(s"h$i", StringType))),
+      "mhc" -> longs("d1", "d2"),
+      "jpc" -> longs("d1", "d2", "n1", "n2", "inter"))
   }
 
-  /** Test hook + hygiene: forget this JVM's memo and delete the given
-    * dataset's index dirs (pair graph + labels).
+  /** Pair-family artifact `name` over the dataset at `dir`: published
+    * once through the [[IndexStore]] by `build`, read back with its
+    * declared schema.
     */
-  private[graft] def dropPairGraphCache(dir: String): Unit = {
-    val p = pairGraphPath(dir)
-    Seq(p, s"${p}_cc", s"${p}_mh", s"${p}_mhc", s"${p}_jpc").foreach { d =>
-      builtIndexes.remove(d)
-      graft.util.Fs.deleteRecursively(d)
-    }
-  }
-
-  // per-JVM memo of index paths already verified/built — avoids a
-  // filesystem existence check per consumer call, nothing more (the
-  // path itself is deterministic; cross-JVM reuse goes through _SUCCESS)
-  private val builtIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
+  private def pairArtifact(s: SparkSession, dir: String, name: String)(
+      build: String => Unit): DataFrame =
+    IndexStore.read(s, pairArtifactSchemas(name),
+      IndexStore.publish(IndexStore.Pair, dir, name)(build))
 
   /** The shared pair graph, materialized ONCE per dataset and read back
     * by every graph-family consumer — the writeIvfIndex pattern applied
@@ -654,23 +481,17 @@ object Components {
     * self-contained — the first consumer in a JVM pays the build, like
     * any index. At 100 TB this is exactly the production shape: build
     * the near-dup index once, run detection / closure / centrality /
-    * selection against it. Since round 9 the path is content-derived
-    * ([[pairGraphPath]]) so repeated JVMs over one dataset share one
-    * index dir instead of orphaning one each.
+    * selection against it. The [[IndexStore]] keys it by the dataset's
+    * content, so repeated JVMs over one dataset share one index dir.
     */
-  private[graft] def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = pairGraphPath(dir)
-    builtIndexes.getOrElseUpdate(path, {
-      buildIndexAtomically(path) { tmp =>
-        Dedup.writePairGraph(Engine.table(s, dir, "documents"), tmp)
-      }
-    })
-    s.read.parquet(path).select(col("d1"), col("d2"))
-  }
+  private[graft] def simhashPairs(s: SparkSession, dir: String): DataFrame =
+    pairArtifact(s, dir, "pairs") { tmp =>
+      Dedup.writePairGraph(Engine.table(s, dir, "documents"), tmp)
+    }.select(col("d1"), col("d2"))
 
   /** The transitive-closure LABELING over the shared pair graph,
-    * materialized once per dataset beside the pair index (`_cc` suffix —
-    * same content-derived digest, so it can never pair with the wrong
+    * materialized once per dataset beside the pair graph (artifact `cc`
+    * in the same [[IndexStore]] home, so it can never pair with the wrong
     * edge set). Round-8 verdict follow-up: q_dedup_cc,
     * q_dedup_keep_best, and q_dedup_cluster_sizes each re-ran the
     * star-contraction loop on the shared pairs — three loops where one
@@ -686,21 +507,15 @@ object Components {
     * vertex incident to an edge, exactly [[connectedComponents]]'
     * contract.
     */
-  private[graft] def simhashLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${pairGraphPath(dir)}_cc"
-    builtIndexes.getOrElseUpdate(path, {
-      buildIndexAtomically(path) { tmp =>
-        connectedComponents(simhashPairs(s, dir))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    })
-    s.read.parquet(path).select(col("id"), col("label"))
-  }
+  private[graft] def simhashLabels(s: SparkSession, dir: String): DataFrame =
+    pairArtifact(s, dir, "cc") { tmp =>
+      connectedComponents(simhashPairs(s, dir))
+        .write.mode("overwrite").parquet(tmp)
+    }
 
   /** The MinHash SIGNATURE table `(doc_id, h0..h5)`, materialized once
-    * per dataset beside the pair index (`_mh` suffix, same content-derived
-    * digest + version — [[pairGraphPath]] versions BOTH signature
-    * pipelines). Round-9 verdict top item: q_dedup_sig / minhash /
+    * per dataset beside the pair graph (artifact `mh`; one
+    * [[pairIndexVersion]] versions BOTH signature pipelines). Round-9 verdict top item: q_dedup_sig / minhash /
     * fuzzy / agreement / incremental / q_minhash_est / q_lsh_occupancy
     * each re-ran the fused tokenize+shingle+6-seeded-md5-minima corpus
     * pass — the one expensive stage every MinHash consumer shares. The
@@ -710,39 +525,27 @@ object Components {
     * once, band/probe everywhere. Measured in round 10 (DESIGN.md
     * "MinHash sig+candidate materialize-once").
     */
-  private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${pairGraphPath(dir)}_mh"
-    builtIndexes.getOrElseUpdate(path, {
-      buildIndexAtomically(path) { tmp =>
-        Dedup.minhashSignaturesStateless(Engine.table(s, dir, "documents"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    })
-    s.read.parquet(path)
-      .select(col("doc_id") +:
-        Dedup.minhashSeeds.indices.map(i => col(s"h$i")): _*)
-  }
+  private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame =
+    pairArtifact(s, dir, "mh") { tmp =>
+      Dedup.minhashSignaturesStateless(Engine.table(s, dir, "documents"))
+        .write.mode("overwrite").parquet(tmp)
+    }
 
   /** The banded MinHash CANDIDATE pair set `(d1, d2)` (d1 < d2, distinct),
-    * materialized once per dataset (`_mhc` suffix) — the MinHash analog of
+    * materialized once per dataset (artifact `mhc`) — the MinHash analog of
     * [[simhashPairs]]: the band self-join runs once, and every verifier
     * (exact Jaccard, Levenshtein, agreement algebra) probes the edge-sized
     * pair list. Derived FROM [[minhashSigs]], so the first consumer in a
     * JVM builds both artifacts in one pass chain.
     */
-  private[graft] def minhashCands(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${pairGraphPath(dir)}_mhc"
-    builtIndexes.getOrElseUpdate(path, {
-      buildIndexAtomically(path) { tmp =>
-        Dedup.lshCandidates(minhashSigs(s, dir))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    })
-    s.read.parquet(path).select(col("d1"), col("d2"))
-  }
+  private[graft] def minhashCands(s: SparkSession, dir: String): DataFrame =
+    pairArtifact(s, dir, "mhc") { tmp =>
+      Dedup.lshCandidates(minhashSigs(s, dir))
+        .write.mode("overwrite").parquet(tmp)
+    }
 
   /** The df-capped jaccard-SCORED pair index `(d1, d2, n1, n2, inter)`
-    * (d1 < d2), materialized once per dataset (`_jpc` suffix) — round 16,
+    * (d1 < d2), materialized once per dataset (artifact `jpc`) — round 16,
     * VERDICT-r15 #5: q_dedup_near and q_dedup_containment each re-ran the
     * full [[graft.llm.Dedup.jaccardPairsCapped]] pipeline (inverted-index
     * rare-pair generation + hot-shingle recovery + two size joins) on the
@@ -756,19 +559,13 @@ object Components {
     * policy (jaccard threshold, containment threshold, agreement audits)
     * read the scored index.
     */
-  private[graft] def jaccardPairIndex(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${pairGraphPath(dir)}_jpc"
-    builtIndexes.getOrElseUpdate(path, {
-      buildIndexAtomically(path) { tmp =>
-        Dedup.jaccardPairsCapped(
-            Dedup.shingles(Engine.table(s, dir, "documents")), maxDf = 50)
-          .select(col("d1"), col("d2"), col("n1"), col("n2"), col("inter"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    })
-    s.read.parquet(path)
-      .select(col("d1"), col("d2"), col("n1"), col("n2"), col("inter"))
-  }
+  private[graft] def jaccardPairIndex(s: SparkSession, dir: String): DataFrame =
+    pairArtifact(s, dir, "jpc") { tmp =>
+      Dedup.jaccardPairsCapped(
+          Dedup.shingles(Engine.table(s, dir, "documents")), maxDf = 50)
+        .select(col("d1"), col("d2"), col("n1"), col("n2"), col("inter"))
+        .write.mode("overwrite").parquet(tmp)
+    }
 
   /** 2-core of an undirected edge list: iteratively peel every vertex of
     * degree < 2 (with its edges) until none remains — the unique maximal
@@ -784,7 +581,7 @@ object Components {
     * oracle parity needs no round mirroring — only enough unrolled oracle
     * rounds to reach the fixpoint. Scale shape: every round is one
     * edge-sized degree agg + two semi-joins, and the edge set only
-    * shrinks; same loop disciplines as the CC variants (per-round RDD
+    * shrinks; same loop disciplines as the CC loop (per-round RDD
     * re-rooting, graph-sized shuffle partitions on a child session, AQE
     * off, loud non-convergence). Convergence test is just an edge-count
     * compare — the peel is monotone (next ⊆ cur), so equal count ⇔ equal
@@ -917,10 +714,6 @@ object Components {
           cur = nextDf
           curCount = nextCount
           it += 1
-          if (sys.env.contains("GRAFT_CC_TRACE"))
-            System.err.println(s"[2core] round $it edges=$nextCount " +
-              s"mode=${if (it <= twoCoreCheapRounds) "peel" else "collapse"} " +
-              s"t=${System.nanoTime() / 1000000}ms")
         }
       }
       if (!done) {

@@ -409,8 +409,16 @@ object Dedup {
     bandIndex(corpus).repartition(col("band_id")).write.mode("overwrite")
       .partitionBy("band_id").parquet(s"$path/bands")
 
+  /** Declared schema of the persisted band index (`band_id` is its
+    * partition column): a probe or append reads it through the
+    * [[IndexStore]] with no Parquet schema-inference job.
+    */
+  private[graft] val bandIndexSchema: StructType = StructType(Seq(
+    StructField("key", StringType), StructField("band_id", IntegerType)))
+
   def readBandIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/bands").select(col("band_id"), col("key"))
+    IndexStore.read(spark, bandIndexSchema, s"$path/bands")
+      .select(col("band_id"), col("key"))
 
   /** Append a new batch's band keys to the persisted index, preserving
     * the DISTINCT invariant the probe relies on (a duplicate (band, key)

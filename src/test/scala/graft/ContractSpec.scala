@@ -31,6 +31,25 @@ class ContractSpec extends AnyFunSuite {
         .map(n => s"graft/$n.scala"))
   }
 
+  test("on-disk indexes are published and named only by the index store") {
+    // one key, one atomic publish, one drop: a second rename-publish or a
+    // second graft_<family>_index_ path belongs in llm/IndexStore instead
+    val root = new java.io.File("src/main/scala")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val sources = walk(root).map(f =>
+      root.toPath.relativize(f.toPath).toString ->
+        java.nio.file.Files.readString(f.toPath))
+    val store = Set("graft/llm/IndexStore.scala")
+    assert(sources.collect { case (p, s) if s.contains(".renameTo(") => p }
+      .toSet === store)
+    val indexLiteral = "graft_\\S*_index_".r
+    assert(sources.collect {
+      case (p, s) if indexLiteral.findFirstIn(s).isDefined => p
+    }.toSet === store)
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracles without queries: $missing")

@@ -79,7 +79,7 @@ class ComponentsSpec extends AnyFunSuite {
       // loop iterations to observe
       val chain = (0L until 120L).map(i => (i, i + 1)).toDF("d1", "d2")
       val s = Components.connectedComponentsStars(chain)
-      val j = Components.connectedComponentsJump(chain)
+      val j = ComponentsReference.connectedComponentsJump(chain)
       assert(s.collect().length == 121 && j.collect().length == 121)
       // results are re-rooted on the PARENT session: everything
       // downstream of connectedComponents plans under session defaults,
@@ -284,12 +284,14 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("pair/label index: content-derived path, two sessions share ONE dir (round 9)") {
     // round-8 hygiene finding: UUID paths orphaned one index dir per JVM.
-    // The path is now a digest of the documents.parquet file metadata, so
-    // any session (or JVM) over the same dataset resolves the same dir.
+    // The index store keys the path by the documents.parquet file
+    // metadata, so any session (or JVM) over the same dataset resolves the
+    // same dir.
     val dir = TestSpark.sfDir
-    val path = Components.pairGraphPath(dir)
-    assert(path == Components.pairGraphPath(dir), "path not deterministic")
-    Components.dropPairGraphCache(dir)
+    val path = s"${IndexStore.home(IndexStore.Pair, dir)}/pairs"
+    assert(path == s"${IndexStore.home(IndexStore.Pair, dir)}/pairs",
+      "path not deterministic")
+    IndexStore.drop(dir)
     assert(!new java.io.File(path).exists())
     val n1 = Components.simhashPairs(spark, dir).count()
     assert(new java.io.File(path, "_SUCCESS").exists(), "index not published")
@@ -304,8 +306,21 @@ class ComponentsSpec extends AnyFunSuite {
     assert(n1 == n2 && after == before,
       s"second session built a new index dir ($before -> $after)")
     // no half-built .tmp-* orphans either (atomic rename-aside publish)
-    assert(!new java.io.File("/tmp").listFiles()
-      .exists(_.getName.startsWith(new java.io.File(path).getName + ".tmp-")))
+    assert(!new java.io.File(path).getParentFile.listFiles()
+      .exists(_.getName.contains(".tmp-")))
+  }
+
+  test("pair artifacts: each declared schema is what Parquet inference reads back") {
+    val dir = TestSpark.sfDir
+    Components.simhashLabels(spark, dir).count()
+    Components.minhashCands(spark, dir).count()
+    Components.jaccardPairIndex(spark, dir).count()
+    assert(Components.pairArtifactSchemas.keySet ===
+      Set("pairs", "cc", "mh", "mhc", "jpc"))
+    Components.pairArtifactSchemas.foreach { case (name, declared) =>
+      val path = s"${IndexStore.home(IndexStore.Pair, dir)}/$name"
+      assert(spark.read.parquet(path).schema === declared, name)
+    }
   }
 
   test("materialized cc labeling is row-identical to the loop recompute (round 9)") {

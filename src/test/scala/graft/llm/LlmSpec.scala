@@ -171,7 +171,7 @@ class LlmSpec extends AnyFunSuite {
     val m = Components.connectedComponentsStars(messy)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m == expect)
-    val mj = Components.connectedComponentsJump(messy)
+    val mj = ComponentsReference.connectedComponentsJump(messy)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(mj == expect, "jump/stars self-loop contract divergence")
     // complete K5 (densest neighborhood shape) collapses to one star
@@ -236,7 +236,7 @@ class LlmSpec extends AnyFunSuite {
       val edges = (chain ++ random).toDF("d1", "d2")
       val stars = Components.connectedComponentsStars(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val jump = Components.connectedComponentsJump(edges)
+      val jump = ComponentsReference.connectedComponentsJump(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(stars == jump, s"trial $trial: labelings diverge")
     }
@@ -959,7 +959,7 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("persisted IVF-PQ index: packed layout, partition pruning, serve recall") {
-    AnnIndex.dropIndexCache(TestSpark.sfDir)
+    IndexStore.drop(TestSpark.sfDir)
     val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
     val recalls = queryIds.map { q =>
       val exact = Similarity.topK(emb, q, 10).select("vec_id")
@@ -974,7 +974,7 @@ class LlmSpec extends AnyFunSuite {
       s"served IVF-PQ worst-query recall ${recalls.min} < 0.6 ($recalls)")
     // packed layout: ONE long of codes per vector (the ~m-bytes/vector
     // compression claim's executable witness) + key + partition column
-    val path = AnnIndex.indexPath(TestSpark.sfDir)
+    val path = s"${IndexStore.home(IndexStore.Ann, TestSpark.sfDir)}/ivfpq"
     val idx = spark.read.parquet(s"$path/codes")
     assert(idx.columns.sorted.toSeq === Seq("cell", "codes64", "vec_id"))
     assert(idx.count() === emb.count())
@@ -2719,17 +2719,19 @@ class LlmSpec extends AnyFunSuite {
     assert(recalls.sum / recalls.size >= 0.8, s"recall fell at 3x growth: $recalls")
   }
 
+  /** The jobs a run launched from inside DataFrameReader (its call
+    * site's first frame): a read's own jobs — with no declared schema,
+    * the Parquet footer merge that infers one.
+    */
+  private def inference(r: Counted.Run[_]): Seq[String] =
+    r.stageDetails.filter(_.linesIterator.next().contains("DataFrameReader."))
+
   test("index reads run no Parquet schema-inference job: serve, monitor trigger, retrain read") {
     val path = "/tmp/graft_test_stage/ann_inference_index"
     graft.util.Fs.deleteRecursively(path)
     val base = emb.select(col("vec_id"), col("embedding"))
     AnnIndex.writeIndex(base, path)
     AnnIndex.deleteFromIndex(spark, path, Seq(3L))
-    // a job launched from inside DataFrameReader (its call site's first
-    // frame) is the read's own: with no declared schema, the Parquet
-    // footer merge that infers one
-    def inference(r: Counted.Run[_]): Seq[String] =
-      r.stageDetails.filter(_.linesIterator.next().contains("DataFrameReader."))
     // the detector sees an inferred read
     assert(inference(Counted(spark)(spark.read.parquet(s"$path/meta"))).size === 1)
     val monitor = Counted(spark)(graft.streaming.Streams
@@ -2741,5 +2743,59 @@ class LlmSpec extends AnyFunSuite {
     val retrain = Counted(spark)(AnnIndex.retrainIndex(spark, path))
     assert(retrain.result === 1)
     assert(inference(retrain).isEmpty, inference(retrain).mkString("\n"))
+  }
+
+  test("band index: the declared schema is what inference reads back; a warm probe and an append run no read job") {
+    val path = "/tmp/graft_test_stage/band_schema_index"
+    graft.util.Fs.deleteRecursively(path)
+    val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
+      .collect().map(_.getLong(0))
+    def slice(from: Int, until: Int) =
+      docs.filter(col("doc_id").isin(ids.slice(from, until): _*))
+    Dedup.writeBandIndex(slice(0, ids.length / 2), path)
+    Dedup.appendToBandIndex(slice(ids.length / 2, ids.length * 3 / 4), path)
+    assert(spark.read.parquet(s"$path/bands").schema === Dedup.bandIndexSchema)
+    assert(spark.read.schema(Dedup.bandIndexSchema).parquet(s"$path/bands")
+      .schema === Dedup.bandIndexSchema)
+    val batch = slice(ids.length / 4, ids.length / 4 + 20)
+    def probe() = graft.streaming.Streams
+      .streamingBandDedup(batch, Dedup.readBandIndex(spark, path)).collect()
+    probe()
+    val warm = Counted(spark)(probe())
+    assert(warm.result.nonEmpty)
+    assert(inference(warm).isEmpty, inference(warm).mkString("\n"))
+    val append = Counted(spark)(
+      Dedup.appendToBandIndex(slice(ids.length * 3 / 4, ids.length), path))
+    assert(inference(append).isEmpty, inference(append).mkString("\n"))
+    // the distinct invariant holds through the declared read
+    val idx = Dedup.readBandIndex(spark, path)
+    assert(idx.count() === idx.distinct().count())
+  }
+
+  test("drop plus rebuild in one JVM serves the rebuilt index's model, recall unchanged") {
+    val dir = TestSpark.sfDir
+    val queries = Seq(0L, 7L, 42L, 99L, 123L)
+    def recalls(): Seq[Double] = queries.map { q =>
+      val exact = Similarity.topK(emb, q, 10).select("vec_id")
+        .collect().map(_.getLong(0)).toSet
+      val got = AnnIndex.servedTopK(spark, dir, q, 10)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      exact.intersect(got).size.toDouble / exact.size
+    }
+    val path = s"${IndexStore.home(IndexStore.Ann, dir)}/ivfpq"
+    val before = recalls()
+    val old = AnnIndex.servingState(spark, AnnIndex.artifactRoot(path))
+    IndexStore.drop(dir)
+    assert(!new java.io.File(path).exists())
+    val after = recalls()
+    assert(new java.io.File(path, "_SUCCESS").exists(), "index not rebuilt")
+    val fresh = AnnIndex.servingState(spark, AnnIndex.artifactRoot(path))
+    assert(!(fresh eq old), "the dropped index's serving state was served")
+    val onDisk = AnnIndex.readModel(spark, AnnIndex.artifactRoot(path))
+    assert(fresh.model.cents.map(_.toSeq).toSeq === onDisk.cents.map(_.toSeq).toSeq)
+    assert(fresh.model.books.map(_.map(_.toSeq).toSeq).toSeq ===
+      onDisk.books.map(_.map(_.toSeq).toSeq).toSeq)
+    info(s"recall@10 before drop $before, after rebuild $after")
+    assert(after === before)
   }
 }
