@@ -26,20 +26,21 @@ import graft.functions.BoundParam.bind
   * also grow as √n, not n (the retired n/25 rule was corpus-LINEAR).
   *
   * Artifacts:
-  *  - `path/codes`: (vec_id, codes64) partitioned by `cell` — ONE long
-  *    per vector (m=16 subspaces × 4-bit codes = exactly 64 bits): the
-  *    "~m bytes/vector" PQ compression claim has this table as its
-  *    executable witness (8 bytes of codes vs 256 bytes of float64s, plus
-  *    the key). Partition pruning on `cell` is pinned in LlmSpec.
-  *  - `path/vecs`: (vec_id, v) partitioned by the SAME `cell` (round 14,
-  *    VERDICT-r13 #1) — the rerank only ever needs vectors from probed
-  *    cells (every shortlist id came from a probed cell's codes), so the
-  *    float fetch prunes exactly like the code scan. Before this sidecar
-  *    the rerank joined the FULL embeddings parquet: correct, but the
-  *    last corpus-LINEAR IO term in the warm serve (DESIGN.md's ladder
-  *    measured 100× corpus → ~6× serve with the linear float scan
-  *    supplying the growth; at 100 TB it would re-read ~25 TB of floats
-  *    for a √n-row shortlist).
+  *  - `path/rows`: (vec_id, codes64, v) partitioned by `cell`, one file
+  *    per cell at build. `codes64` is ONE long per vector (m=16
+  *    subspaces × 4-bit codes = exactly 64 bits): the "~m bytes/vector"
+  *    PQ compression claim's executable witness. `v` is the float vector
+  *    the rerank scores. Parquet is columnar, so the ADC scan reads only
+  *    the `codes64` column chunks (8 bytes of codes vs 512 bytes of
+  *    float64s, plus the key), and the rerank reads `v` only from the
+  *    probed cells' files: both prune on `cell` (pinned in LlmSpec) —
+  *    every shortlist id came from a probed cell. Before the float column
+  *    lived in the index the rerank joined the FULL embeddings parquet,
+  *    the last corpus-LINEAR IO term in the warm serve (DESIGN.md's
+  *    ladder measured 100× corpus → ~6× serve). One artifact, not a code
+  *    table plus a float sidecar, means one cell-partitioned write per
+  *    build or append (a small append's cost is its per-cell files, not
+  *    its rows) and no crash window where a code has no float.
   *  - `path/cents`: (cent_id, cv) — the coarse quantizer, KBs.
   *  - `path/books`: (sub, cent_id, cv) — residual codebooks, KBs.
   *  - `path/tombstones`: (vec_id) — deleted keys (round 14, VERDICT-r13
@@ -47,11 +48,11 @@ import graft.functions.BoundParam.bind
   *    compaction = retrain/rebuild.
   *
   * At 100 TB: training reads a bounded sample + a linear assignment
-  * pass; the code table is ~n·(8+8) bytes laid out by cell; a query
+  * pass; the code column is ~n·(8+8) bytes laid out by cell; a query
   * touches √n-ish cells metadata-pruned at the source, scans n^(3/4)
   * codes in one narrow compiled projection (no join, no aggregation —
   * the ADC tables ride the plan as literals), and fetches `shortlist`
-  * float rows from the probed cells' `vecs` partitions — every serve
+  * float rows from the probed cells' `rows` partitions — every serve
   * term is sublinear in the corpus. Reference surface: pandas_redshift
   * has no ANN tier (EXT in SURVEY §2); the layout follows Jégou, Douze,
   * Schmid, TPAMI 2011 §IV (IVFADC).
@@ -123,19 +124,6 @@ object AnnIndex {
         graft.functions.VectorExpressions
           .residualVec(col("v"), col("cell"), cents).as("rv"))
 
-  /** Interpreted HOF reference of [[residuals]]'s subtraction — the
-    * semantic spec for [[graft.functions.ResidualVec]] (LlmSpec asserts
-    * exact agreement on the real corpus).
-    */
-  private[graft] def residualsHof(emb: DataFrame,
-      cents: Array[Array[Double]]): DataFrame = {
-    val centsLit = typedLit(cents.map(_.toSeq).toSeq)
-    assignments(emb, cents)
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("v"), element_at(centsLit, col("cell") + 1),
-          (x, c) => x - c).as("rv"))
-  }
-
   /** Train the coarse quantizer + residual codebooks. The residual frame
     * is persisted ONLY for the codebook trainer's Lloyd rounds (each
     * round re-reads it) and unpersisted before returning — the round-12
@@ -147,21 +135,6 @@ object AnnIndex {
     val cents = Similarity.ivfCentroids(emb, nCells, coarseIters).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
-    // audit hook (VERDICT-r15 #8 convention): train is EAGER, so no
-    // graded query's explain ever shows the residual pass — with
-    // GRAFT_DUMP_PLANS_DIR set, dump the kernel plan and the kept HOF
-    // reference's plan (the exact pre-r16 expression shape) side by side
-    // as the before/after evidence (no cost when unset; explain only,
-    // nothing executes)
-    sys.env.get("GRAFT_DUMP_PLANS_DIR").foreach { d =>
-      def dump(name: String, df: DataFrame): Unit =
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, s"$name.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-      dump("q_sim_ivfpq_residual_before", residualsHof(emb, cents))
-      dump("q_sim_ivfpq_residual_after", residuals(emb, cents))
-    }
     val resid = residuals(emb, cents)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
@@ -172,14 +145,34 @@ object AnnIndex {
     } finally resid.unpersist()
   }
 
-  /** (vec_id, cell, codes64): the packed serving rows — assignment,
-    * residual, and the full m-subspace encode in one narrow compiled
-    * projection (PqCodesWord kernel).
+  /** (vec_id, codes64, v, cell): the serving rows — assignment,
+    * residual, the full m-subspace encode (PqCodesWord kernel) and the
+    * widened float vector in one narrow compiled projection.
     */
+  private def encodeRows(emb: DataFrame, model: IvfPqModel): DataFrame =
+    assignments(emb, model.cents).select(col("vec_id"),
+      graft.functions.VectorExpressions.pqCodesWord(
+        graft.functions.VectorExpressions
+          .residualVec(col("v"), col("cell"), model.cents), model.books)
+        .as("codes64"),
+      col("v"), col("cell"))
+
+  /** (vec_id, cell, codes64): the packed codes of the serving rows. */
   def encodeCodes(emb: DataFrame, model: IvfPqModel): DataFrame =
-    residuals(emb, model.cents).select(col("vec_id"), col("cell"),
-      graft.functions.VectorExpressions.pqCodesWord(col("rv"), model.books)
-        .as("codes64"))
+    encodeRows(emb, model).select(col("vec_id"), col("cell"), col("codes64"))
+
+  /** Encode `emb` against `model` into `root/rows` in ONE cell-partitioned
+    * write. One file per cell: without the repartition every writer task
+    * emits a sliver into every cell dir (245 cells × ~30 tasks = 7,349
+    * files at 30× — measured 16 s just to SCAN the probed cells, dwarfing
+    * the ADC math; one-file-per-cell reads the same probe in <1 s). At
+    * 100 TB the equivalent is sizing files to the HDFS/object-store block,
+    * never task-count × cell-count slivers.
+    */
+  private def writeRows(emb: DataFrame, model: IvfPqModel, root: String,
+      mode: String): Unit =
+    encodeRows(emb, model).repartition(col("cell")).write.mode(mode)
+      .partitionBy("cell").parquet(s"$root/rows")
 
   /** Driver-side probe selection: the `nProbe` cells whose centroids have
     * the highest cosine to `qv` (plain-Scala exact doubles — the centroid
@@ -292,7 +285,7 @@ object AnnIndex {
 
   /** Full IVF-PQ query against a code frame: probe → ADC shortlist →
     * exact float rerank. With `vecs` (the persisted cell-partitioned
-    * sidecar) the rerank reads ONLY the probed cells' float partitions —
+    * rows) the rerank reads ONLY the probed cells' float partitions —
     * every shortlist id came from a probed cell's codes, so the pruned
     * fetch is lossless (round 14, VERDICT-r13 #1); without it (the
     * self-contained train-and-search variant) it falls back to the full
@@ -380,12 +373,12 @@ object AnnIndex {
   }
 
   /** IVF-PQ MIPS query against a code frame: IP probe → IP-ADC shortlist
-    * → exact inner-product rerank from the (pruned) float sidecar — the
+    * → exact inner-product rerank from the (pruned) float rows — the
     * served twin of [[Similarity.mipsTopK]], riding the SAME persisted
     * index as the cosine path (same cells, same codes, same float
     * partitions; only the driver-side tables and the rerank score
     * expression differ). `n` is the index's trained size, `vecs` its
-    * float sidecar.
+    * persisted rows.
     */
   def mipsTopKFromCodes(emb: DataFrame, codes: DataFrame, vecs: DataFrame,
       model: IvfPqModel, queryId: Long, k: Int, n: Long,
@@ -424,9 +417,8 @@ object AnnIndex {
     }
 
   /** Train on the corpus and persist the serving artifacts at `path`
-    * (codes partitioned by cell + cents + books + a `_SUCCESS` marker).
-    * Returns the trained model so the builder can serve without a
-    * read-back.
+    * (rows partitioned by cell + cents + books + meta). Returns the
+    * trained model so the builder can serve without a read-back.
     */
   def writeIndex(emb: DataFrame, path: String,
       m: Int = Similarity.pqSubspaces, iters: Int = 2,
@@ -436,20 +428,7 @@ object AnnIndex {
     val nTrained = emb.count()
     val nC = if (nCells > 0) nCells else ivfCellsFor(nTrained)
     val model = train(emb, nC, m, iters, coarseIters)
-    // ONE file per cell: without the repartition every writer task emits
-    // a sliver into every cell dir (245 cells × ~30 tasks = 7,349 files
-    // at 30× — measured 16 s just to SCAN the probed cells, dwarfing the
-    // ADC math; one-file-per-cell reads the same probe in <1 s). At
-    // 100 TB the equivalent is sizing files to the HDFS/object-store
-    // block, never task-count × cell-count slivers.
-    encodeCodes(emb, model).repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/codes")
-    // float sidecar, SAME one-file-per-cell layout: the rerank's fetch
-    // prunes to probed cells exactly like the code scan (VERDICT-r13 #1)
-    assignments(emb, model.cents)
-      .select(col("vec_id"), col("cell"), col("v"))
-      .repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/vecs")
+    writeRows(emb, model, path, "overwrite")
     model.cents.zipWithIndex
       .map { case (cv, i) => (i, cv.toSeq) }.toSeq
       .toDF("cent_id", "cv")
@@ -486,7 +465,7 @@ object AnnIndex {
     * probe volume when the batch's probe sets overlap (they do — probes
     * concentrate in the query-dense region), never nQueries × it.
     * Returns (query_id, vec_id, cos_r, rk). `n` is the index's trained
-    * size, `vecs` its float sidecar.
+    * size, `vecs` its persisted rows.
     */
   def topKBatchFromCodes(emb: DataFrame, codes: DataFrame, vecs: DataFrame,
       model: IvfPqModel, queryIds: Seq[Long], k: Int, n: Long,
@@ -575,7 +554,7 @@ object AnnIndex {
       .filter(col("srk") <= sl)
       .select(col("query_id"), col("qpos"), col("vec_id"))
     // ONE float join for the union of shortlists, then the exact rerank.
-    // The persisted sidecar's fetch prunes to the UNION of probed cells
+    // The persisted rows' float fetch prunes to the UNION of probed cells
     // (every shortlist id lives in one of them) instead of scanning the
     // full embeddings parquet (round 14, VERDICT-r13 #1).
     val qMat = typedLit(qs.map(_._2.toSeq).toSeq)
@@ -606,12 +585,15 @@ object AnnIndex {
   /** Append NEW vectors to an existing index: assign + encode against
     * the PUBLISHED model (read back from the sidecars, so appended codes
     * can never drift from the rows already on disk) and append to the
-    * code table — the batch ingest path completing the serving story
+    * rows — the batch ingest path completing the serving story
     * ([[graft.streaming.Streams.streamingAnnProbe]] is the probe-only
     * streaming twin). Centroids and codebooks stay FROZEN, the standard
     * IVF contract: retrain when drift accumulates — q_embed_drift is the
     * monitor. A dynamic-partition append touches only the arriving rows'
-    * cell directories.
+    * cell directories and adds one file to each, in two jobs (the
+    * shuffle that groups the batch by cell, then the write). A row
+    * carries its code and its float together, so no crash can leave a
+    * servable code whose float the rerank cannot find.
     */
   def appendToIndex(newEmb: DataFrame, path: String): Unit = {
     // epoch-aware (round 15): resolve the CURRENT epoch root first, so a
@@ -621,19 +603,8 @@ object AnnIndex {
     // the RESOLVED root, VERDICT-r14 #8) reads each epoch's sidecars
     // exactly once per JVM, not once per batch
     val root = artifactRoot(path)
-    val model = servingState(newEmb.sparkSession, root).model
-    // vecs FIRST, codes SECOND — the reachability ordering: a vector is
-    // only servable once its CODE row lands, so a crash between the two
-    // appends leaves orphan float rows (harmless — nothing shortlists
-    // them) rather than shortlist ids whose rerank join silently drops
-    // them (a recall hole). On an object store with atomic multi-file
-    // commit the two appends would share one transaction.
-    assignments(newEmb, model.cents)
-      .select(col("vec_id"), col("cell"), col("v"))
-      .repartition(col("cell")).write.mode("append")
-      .partitionBy("cell").parquet(s"$root/vecs")
-    encodeCodes(newEmb, model).repartition(col("cell")).write.mode("append")
-      .partitionBy("cell").parquet(s"$root/codes")
+    writeRows(newEmb, servingState(newEmb.sparkSession, root).model, root,
+      "append")
   }
 
   /** Tombstone-delete: record `ids` under `path/tombstones`; every serve
@@ -647,7 +618,7 @@ object AnnIndex {
       ids: Seq[Long]): Unit = {
     import spark.implicits._
     // per-EPOCH tombstones: a retrain physically drops the dead rows
-    // while reading live = vecs ∖ tombstones, so the new epoch correctly
+    // while reading live = rows ∖ tombstones, so the new epoch correctly
     // starts with an empty tombstone set (compaction) — deletes racing a
     // concurrent retrain are out of scope (single-writer maintenance,
     // like any LSM compactor)
@@ -655,38 +626,28 @@ object AnnIndex {
       .parquet(s"${artifactRoot(path)}/tombstones")
   }
 
-  /** Codes minus tombstones — what every serve scores. The anti-join's
-    * right side is the tombstone table (small until a retrain compacts;
-    * AQE broadcasts it), and the probed-cell partition filter still
-    * pushes through the join to the code scan. `root` is an already
-    * RESOLVED epoch root ([[artifactRoot]]).
+  /** `rows`, read from the RESOLVED epoch root `root` ([[artifactRoot]]),
+    * minus tombstones: what every serve scores, what the stats count and
+    * what a retrain re-trains on. The anti-join's right side is the
+    * tombstone table (small until a retrain compacts; AQE broadcasts it),
+    * and the probed-cell partition filter still pushes through the join
+    * to the rows scan.
     */
-  private def liveCodes(spark: SparkSession, root: String): DataFrame = {
-    val codes = readArtifact(spark, root, "codes")
+  private def minusTombstones(spark: SparkSession, root: String,
+      rows: DataFrame): DataFrame =
     if (new java.io.File(s"$root/tombstones").exists())
-      codes.join(readArtifact(spark, root, "tombstones"),
+      rows.join(readArtifact(spark, root, "tombstones"),
         Seq("vec_id"), "left_anti")
-    else codes
-  }
+    else rows
 
-  /** Live float rows — vecs minus tombstones: what a retrain re-trains
-    * on (the index's OWN partitions; the source table is never read).
-    */
-  private def liveVecs(spark: SparkSession, root: String): DataFrame = {
-    val vecs = readArtifact(spark, root, "vecs")
-      .select(col("vec_id"), col("v").as("embedding"))
-    if (new java.io.File(s"$root/tombstones").exists())
-      vecs.join(readArtifact(spark, root, "tombstones"),
-        Seq("vec_id"), "left_anti")
-    else vecs
-  }
+  private def liveRows(spark: SparkSession, root: String): DataFrame =
+    minusTombstones(spark, root, readArtifact(spark, root, "rows"))
 
   /** Cell-occupancy statistics for the retrain trigger (round 14,
     * VERDICT-r13 #4): frozen centroids degrade as appended mass skews
     * cells — a cell that doubles both weakens pruning (more rows behind
     * one probe) and recall (residuals drift from the codebooks trained on
-    * the original distribution). One groupBy over the code table (live
-    * rows only).
+    * the original distribution). One groupBy over the live rows' cells.
     */
   case class IndexStats(nCells: Int, liveRows: Long, maxCellRows: Long,
       meanCellRows: Double) {
@@ -698,7 +659,7 @@ object AnnIndex {
   def indexStats(spark: SparkSession, path: String): IndexStats = {
     val root = artifactRoot(path)
     val model = servingState(spark, root).model
-    val row = liveCodes(spark, root).groupBy(col("cell"))
+    val row = liveRows(spark, root).groupBy(col("cell"))
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c")), max(col("c"))).head()
     val total = if (row.isNullAt(0)) 0L else row.getLong(0)
@@ -756,9 +717,9 @@ object AnnIndex {
 
   /** Query the PERSISTED index: take the model from the per-epoch
     * serving state, scan only the probed cells' partitions of the code
-    * table (partition pruning — pinned in LlmSpec), rerank the shortlist
-    * against the probed cells' partitions of the FLOAT sidecar (round 14
-    * — the full-embeddings rerank scan was the last corpus-linear serve
+    * column (partition pruning — pinned in LlmSpec), rerank the
+    * shortlist against the probed cells' float column of the same rows
+    * (the full-embeddings rerank scan was the last corpus-linear serve
     * term), minus any tombstoned keys. `emb` only has to hold the query
     * vector: the shortlist is sized from the index's trained size (the
     * `meta` sidecar), never from `emb`, so a one-row query frame and the
@@ -775,7 +736,7 @@ object AnnIndex {
   // the needsRetrain triggers and republishes atomically ----
 
   /** Resolve the CURRENT epoch's artifact root. Epoch 0 is the legacy
-    * layout (codes/vecs/cents/books directly under `path` — what
+    * layout (rows/cents/books/meta directly under `path` — what
     * [[writeIndex]] publishes on first build); each retrain publishes
     * `path/epoch=<n>` and swaps the `path/CURRENT` pointer file in one
     * atomic rename, the classic lake-format pointer commit: readers
@@ -801,7 +762,7 @@ object AnnIndex {
     * append → drift → retrain):
     *
     *  1. read LIVE rows (appends minus tombstones) from the index's OWN
-    *     cell-partitioned float sidecar — the source table is never
+    *     cell-partitioned rows — the source table is never
     *     read (it may have moved on; the index is the system of record
     *     for what it serves);
     *  2. re-train at the new √n operating point (grid, codebooks, and
@@ -825,7 +786,8 @@ object AnnIndex {
       m: Int = Similarity.pqSubspaces, iters: Int = 2,
       coarseIters: Int = 1): Int = {
     val oldRoot = artifactRoot(path)
-    val live = liveVecs(spark, oldRoot)
+    val live = liveRows(spark, oldRoot)
+      .select(col("vec_id"), col("v").as("embedding"))
     val nextEpoch = currentEpoch(path).getOrElse(0) + 1
     val newRoot = s"$path/epoch=$nextEpoch"
     graft.util.Fs.deleteRecursively(newRoot)
@@ -857,7 +819,7 @@ object AnnIndex {
     // reclaim the retired epoch's artifacts and its serving state
     servingMemo.remove(oldRoot)
     if (oldRoot == path)
-      Seq("codes", "vecs", "cents", "books", "tombstones", "meta")
+      Seq("rows", "cents", "books", "tombstones", "meta")
         .foreach(a => graft.util.Fs.deleteRecursively(s"$path/$a"))
     else graft.util.Fs.deleteRecursively(oldRoot)
     nextEpoch
@@ -868,7 +830,7 @@ object AnnIndex {
     * the [[IndexStore]] key, so a code change never reads a stale index
     * built by an older JVM.
     */
-  private[llm] val annIndexVersion = 3
+  private[llm] val annIndexVersion = 4
 
   /** What a serve needs from an epoch beyond its data files, read once
     * per resolved epoch root per JVM: the model (`cents` + `books`) and
@@ -895,18 +857,17 @@ object AnnIndex {
   /** Declared schema of each index artifact, exactly as Spark reads back
     * what [[writeIndex]], [[appendToIndex]] and [[deleteFromIndex]] write
     * (a file source reads every field nullable; `cell` is the partition
-    * column of `codes` and `vecs`). Reading through them means no read of
-    * an index runs a Parquet schema-inference job; LlmSpec pins each one
-    * against inference.
+    * column of `rows`). Reading through them means no read of an index
+    * runs a Parquet schema-inference job; LlmSpec pins each one against
+    * inference.
     */
   private[graft] val artifactSchemas: Map[String, StructType] = {
     def st(fields: (String, DataType)*): StructType =
       StructType(fields.map { case (n, t) => StructField(n, t) })
     val vec = ArrayType(DoubleType)
     Map(
-      "codes" -> st("vec_id" -> LongType, "codes64" -> LongType,
+      "rows" -> st("vec_id" -> LongType, "codes64" -> LongType, "v" -> vec,
         "cell" -> IntegerType),
-      "vecs" -> st("vec_id" -> LongType, "v" -> vec, "cell" -> IntegerType),
       "tombstones" -> st("vec_id" -> LongType),
       "meta" -> st("trained_rows" -> LongType),
       "cents" -> st("cent_id" -> IntegerType, "cv" -> vec),
@@ -918,8 +879,9 @@ object AnnIndex {
       name: String): DataFrame =
     IndexStore.read(spark, artifactSchemas(name), s"$root/$name")
 
-  /** One serve's view of the current epoch: its live codes, its float
-    * sidecar and its serving state.
+  /** One serve's view of the current epoch: its live rows (scored by
+    * code), its rows (fetched by float) and its serving state. Both come
+    * from ONE read of `rows`, so a serve lists the cell directories once.
     */
   private final case class ServingIndex(codes: DataFrame, vecs: DataFrame,
       model: IvfPqModel, trainedRows: Long)
@@ -927,8 +889,9 @@ object AnnIndex {
   private def openIndex(spark: SparkSession, path: String): ServingIndex = {
     val root = artifactRoot(path)
     val st = servingState(spark, root)
-    ServingIndex(liveCodes(spark, root), readArtifact(spark, root, "vecs"),
-      st.model, st.trainedRows)
+    val rows = readArtifact(spark, root, "rows")
+    ServingIndex(minusTombstones(spark, root, rows), rows, st.model,
+      st.trainedRows)
   }
 
   /** The memoized per-(JVM, dataset) serve entry — q_sim_ivfpq's backing:

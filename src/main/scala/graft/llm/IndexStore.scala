@@ -27,7 +27,8 @@ import graft.util.Fs
   * Lifetime: a fresh publish deletes the family's other homes for the
   * same dataset, so a regenerated dataset keeps exactly one home per
   * family, but spares a home that holds a build younger than an hour (a
-  * concurrent builder's). [[drop]] deletes every home a dataset has.
+  * concurrent builder's). [[drop]] deletes every home a dataset has,
+  * and the index dirs left by versions before the store.
   */
 object IndexStore {
 
@@ -156,9 +157,24 @@ object IndexStore {
     Fs.deleteRecursively(p)
   }
 
-  /** Delete every index home of the dataset at `sfDir`, in every family. */
-  def drop(sfDir: String): Unit =
+  /** The dirs of the versions before the store: `graft_<family>_index_`
+    * plus one 16-hex key, and the pair family's `_cc`, `_mh`, `_mhc` and
+    * `_jpc` siblings. A home's name carries two 16-hex keys, so no home
+    * matches.
+    */
+  private val preStore =
+    "graft_(ann|pair)_index_[0-9a-f]{16}(_cc|_mh|_mhc|_jpc)?".r
+
+  /** Delete every index home of the dataset at `sfDir`, in every family,
+    * and every pre-store index dir: their names do not say which dataset
+    * they were built from, and nothing reads them.
+    */
+  def drop(sfDir: String): Unit = {
     families.foreach(f => homes(f, sfDir).foreach(remove))
+    Option(root.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
+      .filter(d => preStore.matches(d.getName))
+      .foreach(d => Fs.deleteRecursively(d.getPath))
+  }
 
   /** Read a parquet artifact with its declared schema: no read of an
     * index runs a Parquet schema-inference job.

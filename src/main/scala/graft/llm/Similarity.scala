@@ -829,7 +829,7 @@ object Similarity {
     * aggregation), and no lingering persist (train unpersists its
     * residual frame before returning — the round-12 DISK_ONLY leak).
     * Production serving trains ONCE and reads the persisted partitioned
-    * code table instead: [[AnnIndex.writeIndex]] / [[AnnIndex.serveTopK]]
+    * rows instead: [[AnnIndex.writeIndex]] / [[AnnIndex.serveTopK]]
     * (q_sim_ivfpq's backing via [[AnnIndex.servedTopK]]).
     */
   def ivfpqTopK(emb: DataFrame, queryId: Long, k: Int,
@@ -1425,7 +1425,7 @@ object Similarity {
     // by raw q·c, score codes with the IP-ADC table (the cosine path's
     // NUM table with no denominator — q·c + q·r̂ through the same
     // AdcTableSum kernel), exact inner-product rerank from the probed
-    // cells' float sidecar partitions. Centroids/codebooks are
+    // cells' `rows` partitions. Centroids/codebooks are
     // engine-local floats, so the gate pins plumbing + the recall floor
     // vs the exact MIPS truth (q_sim_mips's ranking) via the recallGate
     // shape; LlmSpec holds the multi-query recall curve and the

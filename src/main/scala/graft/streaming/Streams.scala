@@ -457,7 +457,7 @@ object Streams {
     * (array_sort of (−score, cell) structs — no window function, which
     * streaming append mode could not run anyway), then explodes to
     * (arrival, cell) probe rows; (2) the static side is the persisted
-    * packed code table DECODED to ĉ + r̂ once per micro-batch (nibble →
+    * rows' packed codes DECODED to ĉ + r̂ once per micro-batch (nibble →
     * codebook-row flatten + centroid add, all against plan literals);
     * (3) ONE stream-static inner equi-join on `cell` + a codegen'd
     * ArrayDot cosine + threshold filter. Zero state stores, no
@@ -466,7 +466,7 @@ object Streams {
     * RECONSTRUCTION (the serving-memory trade PQ makes); StreamingSpec
     * measures it ≥ 0.9 for planted exact copies on this corpus and pins
     * batch-twin parity + checkpoint restart. At 100 TB the static side
-    * is the ~8-bytes/vector code table; a production variant would
+    * is the ~8-bytes/vector code column; a production variant would
     * pre-decode the few hottest cells or decode in the join projection —
     * stated here, measured trade left to the deployment.
     */
@@ -536,20 +536,21 @@ object Streams {
 
   /** Per-micro-batch INDEX-APPEND handler (s_ann_ingest's core,
     * round 14): append the arriving embeddings into the persisted
-    * IVF-PQ index with the frozen published model —
-    * [[graft.llm.AnnIndex.appendToIndex]]'s vecs-before-codes
-    * reachability ordering per batch. Retry safety: parquet `append` is
+    * IVF-PQ index with the frozen published model — one
+    * [[graft.llm.AnnIndex.appendToIndex]] per batch, one write of rows
+    * that each carry their code and their float, so no crash can leave
+    * a code row without its float. Retry safety: parquet `append` is
     * NOT idempotent, so each applied batch leaves a marker dir under
-    * `path/ingest_log/batch=<id>` AFTER both appends and a re-delivered
+    * `path/ingest_log/batch=<id>` AFTER the append and a re-delivered
     * batchId is skipped — Structured Streaming's batch-granular replay
     * contract makes this effectively-once, with one honest crash
     * window: a batch that appended but died before its marker
     * double-appends on restart (marker-first would instead LOSE the
-    * batch — strictly worse: a duplicate code row only re-ranks a
-    * shortlist entry, a missing one is a silent recall hole). True
-    * exactly-once needs the data+marker commit to be transactional —
-    * on a lake table format the two appends and the marker become one
-    * commit; this layout keeps plain parquet and documents the trade.
+    * batch — strictly worse: a duplicate row only re-ranks a shortlist
+    * entry, a missing one is a silent recall hole). True exactly-once
+    * needs the data+marker commit to be transactional — on a lake table
+    * format the append and the marker become one commit; this layout
+    * keeps plain parquet and documents the trade.
     */
   def annIngestBatchHandler(path: String,
       streamId: String = "default")(batch: DataFrame,
@@ -610,7 +611,7 @@ object Streams {
     * moment drifted mass pushes live/trained past 4× or cell skew past
     * 8 the emitted verdict flips (StreamingSpec pins exactly that on
     * drifted append batches). The stats query is one groupBy over the
-    * code table's (cell) — corpus-code-linear per batch, so a
+    * index rows' (cell) — corpus-code-linear per batch, so a
     * production deployment would run it on a sampled cadence
     * (`every` micro-batches, default 1 here where batches are tests'
     * seconds apart, not milliseconds).

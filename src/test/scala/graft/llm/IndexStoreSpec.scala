@@ -50,6 +50,33 @@ class IndexStoreSpec extends AnyFunSuite {
     Fs.deleteRecursively(dir)
   }
 
+  test("drop deletes the index dirs of versions before the store and spares live homes") {
+    val live = s"$scratch/live"
+    Fs.deleteRecursively(live)
+    copyTable(live, "embeddings", System.currentTimeMillis() / 1000 * 1000)
+    val home = new File(IndexStore.home(IndexStore.Ann, live))
+    assert(home.mkdirs())
+    val key = "0123456789abcdef"
+    val legacy = (s"graft_ann_index_$key" +:
+      Seq("", "_cc", "_mh", "_mhc", "_jpc").map(s => s"graft_pair_index_$key$s"))
+      .map(new File("/tmp", _))
+    // near misses: a wrong suffix, a short key, an upper-case key
+    val kept = Seq(s"graft_pair_index_${key}_ccx", "graft_ann_index_0123456789abcde",
+      "graft_ann_index_0123456789ABCDEF").map(new File("/tmp", _))
+    (legacy ++ kept).foreach { d =>
+      assert(d.mkdirs() || d.isDirectory)
+      assert(new File(d, "part-0.parquet").createNewFile() || new File(d, "part-0.parquet").exists())
+    }
+    IndexStore.drop(s"$scratch/other")
+    legacy.foreach(d => assert(!d.exists(), s"$d survived drop"))
+    kept.foreach(d => assert(d.isDirectory, s"$d was deleted"))
+    assert(home.isDirectory, "drop deleted another dataset's home")
+    kept.foreach(d => Fs.deleteRecursively(d.getPath))
+    IndexStore.drop(live)
+    assert(!home.exists())
+    Fs.deleteRecursively(live)
+  }
+
   test("a change to a file nested inside a partitioned table changes the key") {
     val dir = s"$scratch/nested"
     Fs.deleteRecursively(dir)

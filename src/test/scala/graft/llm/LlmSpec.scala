@@ -825,7 +825,7 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val kernel = graft.llm.AnnIndex.residuals(emb, cents)
-    val hof = graft.llm.AnnIndex.residualsHof(emb, cents)
+    val hof = AnnReference.residualsHof(emb, cents)
     assert(kernel.except(hof).isEmpty && hof.except(kernel).isEmpty)
     assert(kernel.count() === emb.count())
     // out-of-table cell → null rv, exactly element_at-null through zip_with
@@ -973,51 +973,46 @@ class LlmSpec extends AnyFunSuite {
     assert(recalls.min >= 0.6,
       s"served IVF-PQ worst-query recall ${recalls.min} < 0.6 ($recalls)")
     // packed layout: ONE long of codes per vector (the ~m-bytes/vector
-    // compression claim's executable witness) + key + partition column
+    // compression claim's executable witness) + key + the float vector
+    // + partition column, in one artifact
     val path = s"${IndexStore.home(IndexStore.Ann, TestSpark.sfDir)}/ivfpq"
-    val idx = spark.read.parquet(s"$path/codes")
-    assert(idx.columns.sorted.toSeq === Seq("cell", "codes64", "vec_id"))
+    val idx = spark.read.parquet(s"$path/rows")
+    assert(idx.columns.sorted.toSeq === Seq("cell", "codes64", "v", "vec_id"))
+    assert(idx.schema("codes64").dataType === org.apache.spark.sql.types.LongType)
     assert(idx.count() === emb.count())
+    assert(idx.filter(col("v").isNotNull).count() === emb.count())
     // ONE data file per cell (round-13 layout fix: the unrepartitioned
     // write left a sliver per writer task per cell — 7,349 files at 30×,
     // 16 s just to SCAN the probed cells)
-    val nFiles = new java.io.File(s"$path/codes").listFiles()
+    val nFiles = new java.io.File(s"$path/rows").listFiles()
       .filter(_.getName.startsWith("cell=")).map(d =>
         d.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val nCells = new java.io.File(s"$path/codes").listFiles()
+    val nCells = new java.io.File(s"$path/rows").listFiles()
       .count(_.getName.startsWith("cell="))
     assert(nFiles === nCells,
       s"expected one data file per cell, got $nFiles files over $nCells cells")
     // a probed-cell read prunes at the source (the writeIvfIndex spec
-    // pattern): PartitionFilters must carry the cell predicate
+    // pattern): PartitionFilters must carry the cell predicate, for the
+    // code scan and for the float fetch alike
     val someCell = idx.select(col("cell").cast("long")).head().getLong(0)
-    val probe = idx.filter(col("cell") === someCell)
+    val probe = idx.filter(col("cell") === someCell).select("vec_id", "codes64")
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*cell[^\\]]*\\].*"), plan)
     assert(probe.count() > 0)
-    // float sidecar (round 14, VERDICT-r13 #1): same cell layout, one
-    // data file per cell, full coverage — and a probed-cell read prunes
-    val vecs = spark.read.parquet(s"$path/vecs")
-    assert(vecs.columns.sorted.toSeq === Seq("cell", "v", "vec_id"))
-    assert(vecs.count() === emb.count())
-    val vFiles = new java.io.File(s"$path/vecs").listFiles()
-      .filter(_.getName.startsWith("cell=")).map(d =>
-        d.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val vCells = new java.io.File(s"$path/vecs").listFiles()
-      .count(_.getName.startsWith("cell="))
-    assert(vFiles === vCells,
-      s"expected one vecs file per cell, got $vFiles files over $vCells cells")
-    val vProbe = vecs.filter(col("cell") === someCell)
+    val vProbe = idx.filter(col("cell") === someCell).select("vec_id", "v")
     val vPlan = vProbe.queryExecution.executedPlan.toString
     assert(vPlan.matches("(?s).*PartitionFilters: \\[[^\\]]*cell[^\\]]*\\].*"), vPlan)
     // the serve plan itself never scans the source embeddings parquet:
-    // probe reads codes partitions, rerank reads vecs partitions, the
+    // the probe reads the rows' codes, the rerank their floats, the
     // query vector rides as a literal — the corpus-linear float fetch
-    // VERDICT-r13 flagged is structurally gone from the served plan
+    // VERDICT-r13 flagged is structurally gone from the served plan.
+    // The code scan reads no float column (columnar pruning).
     val servePlan = AnnIndex.servedTopK(spark, TestSpark.sfDir, 0L, 10)
       .queryExecution.executedPlan.toString
     assert(!servePlan.contains("embeddings.parquet"), servePlan)
-    assert(servePlan.contains(s"$path/codes") || servePlan.contains("codes"),
+    assert(servePlan.contains("ReadSchema: struct<vec_id:bigint,codes64:bigint>"),
+      servePlan)
+    assert(servePlan.contains("ReadSchema: struct<vec_id:bigint,v:array<double>>"),
       servePlan)
     // the model read back from the sidecars matches the published codes:
     // re-encoding the corpus with it reproduces the persisted words
@@ -1038,7 +1033,7 @@ class LlmSpec extends AnyFunSuite {
     val copies = base.filter(col("vec_id") < 5)
       .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
     AnnIndex.appendToIndex(copies, path)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"$path/rows")
     assert(codes.count() === emb.count() + 5)
     // an appended exact copy lands in its source's cell with its source's
     // code word (frozen model ⇒ same assignment, same encode)
@@ -1056,9 +1051,8 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(served.contains(200000L) && served(200000L) === 1.0,
       s"appended copy of vector 0 not served: $served")
-    // the float sidecar grew in lockstep (vecs-first append ordering:
-    // every servable code row has its rerank float row)
-    assert(spark.read.parquet(s"$path/vecs").count() === emb.count() + 5)
+    // every servable code row carries its rerank float (one artifact)
+    assert(codes.filter(col("v").isNotNull).count() === emb.count() + 5)
   }
 
   test("deleteFromIndex: tombstoned vectors never serve again; stats see live rows") {
@@ -2537,8 +2531,8 @@ class LlmSpec extends AnyFunSuite {
     // retrain: new epoch, pointer swapped, old artifacts reclaimed
     val epoch = AnnIndex.retrainIndex(spark, path)
     assert(epoch === 1 && AnnIndex.currentEpoch(path).contains(1))
-    assert(new java.io.File(s"$path/epoch=1/codes").exists())
-    assert(!new java.io.File(s"$path/codes").exists(),
+    assert(new java.io.File(s"$path/epoch=1/rows").exists())
+    assert(!new java.io.File(s"$path/rows").exists(),
       "legacy-root artifacts not reclaimed")
     val liveCount = live.count()
     assert(AnnIndex.trainedRows(spark, path) === liveCount)
@@ -2571,7 +2565,7 @@ class LlmSpec extends AnyFunSuite {
     val more = base.filter(col("vec_id") < 3)
       .select((col("vec_id") + 90000000L).as("vec_id"), col("embedding"))
     AnnIndex.appendToIndex(more, path)
-    assert(spark.read.parquet(s"$path/epoch=1/codes").count() ===
+    assert(spark.read.parquet(s"$path/epoch=1/rows").count() ===
       liveCount + 3)
     // a second retrain rolls the epoch and reclaims epoch 1
     val epoch2 = AnnIndex.retrainIndex(spark, path)
@@ -2648,7 +2642,7 @@ class LlmSpec extends AnyFunSuite {
       .select((col("vec_id") + 400000L).as("vec_id"), col("embedding")), path)
     AnnIndex.deleteFromIndex(spark, path, Seq(400000L))
     assert(AnnIndex.artifactSchemas.keySet ===
-      Set("codes", "vecs", "tombstones", "meta", "cents", "books"))
+      Set("rows", "tombstones", "meta", "cents", "books"))
     AnnIndex.artifactSchemas.foreach { case (name, declared) =>
       val inferred = spark.read.parquet(s"$path/$name").schema
       assert(inferred === declared, name)
@@ -2672,6 +2666,48 @@ class LlmSpec extends AnyFunSuite {
     assert(second.compiles === 0L,
       s"warm serve compiled ${second.compiles} classes")
     assert(second.jobs === 2, s"warm serve ran ${second.jobs} jobs: " +
+      second.stageDetails.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n"))
+  }
+
+  /** The number of data files in each cell dir of a `rows` artifact. */
+  private def cellFiles(rows: String): Map[String, Int] =
+    new java.io.File(rows).listFiles().filter(_.getName.startsWith("cell="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+
+  test("append fixed cost: a warm 25-vector append runs 2 jobs and adds one file per touched cell; serves stay 2 jobs, 0 compiles") {
+    val path = "/tmp/graft_test_stage/ann_append_cost_index"
+    graft.util.Fs.deleteRecursively(path)
+    AnnIndex.writeIndex(vecFrame(clustered(seed = 5L, n = 500)), path)
+    def serve(q: (Long, Array[Float])): Seq[Long] =
+      AnnIndex.serveTopK(spark, path, vecFrame(Seq(q)), q._1, 10)
+        .collect().map(_.getLong(0)).toSeq
+    val held = clustered(seed = 6L, n = 3, firstId = 1000000001L)
+    val batches = (0 until 3).map(b =>
+      clustered(seed = 7L + b, n = 25, firstId = 2000000000L + 100L * b))
+    assert(serve(held(0)).size === 10)
+    AnnIndex.appendToIndex(vecFrame(batches(0)), path)
+    val before = cellFiles(s"$path/rows")
+    val warm = Counted(spark)(AnnIndex.appendToIndex(vecFrame(batches(1)), path))
+    assert(warm.jobs === 2, s"warm append ran ${warm.jobs} jobs: " +
+      warm.stageDetails.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n"))
+    val after = cellFiles(s"$path/rows")
+    val touched = spark.read.parquet(s"$path/rows")
+      .filter(col("vec_id").isin(batches(1).map(_._1): _*))
+      .select(col("cell")).distinct().collect().map(r => s"cell=${r.getInt(0)}").toSet
+    assert(touched.nonEmpty)
+    assert(after.keySet === before.keySet ++ touched)
+    after.foreach { case (cell, n) =>
+      val want = before.getOrElse(cell, 0) + (if (touched(cell)) 1 else 0)
+      assert(n === want, s"$cell: $n files, want $want")
+    }
+    AnnIndex.appendToIndex(vecFrame(batches(2)), path)
+    assert(serve(held(1)).size === 10)
+    val second = Counted(spark)(serve(held(2)))
+    assert(second.result.size === 10)
+    assert(second.compiles === 0L,
+      s"warm serve after appends compiled ${second.compiles} classes")
+    assert(second.jobs === 2, s"warm serve after appends ran ${second.jobs} jobs: " +
       second.stageDetails.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n"))
   }
 

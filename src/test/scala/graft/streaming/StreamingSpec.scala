@@ -310,7 +310,7 @@ class StreamingSpec extends AnyFunSuite {
     val path = "/tmp/graft_test_stage/ann_probe_index"
     graft.util.Fs.deleteRecursively(path)
     val model = graft.llm.AnnIndex.writeIndex(emb, path)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"$path/rows")
     // arrivals: 10 EXACT COPIES of corpus vectors under fresh ids (the
     // near-dup ingest case) — their top probe cell is their source's
     // cell by construction (same cosine argmax), so the feed must
@@ -363,7 +363,7 @@ class StreamingSpec extends AnyFunSuite {
     val path = "/tmp/graft_test_stage/ann_topk_index"
     graft.util.Fs.deleteRecursively(path)
     val model = graft.llm.AnnIndex.writeIndex(emb, path)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"$path/rows")
     val arrivals = emb.filter(col("vec_id") < 12)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect()
@@ -425,7 +425,7 @@ class StreamingSpec extends AnyFunSuite {
     val emb = graft.Engine.table(spark, TestSpark.sfDir, "embeddings")
     val idxPath = s"$base/index"
     val model = graft.llm.AnnIndex.writeIndex(emb, idxPath)
-    val codes = spark.read.parquet(s"$idxPath/codes")
+    val codes = spark.read.parquet(s"$idxPath/rows")
     val arrivals = emb.filter(col("vec_id") < 20)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
     val b1 = arrivals.filter(col("vec_id") < 100010L)
@@ -472,10 +472,11 @@ class StreamingSpec extends AnyFunSuite {
       mem.addData(b1.toSeq: _*); q.processAllAvailable()
       mem.addData(b2.toSeq: _*); q.processAllAvailable()
     } finally q.stop()
-    // both micro-batches landed: codes AND the float sidecar grew in
-    // lockstep (the vecs-before-codes reachability ordering)
-    assert(spark.read.parquet(s"$path/codes").count() === n0 + 10)
-    assert(spark.read.parquet(s"$path/vecs").count() === n0 + 10)
+    // both micro-batches landed, and every streamed code row carries
+    // its rerank float (one artifact: no code without its float)
+    val rows = spark.read.parquet(s"$path/rows")
+    assert(rows.count() === n0 + 10)
+    assert(rows.filter(col("v").isNotNull).count() === n0 + 10)
     // the serve path sees the streamed vectors without retraining:
     // querying an original surfaces its streamed exact copy at 1.0
     val all = emb.select(col("vec_id"), col("embedding")).unionByName(
@@ -489,11 +490,11 @@ class StreamingSpec extends AnyFunSuite {
     // by hand with the same id and counts must not move
     val replay = arrivals.take(5).toSeq.toDF("vec_id", "embedding")
     Streams.annIngestBatchHandler(path)(replay, 0L)
-    assert(spark.read.parquet(s"$path/codes").count() === n0 + 10,
+    assert(spark.read.parquet(s"$path/rows").count() === n0 + 10,
       "replayed batchId appended again despite its marker")
     // and streamed rows are bit-identical to the batch append path:
     // same cell, same packed code word as their source vectors
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"$path/rows")
     val byId = codes.filter(col("vec_id") < 10 || col("vec_id") >= 500000L)
       .collect().map(r => r.getLong(codes.columns.indexOf("vec_id")) ->
         (r.getLong(codes.columns.indexOf("codes64")),
@@ -575,12 +576,12 @@ class StreamingSpec extends AnyFunSuite {
       .select((col("vec_id") + off).as("vec_id"), col("embedding"))
     Streams.annIngestBatchHandler(path, "lineage-a")(batchOf(700000L), 0L)
     Streams.annIngestBatchHandler(path, "lineage-b")(batchOf(800000L), 0L)
-    assert(spark.read.parquet(s"$path/codes").count() === n0 + 10,
+    assert(spark.read.parquet(s"$path/rows").count() === n0 + 10,
       "second lineage's batch 0 was skipped by the first lineage's marker")
     // replays WITHIN a lineage still no-op
     Streams.annIngestBatchHandler(path, "lineage-a")(batchOf(700000L), 0L)
     Streams.annIngestBatchHandler(path, "lineage-b")(batchOf(800000L), 0L)
-    assert(spark.read.parquet(s"$path/codes").count() === n0 + 10)
+    assert(spark.read.parquet(s"$path/rows").count() === n0 + 10)
   }
 
   test("streamingIndexMonitor: drifted append batches flip the retrain verdict (s_index_monitor)") {
