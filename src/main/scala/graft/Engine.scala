@@ -26,9 +26,6 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Small dimension tables that should be broadcast in joins. */
-  val broadcastableDims: Set[String] = Set("region", "nation", "supplier")
-
   // Plan cache: re-resolving a table re-reads parquet footers; the
   // DataFrame (a lazy plan) is immutable, so reuse per (session, dir,
   // name) is safe and shaves fixed cost off every query.
@@ -127,5 +124,4 @@ final case class Q(
 object Q {
   def apply(oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(fn, Some(oracle))
-  def noOracle(fn: (SparkSession, String) => DataFrame): Q = Q(fn, None)
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.slf4j.LoggerFactory
 
 import graft.Q
+import graft.util.Pin
 
 /** The staged-write/read pipeline — the reference's whole reason to exist
   * (`/root/reference/pandas_redshift/core.py:269-304`) re-expressed on
@@ -171,6 +172,10 @@ object Connector {
   /** ≙ `s3_to_redshift` (`core.py:220-266`): synthesize + log the masked
     * COPY command for parity, then perform its Spark equivalent — a
     * parallel schema'd CSV scan inserted into the target table.
+    * Concurrent loads into one table are serialized by a per-table lock
+    * that holds within one JVM only: two processes must not run staged
+    * appends to the same table (their commits share
+    * `<table>/_temporary/0`, and the first to commit deletes it).
     */
   def loadStaged(
       cs: ConnectorSession,
@@ -228,13 +233,14 @@ object Connector {
     // crashed append publishes nothing).
     // Round 2 staged through a throwaway parquet dir instead: one extra
     // distributed write + read per load for no additional guarantee.
-    val validated = laid.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
+    Pin.scope { p =>
+      val validated = p.frame(laid,
+        org.apache.spark.storage.StorageLevel.DISK_ONLY)
       validated.count()
       tableLock(tableName).synchronized {
         validated.write.mode(SaveMode.Append).insertInto(tableName)
       }
-    } finally validated.unpersist()
+    }
   }
 
   /** One lock per target table. Spark's file commit protocol stages every
@@ -312,7 +318,9 @@ object Connector {
     * [[withRowIndex]]); `extraKwargs` is the whitelisted staging
     * pass-through (`core.py:291-294`); `verbose` threads the reference's
     * per-call log toggle (`core.py:285,294,300,304`) down all three
-    * stages.
+    * stages. Appends to one table from one JVM are safe to run
+    * concurrently; two processes must not append to the same table
+    * (see [[loadStaged]]).
     */
   def writeTable(
       cs: ConnectorSession,

@@ -612,8 +612,8 @@ case class CooccurPairs(child: Expression, window: Int)
   * codegen replacement for the interpreted `filter(split(text), isin)`
   * lambda on every stopword/density corpus path (quality ppm, gopher,
   * language-ID densities). Null iff the text is null, matching the HOF's
-  * size(null) = null; the HOF form stays in-source as the spec-pinned
-  * reference (TextAnalysis.lexCountHof).
+  * size(null) = null; the HOF form is the spec-pinned
+  * test-scope reference (HofReference.lexCountHof).
   */
 case class LexHits(child: Expression, words: Seq[String])
     extends UnaryExpression {

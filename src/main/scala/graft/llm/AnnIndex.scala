@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.Engine
 import graft.functions.BoundParam.bind
+import graft.util.Pin
 
 /** The persisted IVF-PQ serving layout (round 13, VERDICT-r12 #1/#2):
   * train once → write a packed CODE table partitioned by coarse cell →
@@ -115,7 +116,7 @@ object AnnIndex {
     * Round 16: the codegen ResidualVec kernel (reference-object centroid
     * table) replaces the interpreted zip_with lambda — the last
     * interpreted HOF on a corpus path; LlmSpec pins element identity vs
-    * the HOF reference below.
+    * the test-scope HOF reference (AnnReference.residualsHof).
     */
   private[graft] def residuals(emb: DataFrame,
       cents: Array[Array[Double]]): DataFrame =
@@ -135,14 +136,14 @@ object AnnIndex {
     val cents = Similarity.ivfCentroids(emb, nCells, coarseIters).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
-    val resid = residuals(emb, cents)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
+    Pin.scope { p =>
+      val resid = p.frame(residuals(emb, cents),
+        org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val books = Similarity.collectBooks(
         Similarity.pqCodebooks(resid.withColumnRenamed("rv", "embedding"),
           iters, m), m)
       IvfPqModel(cents, books)
-    } finally resid.unpersist()
+    }
   }
 
   /** (vec_id, codes64, v, cell): the serving rows — assignment,

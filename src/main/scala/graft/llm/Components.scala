@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DecimalType, DoubleType, LongType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.{Engine, Q}
+import graft.util.Pin
 
 /** Connected components over the near-duplicate pair graph — the step a
   * production dedup pipeline runs AFTER pair detection: LSH/SimHash emit
@@ -114,7 +114,8 @@ object Components {
     * `createDataFrame(rdd, schema)`, graph-sized shuffle partitions,
     * AQE off inside the loop, loud non-convergence failure.
     */
-  def connectedComponentsStars(edges: DataFrame, maxIters: Int = 25): DataFrame = {
+  def connectedComponentsStars(edges: DataFrame, maxIters: Int = 25): DataFrame =
+      Pin.scope { p =>
     val spark = edges.sparkSession
     val canonAll = edges
       .select(greatest(col("d1"), col("d2")).as("a"),
@@ -129,34 +130,33 @@ object Components {
     // the caller consumes it, just to rediscover emptiness
     def emptyLabels: DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    // ONE materialization of the edge set: the persisted Row RDD feeds
-    // the loop's round-0 LogicalRDD, the self-loop split, and the count
-    val allRdd = canonAll.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val allDf = spark.createDataFrame(allRdd, schema)
+    // ONE materialization of the edge set: the pinned rows feed the
+    // loop's round-0 LogicalRDD, the self-loop split, and the count
+    val all = p.rows(canonAll, schema)
+    val allDf = all.on(spark)
     val nAll = allDf.count()
-    if (nAll == 0L) {
-      allRdd.unpersist()
-      return emptyLabels
-    }
+    if (nAll == 0L) emptyLabels
+    else {
     // self-loop vertices are incident to an edge (the contract labels
     // them) but VANISH under star contraction
     // — split them out and self-label at the end. The common case (pair
     // generators emit strict d1 < d2) pays only one count over cached
     // blocks and skips the split entirely.
     val nLoops = allDf.where(col("a") === col("b")).count()
-    val (initRdd, initCount) =
-      if (nLoops == 0L) (allRdd, nAll)
-      else (allDf.where(col("a") =!= col("b")).rdd
-        .persist(StorageLevel.MEMORY_AND_DISK), nAll - nLoops)
+    val (init, initCount) =
+      if (nLoops == 0L) (all, nAll)
+      else (p.rows(allDf.where(col("a") =!= col("b")), schema), nAll - nLoops)
     val stars: DataFrame =
       if (initCount == 0L) emptyLabels
       else {
-      // the loop returns its final persisted star-edge RDD; the labels
+      // the loop returns its final pinned star edges; the labels
       // DataFrame is then built on the PARENT session so everything
-      // downstream of connectedComponents plans under session defaults
-      val finalRdd = withGraphLoopConf(spark, initCount) { (loop, nPart) =>
-      var curRdd = initRdd
-      var cur = loop.createDataFrame(curRdd, schema)
+      // downstream of connectedComponents plans under session defaults.
+      // A throw in any round (or non-convergence) leaves the scope, which
+      // releases every round still pinned.
+      val fin = withGraphLoopConf(spark, initCount) { (loop, nPart) =>
+      var curPin = init
+      var cur = init.on(loop)
       var curCount = initCount
       var it = 0
       var done = false
@@ -180,48 +180,42 @@ object Components {
           .union(mins2.select(col("a"), col("m").as("b")))
           .distinct()
         ccRoundObserver.foreach(_(ss, nPart))
-        val nextRdd = ss.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        val next = loop.createDataFrame(nextRdd, schema)
-        val nextCount = next.count() // materializes nextRdd's blocks
+        val nextPin = p.rows(ss, schema)
+        val next = nextPin.on(loop)
+        val nextCount = next.count() // materializes the round's blocks
         // distinct canonical sets: equal count + empty anti-join ⇔ equal
         done = nextCount == curCount &&
           next.join(cur, Seq("a", "b"), "left_anti").isEmpty
-        curRdd.unpersist()
-        curRdd = nextRdd
+        p.release(curPin)
+        curPin = nextPin
         cur = next
         curCount = nextCount
         it += 1
       }
-      if (!done) {
-        // release every block this call pinned — allRdd (kept for the
-        // self-loop branch's lineage) and initRdd would otherwise stay
-        // persisted until GC of the unreferenced plans (unpersist is
-        // idempotent, so the rounds-already-released ones are free)
-        curRdd.unpersist()
-        if (!(initRdd eq allRdd)) initRdd.unpersist()
-        allRdd.unpersist()
-        throw new IllegalArgumentException(
-          s"connected components did not converge in $maxIters rounds — " +
-            "star contraction found no fixed point (pathological edge set?)")
-      }
-      curRdd
+      if (!done) throw new IllegalArgumentException(
+        s"connected components did not converge in $maxIters rounds — " +
+          "star contraction found no fixed point (pathological edge set?)")
+      curPin
       }
       // final state is min-rooted stars (a = member, b = root): labels are
       // the edges themselves plus one self-label per root — re-rooted on
-      // the parent session (finalRdd is persisted, so this costs nothing)
-      val fin = spark.createDataFrame(finalRdd, schema)
-      fin.select(col("a").as("id"), col("b").as("label"))
-        .union(fin.select(col("b")).distinct()
+      // the parent session (fin is pinned, so this costs nothing) and
+      // handed out with the labels
+      p.handOut(fin)
+      val finDf = fin.on(spark)
+      finDf.select(col("a").as("id"), col("b").as("label"))
+        .union(finDf.select(col("b")).distinct()
           .select(col("b").as("id"), col("b").as("label")))
     }
     if (nLoops == 0L) stars
     else {
-      // self-loop-only vertices label themselves; allRdd stays persisted
-      // for this lineage (reclaimed by the ContextCleaner once the
-      // returned plan is unreferenced — same policy as the labels RDD)
+      // self-loop-only vertices label themselves; the edge set is handed
+      // out with this lineage too (same policy as the labels)
+      p.handOut(all)
       val loops = allDf.where(col("a") === col("b")).select(col("a").as("id"))
       stars.union(loops.join(stars, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("label")))
+    }
     }
   }
 
@@ -251,15 +245,14 @@ object Components {
       iters: Int = pageRankIters): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"pageRank iters must be in [1, 10], got $iters")
+    Pin.scope { p =>
     val spark = verts.sparkSession
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(edges.select(col("d2").as("src"), col("d1").as("dst")))
-    val symSchema = sym.schema
-    val symRdd = sym.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = p.rows(edges.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(edges.select(col("d2").as("src"), col("d1").as("dst"))))
     val vSrc = verts.select(col("doc_id"))
     val vSchema = vSrc.schema
-    val vRdd = vSrc.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = spark.createDataFrame(vRdd, vSchema).count()
+    val v = p.rows(vSrc)
+    val n = v.on(spark).count()
     require(n > 0, "pageRank needs at least one vertex")
     // driver-side scalars, mirrored as integer SQL in the oracle
     val r0 = 1000000000L / n
@@ -267,50 +260,46 @@ object Components {
     val prSchema = StructType(Seq(
       StructField("doc_id", vSchema("doc_id").dataType),
       StructField("r", org.apache.spark.sql.types.LongType)))
-    val nEdges = symRdd.count()
-    val (finalPrRdd, degRdd, degSchema) =
+    val nEdges = sym.count()
+    val (finalPr, deg) =
       withGraphLoopConf(spark, math.max(nEdges, n)) { (loop, _) =>
-        val e = loop.createDataFrame(symRdd, symSchema)
-        val degDf = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        val degSch = degDf.schema
-        val dRdd = degDf.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        val deg = loop.createDataFrame(dRdd, degSch)
-        val v = loop.createDataFrame(vRdd, vSchema)
-        var prRdd = v.select(col("doc_id"), lit(r0).as("r")).rdd
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val e = sym.on(loop)
+        val deg = p.rows(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+        val degL = deg.on(loop)
+        val vL = v.on(loop)
+        var pr = p.rows(vL.select(col("doc_id"), lit(r0).as("r")), prSchema)
         var it = 0
         while (it < iters) {
-          val pr = loop.createDataFrame(prRdd, prSchema)
           val contrib = e
-            .join(pr.withColumnRenamed("doc_id", "src"), "src")
-            .join(deg, "src")
+            .join(pr.on(loop).withColumnRenamed("doc_id", "src"), "src")
+            .join(degL, "src")
             .select(col("dst").as("doc_id"), expr("r div deg").as("t"))
             .groupBy(col("doc_id")).agg(sum(col("t")).as("c"))
-          val nextRdd = v.join(contrib, Seq("doc_id"), "left")
+          val next = p.rows(vL.join(contrib, Seq("doc_id"), "left")
             .select(col("doc_id"),
-              (lit(base) + expr("(85 * coalesce(c, 0L)) div 100")).as("r"))
-            .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          // materialize the round BEFORE releasing its parent: nextRdd's
-          // lineage runs through prRdd's blocks
-          loop.createDataFrame(nextRdd, prSchema).count()
-          prRdd.unpersist()
-          prRdd = nextRdd
+              (lit(base) + expr("(85 * coalesce(c, 0L)) div 100")).as("r")),
+            prSchema)
+          // materialize the round BEFORE releasing its parent: the next
+          // round's lineage runs through the previous round's blocks
+          next.on(loop).count()
+          p.release(pr)
+          pr = next
           it += 1
         }
-        (prRdd, dRdd, degSch)
+        (pr, deg)
       }
-    symRdd.unpersist()
-    // re-root everything on the PARENT session (vRdd/degRdd/finalPrRdd
-    // stay persisted for the returned lineage; ContextCleaner reclaims
-    // them once the plan is unreferenced — same policy as the CC labels)
-    val pr = spark.createDataFrame(finalPrRdd, prSchema)
-    val deg = spark.createDataFrame(degRdd, degSchema)
-      .select(col("src").as("doc_id"), col("deg"))
-    spark.createDataFrame(vRdd, vSchema)
-      .join(deg, Seq("doc_id"), "left")
-      .join(pr, "doc_id")
+    p.release(sym)
+    // re-root everything on the PARENT session; the vertices, degrees
+    // and final ranks are handed out with the returned lineage (same
+    // policy as the CC labels)
+    p.handOut(v, deg, finalPr)
+    val degP = deg.on(spark).select(col("src").as("doc_id"), col("deg"))
+    v.on(spark)
+      .join(degP, Seq("doc_id"), "left")
+      .join(finalPr.on(spark), "doc_id")
       .select(col("doc_id"), coalesce(col("deg"), lit(0L)).as("deg"),
         col("r").as("rank_ppb"))
+    }
   }
 
   /** Per-vertex triangle counts + local clustering coefficient over an
@@ -628,25 +617,27 @@ object Components {
     */
   @volatile private[graft] var twoCoreLastRounds: Int = 0
 
-  def twoCore(edges: DataFrame, maxIters: Int = 96): DataFrame = {
+  def twoCore(edges: DataFrame, maxIters: Int = 96): DataFrame =
+      Pin.scope { p =>
     val spark = edges.sparkSession
     val canon = edges
       .select(least(col("d1"), col("d2")).as("a"),
         greatest(col("d1"), col("d2")).as("b"))
       .where(col("a") =!= col("b")).distinct()
     val schema = canon.schema
-    val allRdd = canon.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val nAll = spark.createDataFrame(allRdd, schema).count()
+    val all = p.rows(canon, schema)
+    val nAll = all.on(spark).count()
     val outSchema = StructType(Seq(
       StructField("doc_id", schema("a").dataType),
       StructField("core_deg", LongType, nullable = false)))
-    def emptyOut: DataFrame = spark.createDataFrame(
+    if (nAll == 0L) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    if (nAll == 0L) { allRdd.unpersist(); return emptyOut }
-    val finalRdd = withGraphLoopConf(spark, nAll) { (loop, _) =>
-      var curRdd = allRdd
-      var cur = loop.createDataFrame(curRdd, schema)
-      var curCount = nAll
+    else {
+    // a throw in any round (or non-convergence) leaves the scope, which
+    // releases every round still pinned
+    val fin = withGraphLoopConf(spark, nAll) { (loop, _) =>
+      var curPin = all
+      var cur = all.on(loop)
       var it = 0
       var done = false
       while (!done && it < maxIters) {
@@ -706,36 +697,34 @@ object Components {
           // failure — a cluster deployment of a pathological-tail peel
           // would swap in reliable checkpointing to scratch storage; the
           // per-round artifact is edge-list-sized either way.
-          val nextRdd = next.rdd.localCheckpoint()
-          val nextDf = loop.createDataFrame(nextRdd, schema)
-          val nextCount = nextDf.count()
-          curRdd.unpersist()
-          curRdd = nextRdd
+          val nextPin = p.checkpoint(next, schema)
+          val nextDf = nextPin.on(loop)
+          nextDf.count() // materializes the round's blocks
+          p.release(curPin)
+          curPin = nextPin
           cur = nextDf
-          curCount = nextCount
           it += 1
         }
       }
-      if (!done) {
-        curRdd.unpersist()
-        throw new IllegalArgumentException(
-          s"2-core peel did not converge in $maxIters rounds")
-      }
+      if (!done) throw new IllegalArgumentException(
+        s"2-core peel did not converge in $maxIters rounds")
       twoCoreLastRounds = it
-      curRdd
+      curPin
     }
-    val fin = spark.createDataFrame(finalRdd, schema)
+    val finDf = fin.on(spark)
     // materialize the VERTEX-sized degree agg eagerly so the EDGE-sized
-    // finalRdd can be released here instead of staying pinned behind the
-    // returned plan (the one-size-smaller variant of the CC-labels policy;
-    // outRdd itself is reclaimed by the ContextCleaner once unreferenced)
-    val out = fin.select(col("a").as("doc_id")).union(fin.select(col("b")))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("core_deg"))
-    val outRdd = out.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val res = spark.createDataFrame(outRdd, outSchema)
+    // final round is released here instead of staying pinned behind the
+    // returned plan (the one-size-smaller variant of the CC-labels
+    // policy; the degrees are handed out with the returned plan)
+    val out = p.rows(finDf.select(col("a").as("doc_id"))
+      .union(finDf.select(col("b")))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("core_deg")), outSchema)
+    val res = out.on(spark)
     res.count()
-    finalRdd.unpersist()
+    p.release(fin)
+    p.handOut(out)
     res
+    }
   }
 
   /** Oracle twin of one [[twoCore]] peel round, ALIVE-VERTEX form
@@ -1398,49 +1387,25 @@ object Components {
             .as(s"${v}n"))
       }
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // audit hook (VERDICT-r15 #4/#8): the rounds below execute eagerly,
-      // so a caller's explain() only ever sees the final 15-row local
-      // relation — with GRAFT_DUMP_PLANS_DIR set, each round's DISTRIBUTED
-      // plan is written aside as it is built (no cost when unset)
-      def dumpPlan(name: String, df: DataFrame): Unit =
-        sys.env.get("GRAFT_DUMP_PLANS_DIR").foreach { d =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(d, s"$name.txt"),
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-        }
-      // try/finally (ADVICE r15): a throw between persist and unpersist
-      // would leave corpus-derived frames cached in the shared bench/gate
-      // JVM — the round-12 leak class. unpersist is idempotent, so the
-      // early success-path unpersists (which bound PEAK cache pressure)
-      // stay, and the finally is a no-op when they already ran.
-      val a1 = e.groupBy(col("s")).agg(count(lit(1)).as("a")).persist(lvl)
-      var h1: DataFrame = null
-      var a2: DataFrame = null
-      try {
-        dumpPlan("q_hits_round1_a1", a1)
+      // scoped pins: a throw anywhere in the rounds leaves no
+      // corpus-derived frame cached in the shared bench/gate JVM (the
+      // round-12 leak class); the early releases bound PEAK cache pressure
+      Pin.scope { p =>
+        val a1 = p.frame(e.groupBy(col("s")).agg(count(lit(1)).as("a")), lvl)
         val t1 = totalOf(a1, "a") // materializes a1
-        h1 = e.join(normalizeLit(a1, "s", "a", t1), "s")
-          .groupBy(col("c")).agg(sum(col("an")).as("h")).persist(lvl)
-        dumpPlan("q_hits_round2_h1", h1)
+        val h1 = p.frame(e.join(normalizeLit(a1, "s", "a", t1), "s")
+          .groupBy(col("c")).agg(sum(col("an")).as("h")), lvl)
         val t2 = totalOf(h1, "h") // materializes h1
-        a1.unpersist()
-        a2 = e.join(normalizeLit(h1, "c", "h", t2), "c")
-          .groupBy(col("s")).agg(sum(col("hn")).as("a")).persist(lvl)
-        dumpPlan("q_hits_round3_a2", a2)
+        p.release(a1)
+        val a2 = p.frame(e.join(normalizeLit(h1, "c", "h", t2), "c")
+          .groupBy(col("s")).agg(sum(col("hn")).as("a")), lvl)
         val t3 = totalOf(a2, "a") // materializes a2
-        h1.unpersist()
+        p.release(h1)
         val out = normalizeLit(a2, "s", "a", t3)
           .select(col("s").as("s_suppkey"), col("an").as("auth_ppb"))
           .orderBy(col("auth_ppb").desc, col("s_suppkey")).limit(15)
-        dumpPlan("q_hits_close_top15", out)
         val rows = out.collect().toIndexedSeq // bounded: top-15
-        a2.unpersist()
         s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-      } finally {
-        a1.unpersist()
-        if (h1 != null) h1.unpersist()
-        if (a2 != null) a2.unpersist()
       }
     },
 

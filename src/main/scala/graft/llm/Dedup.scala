@@ -789,48 +789,10 @@ object Dedup {
   def embedProbeHammingFor(nPlanes: Int): Int =
     if (nPlanes <= 12) 3 else if (nPlanes <= 24) 2 else 1
 
-  /** Oracle twin of [[embedProbeHammingFor]] over the `np` CTE. */
-  val oEmbedProbeHamming: String =
-    "(CASE WHEN (SELECT n FROM np) <= 12 THEN 3 " +
-      "WHEN (SELECT n FROM np) <= 24 THEN 2 ELSE 1 END)"
-
-  /** Shared oracle CTE chain for the md5-hyperplane LSH signatures over
-    * `embeddings` (np → planes → dots → sigs) — the SQL twin of
-    * [[Similarity.lshBuckets]] at the corpus-derived [[embedPlanesFor]]
-    * plane count. Used by q_dedup_embed and q_knn_label_acc so the two
-    * gates can never desynchronize their candidate generation.
-    */
-  val oEmbedSigsCte: String =
-    s"""np AS (
-       |  -- integer-exact twin of embedPlanesFor: bit_length(buckets-1)
-       |  -- via bin() — no float log2 whose one-ulp drift at n = 8*2^k
-       |  -- could flip the plane count (and the whole candidate set)
-       |  SELECT greatest(8, cast(length(bin(
-       |    greatest(2, (count(*) + $embedDocsPerBucket - 1) // $embedDocsPerBucket) - 1)) as int)) AS n
-       |  FROM embeddings),
-       |planes AS (
-       |  SELECT g.p, gd.d,
-       |    ((instr('0123456789abcdef', substr(md5(g.p || ':' || gd.d), 1, 1)) - 1) * 4096
-       |   + (instr('0123456789abcdef', substr(md5(g.p || ':' || gd.d), 2, 1)) - 1) * 256
-       |   + (instr('0123456789abcdef', substr(md5(g.p || ':' || gd.d), 3, 1)) - 1) * 16
-       |   + (instr('0123456789abcdef', substr(md5(g.p || ':' || gd.d), 4, 1)) - 1)) / 32768.0 - 1.0 AS w
-       |  FROM (SELECT cast(unnest(range(0, (SELECT n FROM np))) as varchar) AS p) g
-       |  CROSS JOIN (SELECT cast(unnest(range(0, 64)) as varchar) AS d) gd),
-       |dots AS (
-       |  -- per-term floor-quantization to the 2^-30 grid: each term is an
-       |  -- exact BIGINT, so this sum is order-independent and bit-equal
-       |  -- to Spark's fold (raw double sums could flip a near-zero sign)
-       |  SELECT e.vec_id, pl.p,
-       |    sum(cast(floor(pl.w * e.embedding[cast(pl.d as int) + 1]::DOUBLE * 1073741824.0) as bigint)) AS dp
-       |  FROM embeddings e CROSS JOIN planes pl
-       |  GROUP BY e.vec_id, pl.p),
-       |sigs AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    cast(sum(CASE WHEN dp >= 0 THEN (1::BIGINT << cast(p as int)) ELSE 0 END) as bigint) AS bucket
-       |  FROM dots GROUP BY vec_id)""".stripMargin
-
-  /** Banded (OR-construction) twin of [[oEmbedSigsCte]]: per-band bucket
-    * signatures `bsigs(vec_id, band, bucket)` over `embedBands` ×
+  /** Oracle CTE chain for the banded (OR-construction) md5-hyperplane
+    * LSH signatures over `embeddings` (np → planes → dots → bsigs):
+    * per-band bucket signatures `bsigs(vec_id, band, bucket)` over
+    * `embedBands` ×
     * derived-planes plane families — band t of plane family p reads
     * global plane index t·np + p, exactly [[embedBandBuckets]]'s layout.
     * Shared by q_dedup_embed and q_knn_label_acc so the two gates can
@@ -885,20 +847,9 @@ object Dedup {
   private[graft] def docLines(d: DataFrame, width: Int): DataFrame =
     // round 16: the transform+slice+array_join lambda ran interpreted
     // per corpus row — the LineChunks kernel is the compiled byte-slice
-    // form; [[docLinesHof]] is the spec-pinned reference
+    // form; HofReference.docLinesHof is the spec-pinned reference
     d.select(col("doc_id"), posexplode(graft.functions.TextExpressions
         .lineChunks(col("text"), width)))
-      .select(col("doc_id"), col("pos").as("line_no"), col("col").as("line"))
-
-  /** Interpreted HOF reference of [[docLines]] — the semantic spec for
-    * [[graft.functions.LineChunks]] (LlmSpec asserts exact row identity
-    * on the corpus; the oracle SQL states the identical chunking).
-    */
-  private[graft] def docLinesHof(d: DataFrame, width: Int): DataFrame =
-    d.select(col("doc_id"), split(col("text"), " ").as("t"))
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, cast((size(t) + ${width - 1}) div $width as int) - 1), " +
-          s"i -> array_join(slice(t, i * $width + 1, $width), ' '))")))
       .select(col("doc_id"), col("pos").as("line_no"), col("col").as("line"))
 
   /** Boilerplate-line removal, rewrite form: drop every line appearing in

@@ -41,22 +41,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.arrayDot(a, b)
 
-  /** HOF reference implementation — kept as the semantic spec for
-    * [[dot]]; LlmSpec asserts they agree exactly.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Interpreted HOF reference of the micro-unit squared-norm fold — the
-    * semantic spec for [[graft.functions.QuantNorm2]] (LlmSpec asserts
-    * exact agreement on the real corpus; q_embed_norm_hist's oracle
-    * states the identical fold in DuckDB).
-    */
-  private[graft] def quantNorm2Hof(c: Column): Column =
-    aggregate(
-      transform(c, x => floor(x.cast(DoubleType) * 1000000d).cast(LongType)),
-      lit(0L), (acc, v) => acc + v * v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
@@ -122,25 +106,6 @@ object Similarity {
     emb.select(col("vec_id"), col("embedding"),
       graft.functions.VectorExpressions
         .lshBucket(toDouble(col("embedding")), nPlanes).as("bucket"))
-
-  /** HOF reference implementation of [[lshBuckets]] — kept as the
-    * semantic spec for the fused expression; LlmSpec asserts exact
-    * bucket agreement (the quantized math makes both integer-exact).
-    */
-  def lshBucketsHof(emb: DataFrame, nPlanes: Int = 8): DataFrame = {
-    val dim = 64
-    val planes = (0 until nPlanes).map(p =>
-      array((0 until dim).map(d => lit(planeComponent(p, d))): _*))
-    val v = toDouble(col("embedding"))
-    def qdot(a: Column, pl: Column): Column =
-      aggregate(zip_with(a, pl, (x, w) => floor(x * w * lit(1073741824.0))),
-        lit(0L), (acc, t) => acc + t)
-    val bits = planes.zipWithIndex.map { case (pl, i) =>
-      when(qdot(v, pl) >= 0, shiftleft(lit(1L), i)).otherwise(0L)
-    }
-    emb.select(col("vec_id"), col("embedding"),
-      bits.reduce(_ + _).as("bucket"))
-  }
 
   /** XOR probe masks for multi-probe LSH: every pattern with at most
     * `probeHamming` of `nPlanes` bits set, enumerated combinatorially —
@@ -349,25 +314,6 @@ object Similarity {
         .as("cent_id"))
   }
 
-  /** The interpreted HOF reference of [[assignToCentroids]]'s argmax —
-    * kept as the semantic spec for the NearestCentroid kernel; LlmSpec
-    * asserts exact assignment agreement on the real corpus.
-    */
-  private[graft] def assignToCentroidsHof(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val rows = cents.select(col("cent_id"), col("cv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val centsLit = typedLit(rows.map(_._2.toSeq).toSeq)
-    val idOf = map(rows.zipWithIndex.flatMap { case ((id, _), i) =>
-      Seq(lit(i), lit(id)) }.toSeq: _*)
-    val v = toDouble(col("embedding"))
-    val scores = transform(centsLit, cv =>
-      dotHof(v, cv) / (sqrt(dotHof(v, v)) * sqrt(dotHof(cv, cv))))
-    emb.select(col("vec_id"), col("embedding"),
-      element_at(idOf,
-        (array_position(scores, array_max(scores)) - 1).cast(IntegerType))
-        .as("cent_id"))
-  }
-
   /** Real k-means centroids: a deterministic lowest-id seed refined by
     * `iters` Lloyd iterations (assign → element-wise mean per cell). Each
     * iteration is one broadcast assignment pass plus ONE hash aggregate on
@@ -507,21 +453,6 @@ object Similarity {
   def dequantized: Column =
     graft.functions.VectorExpressions.dequantizeVec(
       col("codes"), col("q_min"), col("q_max"))
-
-  /** Interpreted HOF references of the three int8 kernels — kept as the
-    * semantic spec ([[graft.functions.QuantizeVec]] /
-    * [[graft.functions.QuantCodes]] / [[graft.functions.DequantizeVec]]);
-    * LlmSpec asserts exact agreement on the real corpus.
-    */
-  private[graft] def quantizeVecHof(c: Column): Column =
-    transform(c, x => floor(x.cast(DoubleType) * 1000000d).cast(LongType))
-
-  private[graft] def quantCodesHof: Column = expr(
-    """transform(__xq, (x, i) -> cast(CASE WHEN q_max[i] = q_min[i] THEN 0
-      |  ELSE ((x - q_min[i]) * 255) div (q_max[i] - q_min[i]) END as int))""".stripMargin)
-
-  private[graft] def dequantizedHof: Column =
-    expr("transform(codes, (c, i) -> q_min[i] + c * (q_max[i] - q_min[i]) / 255D)")
 
   /** Quantized-first-pass top-k: coarse ranking over int8 codes
     * ([[quantizeEmbeddings]]) selects a `shortlist`, exact float cosine
@@ -1037,7 +968,7 @@ object Similarity {
     // round 16: the AxpyVec kernel (reference-object vectors) replaces
     // the interpreted zip_with chain — the centering is s = 1 (x − 1·m is
     // bit-equal to x − m) and each deflation step is s = ⟨c, vⱼ⟩; LlmSpec
-    // pins row identity vs [[whitenEmbeddingsKHof]] on the real corpus
+    // pins row identity vs HofReference.whitenEmbeddingsKHof (test scope)
     val axpy = graft.functions.VectorExpressions.axpyVec _
     val centered = emb.select(col("vec_id"),
       axpy(toDouble(col("embedding")), lit(1.0d), model.mu).as("c"))
@@ -1045,24 +976,6 @@ object Similarity {
       val vLit = typedLit(v.toSeq)
       df.select(col("vec_id"), col("c"), dot(col("c"), vLit).as("p"))
         .select(col("vec_id"), axpy(col("c"), col("p"), v).as("c"))
-    }
-    cleaned.select(col("vec_id"), col("c").as("embedding"))
-  }
-
-  /** Interpreted HOF reference of [[whitenEmbeddingsK]] — the semantic
-    * spec for [[graft.functions.AxpyVec]] (LlmSpec asserts exact
-    * agreement on the real corpus).
-    */
-  private[graft] def whitenEmbeddingsKHof(emb: DataFrame, model: PcaModelK): DataFrame = {
-    val muLit = typedLit(model.mu.toSeq)
-    val centered = emb.select(col("vec_id"),
-      zip_with(toDouble(col("embedding")), muLit, (x, m) => x - m)
-        .as("c"))
-    val cleaned = model.components.foldLeft(centered) { (df, v) =>
-      val vLit = typedLit(v.toSeq)
-      df.select(col("vec_id"), col("c"), dot(col("c"), vLit).as("p"))
-        .select(col("vec_id"),
-          zip_with(col("c"), vLit, (x, vv) => x - col("p") * vv).as("c"))
     }
     cleaned.select(col("vec_id"), col("c").as("embedding"))
   }
@@ -1736,7 +1649,7 @@ object Similarity {
         |FROM n2 GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, dir) =>
       // round 16: QuantNorm2 kernel (one compiled loop) replaces the
       // interpreted transform+aggregate per-row chain; fold identity vs
-      // [[quantNorm2Hof]] is spec-pinned (LlmSpec)
+      // HofReference.quantNorm2Hof (test scope) is spec-pinned (LlmSpec)
       Engine.table(s, dir, "embeddings")
         .select(graft.functions.VectorExpressions
           .quantNorm2(toDouble(col("embedding"))).as("norm2"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Engine, Q}
+import graft.util.Pin
 
 /** Text analytics for LLM-data pipelines over the `documents` table
   * (BASELINE.json north star; not present in the reference — `EXT` in
@@ -297,38 +298,39 @@ object TextAnalysis {
 
   /** Run up to `rounds` BPE training rounds over the weighted histogram
     * `seqs0` (stops early if the vocabulary fuses out of pairs).
-    * Per-round persist (measured 3.6 → 2.9 s at sf0.1 in the
+    * Per-round cache (measured 3.6 → 2.9 s at sf0.1 in the
     * per-instance era; the histogram rows are vocab-sized, so the cache
     * is tiny now): round k+1's pair count reads round k's cached
     * sequences instead of replaying the whole regexp+replace chain;
     * each round's blocks release as soon as the NEXT round's cache is
     * materialized (the pageRank round discipline). Returns (adopted
     * merges, the post-final-merge sequence plan — one narrow projection
-    * over the last cached round — and that pinned cache, which the
-    * CALLER must unpersist after consuming the plan).
+    * over the last cached round, which stays pinned in `p` until the
+    * caller's scope exits).
     */
-  private[graft] def bpeTrain(seqs0: DataFrame, rounds: Int = 3)
-      : (Seq[(Int, String, Long)], DataFrame, Option[DataFrame]) = {
+  private[graft] def bpeTrain(p: Pin.Scope, seqs0: DataFrame, rounds: Int = 3)
+      : (Seq[(Int, String, Long)], DataFrame) = {
     var seqs = seqs0
     var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var k = 1
     var exhausted = false
     while (k <= rounds && !exhausted) {
-      val cached = seqs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cached = p.frame(seqs,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       bpeBestPair(cached) match { // action — materializes `cached`
         case Some((pair, n)) =>
-          prev.foreach(_.unpersist())
+          prev.foreach(p.release)
           prev = Some(cached)
           seqs = bpeApplyMerge(cached, pair)
           merges += ((k, pair, n))
           k += 1
         case None =>
-          cached.unpersist()
+          p.release(cached)
           exhausted = true
       }
     }
-    (merges.toSeq, seqs, prev)
+    (merges.toSeq, seqs)
   }
 
   // ---- formulas shared between their defining query and the composed
@@ -687,24 +689,10 @@ object TextAnalysis {
   def cooccurPairs(d: DataFrame, window: Int = cooccurWindow): DataFrame =
     // round 16: the nested transform+flatten lambda ran interpreted per
     // corpus row — the CooccurPairs kernel is the compiled form
-    // (byte-slice pairs, identical order); [[cooccurPairsHof]] is the
-    // spec-pinned reference
+    // (byte-slice pairs, identical order); HofReference.cooccurPairsHof
+    // is the spec-pinned reference
     d.select(explode(graft.functions.TextExpressions
       .cooccurPairs(col("text"), window)).as("pair"))
-
-  /** Interpreted HOF reference of [[cooccurPairs]] — the semantic spec
-    * for [[graft.functions.CooccurPairs]] (LlmSpec asserts exact pair
-    * rows on the corpus; the oracle SQL states the identical nesting).
-    */
-  private[graft] def cooccurPairsHof(d: DataFrame, window: Int = cooccurWindow): DataFrame =
-    d.select(split(col("text"), " ").as("t"))
-      .select(explode(expr(
-        s"""CASE WHEN size(t) >= 2 THEN
-           |  flatten(transform(sequence(1, size(t) - 1),
-           |    i -> transform(
-           |      sequence(i + 1, least(i + $window, size(t))),
-           |      j -> concat(element_at(t, i), ' ', element_at(t, j)))))
-           |ELSE array() END""".stripMargin)).as("pair"))
 
   /** Gopher rule-filter thresholds (Rae et al. 2021 table A1, ppm-scaled
     * where the paper uses ratios) — shared with the oracle SQL.
@@ -725,8 +713,8 @@ object TextAnalysis {
     // — tokCount/alphaHits kernels plus the exact Σlen identity
     // (every char is a token char or one of the n_tok−1 single-space
     // delimiters, so Σ token length = length(text) − (n_tok − 1),
-    // empty-token cases included). HOF references: [[tokCountHof]] /
-    // [[sumLenHof]] / [[alphaCntHof]], spec-pinned on the corpus.
+    // empty-token cases included). HOF references (test scope): HofReference.tokCountHof /
+    // sumLenHof / alphaCntHof, spec-pinned on the corpus.
     val nTok = graft.functions.TextExpressions.tokCount(col("text"))
     val sumLen = length(col("text")).cast(LongType) - (nTok - 1L)
     val alphaCnt = graft.functions.TextExpressions.alphaHits(col("text"))
@@ -802,25 +790,11 @@ object TextAnalysis {
 
   // round 16: the filter(split, isin) HOF ran an interpreted per-token
   // predicate on every stopword/density corpus path — the LexHits byte
-  // scan is the codegen form; [[lexCountHof]] stays as the spec-pinned
+  // scan is the codegen form; HofReference.lexCountHof is the spec-pinned
   // semantic reference (TextStatsSpec pins bit-identity on the corpus)
   private[llm] def lexCount(lang: String): Column =
     graft.functions.TextExpressions.lexHits(col("text"), lexicons(lang))
       .cast(DoubleType)
-  private[graft] def lexCountHof(lang: String): Column = {
-    val words = lexicons(lang)
-    size(filter(toks, x => x.isin(words: _*))).cast(DoubleType)
-  }
-  /** HOF/split references of the round-16 text-stat kernels and the Σlen
-    * identity (spec-pinned semantic twins of tokCount / the
-    * length-minus-delimiters sum / alphaHits).
-    */
-  private[graft] def tokCountHof: Column = size(toks).cast(LongType)
-  private[graft] def sumLenHof: Column =
-    aggregate(transform(toks, x => length(x).cast(LongType)),
-      lit(0L), (a, x) => a + x)
-  private[graft] def alphaCntHof: Column =
-    size(filter(toks, x => x.rlike("^[a-z]+$"))).cast(LongType)
   private[llm] def oLexCount(lang: String): String = {
     val in = lexicons(lang).map(w => s"'$w'").mkString(", ")
     s"cast(len(list_filter(string_split(text, ' '), x -> x IN ($in))) as double)"
@@ -1766,15 +1740,16 @@ object TextAnalysis {
          |WHERE round <= (SELECT b FROM bud)
          |ORDER BY round""".stripMargin) { (s, dir) =>
       val d = docs(s, dir)
-      // persist the histogram so the budget count and the trainer's
-      // first argmax share ONE corpus pass (bpeTrain's round-1 persist
-      // is the same cache entry; its prev-chain releases it)
-      val seqs = bpeSeqs(d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (merges, _, pinned) = bpeTrain(seqs, rounds = bpeBudgetFor(seqs))
-      pinned.foreach(_.unpersist())
-      s.createDataFrame(merges).toDF("round", "pair", "n")
-        .orderBy(col("round"))
+      Pin.scope { p =>
+        // cache the histogram so the budget count and the trainer's
+        // first argmax share ONE corpus pass (bpeTrain's round-1 pin is
+        // the same cache entry; its round chain releases it)
+        val seqs = p.frame(bpeSeqs(d),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (merges, _) = bpeTrain(p, seqs, rounds = bpeBudgetFor(seqs))
+        s.createDataFrame(merges).toDF("round", "pair", "n")
+          .orderBy(col("round"))
+      }
     },
 
     // BPE ENCODE (round 10, closes the tokenizer loop; histogram form +
@@ -1816,27 +1791,27 @@ object TextAnalysis {
          |       // sum(len(replace(seq, ' ', '')) * cnt) as bigint) AS ratio_ppm
          |FROM s$bpeMaxRounds GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
       val d = docs(s, dir)
-      val seqs = bpeSeqs(d, keep = Seq("lang"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (_, encoded, pinned) =
-        bpeTrain(seqs, rounds = bpeBudgetFor(seqs))
-      val out = encoded
-        .groupBy(col("lang"))
-        .agg(sum(col("cnt")).as("n_words"),
-          sum(length(org.apache.spark.sql.functions.replace(
-            col("seq"), lit(" "), lit(""))) * col("cnt")).as("n_char_syms"),
-          sum(size(split(col("seq"), " ")).cast(LongType) * col("cnt"))
-            .as("n_bpe_tokens"))
-        .select(col("lang"), col("n_words"), col("n_char_syms"),
-          col("n_bpe_tokens"),
-          expr("cast((cast(n_bpe_tokens as decimal(38,0)) * 1000000)" +
-            " div n_char_syms as bigint)").as("ratio_ppm"))
-        .orderBy(col("lang"))
-      // materialize before releasing the last training round's cache
-      // (the encode plan reads it); result is lang-domain-sized
-      val rows = out.collect().toIndexedSeq
-      pinned.foreach(_.unpersist())
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      Pin.scope { p =>
+        val seqs = p.frame(bpeSeqs(d, keep = Seq("lang")),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (_, encoded) = bpeTrain(p, seqs, rounds = bpeBudgetFor(seqs))
+        val out = encoded
+          .groupBy(col("lang"))
+          .agg(sum(col("cnt")).as("n_words"),
+            sum(length(org.apache.spark.sql.functions.replace(
+              col("seq"), lit(" "), lit(""))) * col("cnt")).as("n_char_syms"),
+            sum(size(split(col("seq"), " ")).cast(LongType) * col("cnt"))
+              .as("n_bpe_tokens"))
+          .select(col("lang"), col("n_words"), col("n_char_syms"),
+            col("n_bpe_tokens"),
+            expr("cast((cast(n_bpe_tokens as decimal(38,0)) * 1000000)" +
+              " div n_char_syms as bigint)").as("ratio_ppm"))
+          .orderBy(col("lang"))
+        // materialize before the scope releases the last training round's
+        // cache (the encode plan reads it); result is lang-domain-sized
+        val rows = out.collect().toIndexedSeq
+        s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      }
     },
 
     // Count-min-sketch heavy hitters (round 7) — completes the sketch

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Engine, Q}
+import graft.util.Pin
 
 /** Event-log analytics: gap sessionization, ordered funnels, retention
   * cohorts. Not present in the reference (its event-ish surface is raw SQL
@@ -161,20 +162,6 @@ object EventAnalytics {
       .orderBy(col("user_id"), col("rk"))
   }
 
-  // per-(session, input-plan) memo of the persisted distinct interaction
-  // table: every registry invocation (Bench warmup + two timed passes +
-  // the gate) previously persisted a FRESH corpus-sized frame and never
-  // unpersisted it — the shared-JVM ambient-cost leak round-12 ADVICE
-  // flagged. The Components.simhashPairs discipline applied to a cached
-  // FRAME instead of a parquet dir: one persisted table per dataset per
-  // JVM, every consumer reads it.
-  // keyed on the FULL canonicalized plan string, not its 32-bit
-  // semanticHash (ADVICE-r13: an Int collision between two datasets in
-  // one shared bench/gate JVM would silently serve the wrong corpus's
-  // cached table) — one string per dataset per JVM, bytes are irrelevant
-  private val seenMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   def negativeSamplingUser(e: DataFrame,
       bucketItems: Long = negSamplingUserBucketItems, k: Int = 2): DataFrame = {
     val ev = e.select(col("user_id"), propsItem.as("item"))
@@ -184,10 +171,11 @@ object EventAnalytics {
     // persisted distinct interaction table — the raw plan re-parsed the
     // 10M-row props column four times and that, not the draw, was the
     // 100× cost (BenchOne: 65-105 s → ~9 s)
-    val seen = seenMemo.getOrElseUpdate(
-      (e.sparkSession, ev.queryExecution.analyzed.canonicalized.toString),
-      ev.distinct()
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    // memoized per (session, dataset): every registry invocation (Bench
+    // warm-up, two timed passes, the gate) reads one cached table per
+    // dataset per JVM instead of caching a fresh corpus-sized frame each
+    val seen = Pin.memo(ev.distinct(),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val it = seen.select(col("item")).distinct()
     // one bounded catalog count derives the bucket grid — the same count
     // the oracle's `nb` CTE states, so both engines land on the same B

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.{Engine, Q}
+import graft.util.Pin
 
 /** Scale utilities for the 100 TB operating point: skew-salted joins and
   * bucketed co-located joins. Correctness-neutral plan rewrites — the
@@ -128,7 +129,7 @@ object Scale {
     * 1 PRECEDING)` window this plan refuses to run globally.
     */
   def minAboveStrict(pairs: DataFrame, k: String, v: String,
-      parts: Int = 32): DataFrame = {
+      parts: Int = 32): DataFrame = Pin.scope { p =>
     val sorted = pairs.select(col(k), col(v))
       .repartitionByRange(parts, col(k).desc)
       .sortWithinPartitions(col(k).desc)
@@ -147,11 +148,10 @@ object Scale {
     // that shifts by one key between the two executions pairs pids with
     // the WRONG prefix map (observed: one spurious skyline survivor at
     // sf0.01, nonreproducible run to run). The persisted blocks pin one
-    // partitioning for both; the ContextCleaner reclaims them once the
-    // caller's plan is unreferenced (the CC-labels policy).
-    val withinRdd = withinPlan.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val within = pairs.sparkSession.createDataFrame(withinRdd, withinPlan.schema)
+    // partitioning for both; they are handed out with the caller's plan
+    // (the CC-labels policy).
+    val pinned = p.rows(withinPlan)
+    val within = pinned.on(pairs.sparkSession)
     // P rows to the driver — partition-count-bounded, like Spark's own
     // range-boundary sampling
     val partMins = within.groupBy(col("__pid"))
@@ -171,6 +171,7 @@ object Scale {
       new org.apache.spark.sql.types.StructType()
         .add("__pid", IntegerType, nullable = false)
         .add("__prefmin", LongType, nullable = true))
+    p.handOut(pinned)
     within.join(broadcast(pm), Seq("__pid"), "left")
       .withColumn("min_above", least(col("__above_in_part"), col("__prefmin")))
       .select(col(k), col(v), col("min_above"))
@@ -364,7 +365,8 @@ object Scale {
     * sampled partitioning. Emits the input columns plus `nxt` (null for
     * the global maximum).
     */
-  def leadGlobal(df: DataFrame, k: String, parts: Int = 32): DataFrame = {
+  def leadGlobal(df: DataFrame, k: String, parts: Int = 32): DataFrame =
+      Pin.scope { p =>
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(parts, col(k))
       .sortWithinPartitions(col(k))
@@ -372,9 +374,8 @@ object Scale {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(col(k))
     val withinPlan = sorted.withColumn("__lead", lead(col(k), 1).over(w))
-    val withinRdd = withinPlan.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val within = spark.createDataFrame(withinRdd, withinPlan.schema)
+    val pinned = p.rows(withinPlan)
+    val within = pinned.on(spark)
     val heads = within.groupBy(col("__pid")).agg(min(col(k)).as("__h"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     // pid -> head of the NEXT non-empty partition (range order = pid order)
@@ -388,6 +389,7 @@ object Scale {
       new org.apache.spark.sql.types.StructType()
         .add("__pid", IntegerType, nullable = false)
         .add("__nxthead", LongType, nullable = true))
+    p.handOut(pinned)
     within.join(broadcast(nh), Seq("__pid"), "left")
       .withColumn("nxt", coalesce(col("__lead"), col("__nxthead")))
       .drop("__pid", "__lead", "__nxthead")

@@ -235,8 +235,6 @@ object Stats {
         |       ELSE ((n_gaps * sg2 - sg * sg) * 1000000) // (sg * sg) END
         |    as bigint) AS cv2_ppm
         |FROM m ORDER BY event_type""".stripMargin) { (s, dir) =>
-      val wu = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts"), col("event_id"))
       events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
         .withColumn("gap_s",

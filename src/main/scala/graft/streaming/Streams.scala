@@ -564,12 +564,22 @@ object Streams {
     // The caller passes one stable id per (stream, checkpoint) lineage;
     // reusing a streamId with a fresh checkpoint is the one remaining
     // misuse and is documented on [[streamingAnnIngest]].
-    val dir = s"$path/ingest_log/stream=${sanitizeId(streamId)}"
-    val marker = new java.io.File(s"$dir/batch=$batchId")
-    if (marker.exists()) return
-    if (!batch.isEmpty) graft.llm.AnnIndex.appendToIndex(batch, path)
-    marker.mkdirs()
-    ()
+    appendOncePerBatch(path, streamId, batch, batchId)(
+      graft.llm.AnnIndex.appendToIndex(_, path))
+  }
+
+  /** The batch-marker discipline both index ingests share: skip a batch
+    * whose marker `path/ingest_log/stream=<id>/batch=<batchId>` exists,
+    * `append` a non-empty batch, then write the marker.
+    */
+  private def appendOncePerBatch(path: String, streamId: String,
+      batch: DataFrame, batchId: Long)(append: DataFrame => Unit): Unit = {
+    val marker = new java.io.File(
+      s"$path/ingest_log/stream=${sanitizeId(streamId)}/batch=$batchId")
+    if (!marker.exists()) {
+      if (!batch.isEmpty) append(batch)
+      marker.mkdirs(): Unit
+    }
   }
 
   /** Marker-path hygiene: stream ids are caller-supplied strings — keep
@@ -648,14 +658,9 @@ object Streams {
     */
   def bandIngestBatchHandler(path: String,
       streamId: String = "default")(batch: DataFrame,
-      batchId: Long): Unit = {
-    val dir = s"$path/ingest_log/stream=${sanitizeId(streamId)}"
-    val marker = new java.io.File(s"$dir/batch=$batchId")
-    if (marker.exists()) return
-    if (!batch.isEmpty) graft.llm.Dedup.appendToBandIndex(batch, path)
-    marker.mkdirs()
-    ()
-  }
+      batchId: Long): Unit =
+    appendOncePerBatch(path, streamId, batch, batchId)(
+      graft.llm.Dedup.appendToBandIndex(_, path))
 
   /** Streaming band-index INGEST (s_band_ingest): the WRITE-path twin of
     * [[streamingBandDedup]] — that op PROBES the persisted band index;

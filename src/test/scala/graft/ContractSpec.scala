@@ -50,6 +50,23 @@ class ContractSpec extends AnyFunSuite {
     }.toSet === store)
   }
 
+  test("cached rows are pinned and released only by the pin owner") {
+    // one owner, three lifetimes (scoped, returned, memoized): a persist,
+    // unpersist, localCheckpoint or cache call belongs in util/Pin
+    // instead, so no site invents its own release rule
+    val root = new java.io.File("src/main/scala")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val sources = walk(root).map(f =>
+      root.toPath.relativize(f.toPath).toString ->
+        java.nio.file.Files.readString(f.toPath))
+    val calls = Seq(".persist(", ".unpersist(", ".localCheckpoint(", ".cache(")
+    assert(sources.collect {
+      case (p, s) if calls.exists(s.contains) => p
+    }.toSet === Set("graft/util/Pin.scala"))
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracles without queries: $missing")

@@ -126,6 +126,25 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("a cc round that throws leaves no rows cached: the scope releases every round") {
+    import spark.implicits._
+    // a throw inside the loop used to leave the edge list and the current
+    // round pinned in the shared JVM; the pin scope releases both
+    val chain = (0L until 120L).map(i => (i, i + 1)).toDF("d1", "d2")
+    var rounds = 0
+    Components.ccRoundObserver = Some { (_, _) =>
+      rounds += 1
+      if (rounds == 2) throw new IllegalStateException("round 2 failed")
+    }
+    val added = try graft.Pins.addedBy(spark) {
+      val e = intercept[IllegalStateException](
+        Components.connectedComponents(chain))
+      assert(e.getMessage === "round 2 failed")
+    } finally Components.ccRoundObserver = None
+    assert(rounds === 2)
+    assert(added.isEmpty, s"rdds left persisted by a failed cc loop: $added")
+  }
+
   test("10^6-edge star (one hot vertex) converges within a tight round budget") {
     // maximal skew: vertex 0 has degree 10^6, every other vertex degree 1
     // — large-star's neighborhood groupBy sees ONE key carrying the whole

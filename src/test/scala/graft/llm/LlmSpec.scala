@@ -454,7 +454,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("fused LshBucket equals the HOF qdot chain on every corpus vector") {
     val native = Similarity.lshBuckets(emb, nPlanes = 8).select("vec_id", "bucket")
-    val hof = Similarity.lshBucketsHof(emb, nPlanes = 8).select("vec_id", "bucket")
+    val hof = HofReference.lshBucketsHof(emb, nPlanes = 8).select("vec_id", "bucket")
     assert(native.count() == hof.count())
     assert(native.except(hof).isEmpty && hof.except(native).isEmpty)
     // dimension mismatch → null bucket (no defined hyperplane projection)
@@ -546,15 +546,15 @@ class LlmSpec extends AnyFunSuite {
     val kq = emb.select(col("vec_id"),
       VectorExpressions.quantizeVec(Similarity.toDouble(col("embedding"))).as("xq"))
     val hq = emb.select(col("vec_id"),
-      Similarity.quantizeVecHof(col("embedding")).as("xq"))
+      HofReference.quantizeVecHof(col("embedding")).as("xq"))
     assert(kq.except(hq).isEmpty && hq.except(kq).isEmpty)
     // full pipeline: codes AND reconstructed doubles, kernel vs HOF chain
-    val hofQ = emb.withColumn("__xq", Similarity.quantizeVecHof(col("embedding")))
+    val hofQ = emb.withColumn("__xq", HofReference.quantizeVecHof(col("embedding")))
     val hofStats = hofQ.agg(VectorExpressions.vectorMinMax(col("__xq")).as("mm"))
       .select(col("mm").getItem(0).as("q_min"), col("mm").getItem(1).as("q_max"))
     val hofFull = hofQ.crossJoin(broadcast(hofStats))
-      .withColumn("codes", Similarity.quantCodesHof)
-      .withColumn("dq", Similarity.dequantizedHof)
+      .withColumn("codes", HofReference.quantCodesHof)
+      .withColumn("dq", HofReference.dequantizedHof)
       .select("vec_id", "codes", "dq")
     val kernelFull = Similarity.quantizeEmbeddings(emb, keepStats = true)
       .withColumn("dq", Similarity.dequantized)
@@ -569,7 +569,7 @@ class LlmSpec extends AnyFunSuite {
       .toDF("__xq", "q_min", "q_max")
     val viaKernel = edge.select(VectorExpressions
       .quantCodes(col("__xq"), col("q_min"), col("q_max")).as("codes"))
-    val viaHof = edge.select(Similarity.quantCodesHof.as("codes"))
+    val viaHof = edge.select(HofReference.quantCodesHof.as("codes"))
     assert(viaKernel.except(viaHof).isEmpty && viaHof.except(viaKernel).isEmpty)
     val got = viaKernel.head().getSeq[Any](0)
     assert(got(0) == 127 && got(1) == 0 && got(2) == 0,
@@ -579,7 +579,7 @@ class LlmSpec extends AnyFunSuite {
       Seq(0L, 3L, 7L), Seq(10L, 3L, 7L)))
       .toDF("codes", "q_min", "q_max")
     val dqKernel = edgeDq.select(Similarity.dequantized.as("dq"))
-    val dqHof = edgeDq.select(Similarity.dequantizedHof.as("dq"))
+    val dqHof = edgeDq.select(HofReference.dequantizedHof.as("dq"))
     assert(dqKernel.except(dqHof).isEmpty && dqHof.except(dqKernel).isEmpty)
   }
 
@@ -685,7 +685,7 @@ class LlmSpec extends AnyFunSuite {
     val kernel = Similarity.assignToCentroids(emb, cents)
       .select("vec_id", "cent_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hof = Similarity.assignToCentroidsHof(emb, cents)
+    val hof = HofReference.assignToCentroidsHof(emb, cents)
       .select("vec_id", "cent_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kernel === hof)
@@ -725,10 +725,10 @@ class LlmSpec extends AnyFunSuite {
           .as("sumlen"))): _*)
     val hof = docs.select(col("doc_id") +:
       (TextAnalysis.lexicons.keys.toSeq.sorted.map(l =>
-        TextAnalysis.lexCountHof(l).as(s"lex_$l")) ++ Seq(
-        TextAnalysis.alphaCntHof.as("alpha"),
-        TextAnalysis.tokCountHof.as("ntok"),
-        TextAnalysis.sumLenHof.as("sumlen"))): _*)
+        HofReference.lexCountHof(l).as(s"lex_$l")) ++ Seq(
+        HofReference.alphaCntHof.as("alpha"),
+        HofReference.tokCountHof.as("ntok"),
+        HofReference.sumLenHof.as("sumlen"))): _*)
     assert(kernel.except(hof).isEmpty && hof.except(kernel).isEmpty)
     assert(kernel.count() === docs.count())
     // edge shapes split() is picky about: empty text, leading/trailing/
@@ -741,9 +741,9 @@ class LlmSpec extends AnyFunSuite {
       TextAnalysis.lexCount("zh").as("z"),
       graft.functions.TextExpressions.alphaHits(col("text")).as("a"),
       graft.functions.TextExpressions.tokCount(col("text")).as("n"))
-    val eh = edge.select(col("doc_id"), TextAnalysis.lexCountHof("en").as("l"),
-      TextAnalysis.lexCountHof("zh").as("z"),
-      TextAnalysis.alphaCntHof.as("a"), TextAnalysis.tokCountHof.as("n"))
+    val eh = edge.select(col("doc_id"), HofReference.lexCountHof("en").as("l"),
+      HofReference.lexCountHof("zh").as("z"),
+      HofReference.alphaCntHof.as("a"), HofReference.tokCountHof.as("n"))
     assert(ek.except(eh).isEmpty && eh.except(ek).isEmpty)
     assert(ek.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq == Seq(
       Seq(1L, 0.0, 0.0, 0L, 1L), Seq(2L, 0.0, 0.0, 0L, 2L),
@@ -754,12 +754,12 @@ class LlmSpec extends AnyFunSuite {
   test("LineChunks / CooccurPairs kernels equal the HOF chains row-for-row (round 16)") {
     // docLines: exact (doc_id, line_no, line) identity on the corpus
     val lk = Dedup.docLines(docs, 3)
-    val lh = Dedup.docLinesHof(docs, 3)
+    val lh = HofReference.docLinesHof(docs, 3)
     assert(lk.except(lh).isEmpty && lh.except(lk).isEmpty)
     assert(lk.count() === lh.count() && lk.count() > 0)
     // cooccur pairs: exact pair multiset (count per pair) on the corpus
     val pk = TextAnalysis.cooccurPairs(docs).groupBy(col("pair")).count()
-    val ph = TextAnalysis.cooccurPairsHof(docs).groupBy(col("pair")).count()
+    val ph = HofReference.cooccurPairsHof(docs).groupBy(col("pair")).count()
     assert(pk.except(ph).isEmpty && ph.except(pk).isEmpty)
     // edge shapes: 1 token (empty pairs), empty text, short tail chunk,
     // window clamp at the end, empty tokens from double spaces
@@ -767,12 +767,12 @@ class LlmSpec extends AnyFunSuite {
     val edge = Seq((1L, "a"), (2L, ""), (3L, "a b c d e f g"),
       (4L, "x  y")).toDF("doc_id", "text")
     val ek = TextAnalysis.cooccurPairs(edge).collect().map(_.getString(0)).toSeq
-    val eh = TextAnalysis.cooccurPairsHof(edge).collect().map(_.getString(0)).toSeq
+    val eh = HofReference.cooccurPairsHof(edge).collect().map(_.getString(0)).toSeq
     assert(ek.sorted === eh.sorted)
     assert(ek.contains("x ") && ek.contains(" y")) // empty middle token pairs
     val ck = Dedup.docLines(edge, 3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
-    val ch = Dedup.docLinesHof(edge, 3).collect()
+    val ch = HofReference.docLinesHof(edge, 3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
     assert(ck === ch)
     assert(ck.map(_._3).contains("a b c") && ck.map(_._3).contains("d e f")
@@ -844,7 +844,7 @@ class LlmSpec extends AnyFunSuite {
       Similarity.toDouble(col("embedding")))).head().getInt(0)
     val model = Similarity.pcaModelK(emb, Similarity.whitenComponentsFor(dim))
     val kernel = Similarity.whitenEmbeddingsK(emb, model)
-    val hof = Similarity.whitenEmbeddingsKHof(emb, model)
+    val hof = HofReference.whitenEmbeddingsKHof(emb, model)
     // exact row identity on the real corpus — centering (s = 1) and every
     // deflation projection (per-row s) reproduce the zip_with doubles
     // bit-for-bit
@@ -876,7 +876,7 @@ class LlmSpec extends AnyFunSuite {
       graft.functions.VectorExpressions
         .quantNorm2(Similarity.toDouble(col("embedding"))).as("n2"))
     val hof = emb.select(col("vec_id"),
-      Similarity.quantNorm2Hof(col("embedding")).as("n2"))
+      HofReference.quantNorm2Hof(col("embedding")).as("n2"))
     assert(kernel.except(hof).isEmpty && hof.except(kernel).isEmpty)
     assert(kernel.count() === emb.count())
     // fold edges: empty array → 0; any null element poisons to null
@@ -1174,6 +1174,43 @@ class LlmSpec extends AnyFunSuite {
     assert(!servePlan.contains("embeddings.parquet"), servePlan)
   }
 
+  test("MIPS serve ranks by inner product on norm-skewed embeddings, apart from the cosine serve") {
+    // the test corpus is unit-norm, where inner product and cosine rank
+    // alike; scaling every other vector by 3 makes magnitude matter, so
+    // a MIPS serve scoring by cosine (or the reverse) cannot pass here
+    val skewed = emb.select(col("vec_id"),
+      when(col("vec_id") % 2 === 1L,
+        transform(col("embedding"), x => x * lit(3.0f)))
+        .otherwise(col("embedding")).as("embedding"))
+    val path = java.nio.file.Files.createTempDirectory("graft_mips_skew")
+      .toString
+    try {
+      val model = AnnIndex.writeIndex(skewed, path)
+      val rows = spark.read.schema(AnnIndex.artifactSchemas("rows"))
+        .parquet(s"$path/rows")
+      val n = skewed.count()
+      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+        df.select("vec_id").collect().map(_.getLong(0)).toSet
+      val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
+      val recalls = queryIds.map { q =>
+        val exact = ids(Similarity.mipsTopK(skewed, q, 10))
+        val got = ids(AnnIndex.mipsTopKFromCodes(skewed, rows, rows, model,
+          q, 10, n))
+        exact.intersect(got).size.toDouble / exact.size
+      }
+      val mean = recalls.sum / recalls.size
+      info(s"norm-skewed MIPS recalls: $recalls (mean $mean)")
+      assert(mean >= 0.8, s"MIPS recall $mean < 0.8 ($recalls)")
+      queryIds.foreach { q =>
+        val mips = ids(AnnIndex.mipsTopKFromCodes(skewed, rows, rows, model,
+          q, 10, n))
+        val cosine = ids(AnnIndex.serveTopK(spark, path, skewed, q, 10))
+        assert(mips != cosine,
+          s"query $q: MIPS and cosine serves returned the same ids $mips")
+      }
+    } finally graft.util.Fs.deleteRecursively(path)
+  }
+
   test("batched IVF-PQ serve equals 16 single-query serves bit-for-bit") {
     // the batch path regroups the ADC sums but keeps the same
     // left-to-right subspace order and the same per-pair tables, so
@@ -1405,7 +1442,7 @@ class LlmSpec extends AnyFunSuite {
       .toDF("id", "a", "b")
     val both = df.select(col("id"),
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof"))
+      HofReference.dotHof(col("a"), col("b")).as("hof"))
       .collect().map(r => (r.getLong(0), r.get(1), r.get(2))).toSeq.sortBy(_._1)
     both.foreach { case (id, native, hof) =>
       assert(native == hof, s"id=$id: native=$native hof=$hof")
@@ -1517,7 +1554,7 @@ class LlmSpec extends AnyFunSuite {
   test("codegen ArrayDot agrees exactly with the HOF reference fold") {
     val v = Similarity.toDouble(col("embedding"))
     val diff = emb.select(
-      (Similarity.dot(v, reverse(v)) - Similarity.dotHof(v, reverse(v))).as("d"))
+      (Similarity.dot(v, reverse(v)) - HofReference.dotHof(v, reverse(v))).as("d"))
       .filter(col("d") =!= 0.0).count()
     assert(diff == 0)
   }
@@ -1527,7 +1564,7 @@ class LlmSpec extends AnyFunSuite {
       Seq(graft.functions.RewriteHofDotProduct)
     try {
       val v = Similarity.toDouble(col("embedding"))
-      val df = emb.select(Similarity.dotHof(v, reverse(v)).as("d"))
+      val df = emb.select(HofReference.dotHof(v, reverse(v)).as("d"))
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("arraydot") || optimized.contains("ArrayDot"),
         s"HOF pattern not rewritten:\n$optimized")
@@ -2067,11 +2104,12 @@ class LlmSpec extends AnyFunSuite {
     // round 2 adopts... verify against a hand replay of the exact chain
     val tiny = Seq((1L, "en", "abc abc ab"), (2L, "en", "abc aaa"))
       .toDF("doc_id", "lang", "text")
-    val (merges, enc, pinned) =
-      TextAnalysis.bpeTrain(TextAnalysis.bpeSeqs(tiny, keep = Seq("lang")))
-    val encRows = enc.select("lang", "seq", "cnt")
-      .as[(String, String, Long)].collect().toSeq
-    pinned.foreach(_.unpersist())
+    val (merges, encRows) = graft.util.Pin.scope { p =>
+      val (merges, enc) = TextAnalysis.bpeTrain(p,
+        TextAnalysis.bpeSeqs(tiny, keep = Seq("lang")))
+      (merges, enc.select("lang", "seq", "cnt")
+        .as[(String, String, Long)].collect().toSeq)
+    }
     // hand replay over the WEIGHTED histogram (round 11): vocab
     // abc(cnt 3), ab(1), aaa(1)
     // pairs r1: 'a b' 3+1=4, 'b c' 3, 'a a' 2 -> adopt 'a b' (count desc)

@@ -1837,9 +1837,10 @@ class StreamingSpec extends AnyFunSuite {
     // vocab-derived budget the batch operator uses), ship it as plan
     // literals — the stream applies the identical replace() chain
     val seqs = graft.llm.TextAnalysis.bpeSeqs(d)
-    val (merges, _, pinned) = graft.llm.TextAnalysis.bpeTrain(
-      seqs, rounds = graft.llm.TextAnalysis.bpeBudgetFor(seqs))
-    pinned.foreach(_.unpersist())
+    val (merges, _) = graft.util.Pin.scope { p =>
+      graft.llm.TextAnalysis.bpeTrain(p,
+        seqs, rounds = graft.llm.TextAnalysis.bpeBudgetFor(seqs))
+    }
     val mem = MemoryStream[(Long, String, String)]
     val q = Streams.streamingBpeEncode(
         mem.toDF().toDF("doc_id", "lang", "text"), merges.map(_._2))
