@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions.col
 import org.slf4j.LoggerFactory
 
 import graft.Q
-import graft.util.Pin
 
 /** The staged-write/read pipeline — the reference's whole reason to exist
   * (`/root/reference/pandas_redshift/core.py:269-304`) re-expressed on
@@ -171,9 +170,11 @@ object Connector {
 
   /** ≙ `s3_to_redshift` (`core.py:220-266`): synthesize + log the masked
     * COPY command for parity, then perform its Spark equivalent — a
-    * parallel schema'd CSV scan inserted into the target table.
-    * Concurrent loads into one table are serialized by a per-table lock
-    * that holds within one JVM only: two processes must not run staged
+    * parallel schema'd CSV scan, laid out and inserted into the target
+    * table in one pass (no intermediate cache). The whole load, CSV
+    * parse included, runs under a per-table lock that holds within one
+    * JVM only: loads into one table run one after the other, loads into
+    * different tables in parallel. Two processes must not run staged
     * appends to the same table (their commits share
     * `<table>/_temporary/0`, and the first to commit deletes it).
     */
@@ -218,28 +219,17 @@ object Connector {
     // distkey → hash repartition, sortkey → sortWithinPartitions.
     val laid = applyLayout(reader.csv(path), distStyle, distKey,
       if (sortKey.isEmpty) Nil else sortKey.split(",").toSeq.map(_.trim))
-    // Transactional parity with COPY's rollback (core.py:259-266): the
-    // failure-prone work — the full FAILFAST parse, cast, and layout of
-    // the staged CSV — materializes into a DISK_ONLY cache first, with
-    // count() as the validation barrier (cache partitions hold complete
-    // rows, so building them parses every column). Any error (malformed
-    // row, bad cast, format mismatch) surfaces there and leaves the
-    // target byte-identical. The append then reads the already-validated
-    // cache in the common case (a lost cache block recomputes from
-    // lineage and re-runs the FAILFAST parse for that partition — the
-    // staged file is immutable, so it re-validates to the same rows);
-    // atomicity rests on Spark's file commit protocol either way (tasks
-    // write under _temporary; the committer renames on job commit, so a
-    // crashed append publishes nothing).
-    // Round 2 staged through a throwaway parquet dir instead: one extra
-    // distributed write + read per load for no additional guarantee.
-    Pin.scope { p =>
-      val validated = p.frame(laid,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      validated.count()
-      tableLock(tableName).synchronized {
-        validated.write.mode(SaveMode.Append).insertInto(tableName)
-      }
+    // Transactional parity with COPY's rollback (core.py:259-266) is
+    // Spark's file commit protocol: tasks write under
+    // `<table>/_temporary`, and only job commit publishes their files. A
+    // malformed row (FAILFAST) or a bad cast fails the insert job; the
+    // job abort deletes `<table>/_temporary`, so nothing is published and
+    // the target stays byte-identical. With the even or distkey layout
+    // the parse runs in the shuffle-map stage, before any write task
+    // starts; with the no-shuffle layouts it runs inside the write
+    // tasks, whose files the same abort discards.
+    tableLock(tableName).synchronized {
+      laid.write.mode(SaveMode.Append).insertInto(tableName)
     }
   }
 
@@ -247,9 +237,10 @@ object Connector {
     * job that writes a table under the same `<table>/_temporary/0`, and
     * the first job to commit deletes that directory, task files of a
     * concurrent append to the same table included (that append then fails
-    * with "No such file"). Inserts into one table from this JVM therefore
-    * commit one at a time; the CSV parse and validation above still run
-    * concurrently. Writers in other processes are not covered.
+    * with "No such file"). Loads into one table from this JVM therefore
+    * run one at a time, the CSV parse included (it runs inside the
+    * insert job); loads into different tables still run concurrently.
+    * Writers in other processes are not covered.
     */
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
@@ -318,9 +309,10 @@ object Connector {
     * [[withRowIndex]]); `extraKwargs` is the whitelisted staging
     * pass-through (`core.py:291-294`); `verbose` threads the reference's
     * per-call log toggle (`core.py:285,294,300,304`) down all three
-    * stages. Appends to one table from one JVM are safe to run
-    * concurrently; two processes must not append to the same table
-    * (see [[loadStaged]]).
+    * stages. Appends to one table from one JVM are safe to call
+    * concurrently (their loads run one after the other; appends to
+    * different tables run in parallel); two processes must not append
+    * to the same table (see [[loadStaged]]).
     */
   def writeTable(
       cs: ConnectorSession,

@@ -564,22 +564,6 @@ object Dedup {
       .select("d1", "d2", "hamming").distinct()
   }
 
-  /** Embedding near-dup candidates: vectors whose random-hyperplane LSH
-    * buckets ([[Similarity.lshBuckets]], `nPlanes` sign bits) differ in at
-    * most `probeHamming` bits. One side expands by the XOR probe masks,
-    * then an EQUI-join on the probed bucket id pairs them — never an
-    * all-pairs comparison. Exact cosine reranks candidates afterwards.
-    */
-  def embedCandidates(bucketed: DataFrame, nPlanes: Int, probeHamming: Int): DataFrame = {
-    val masks = Similarity.probeMasks(nPlanes, probeHamming).map(lit)
-    val probed = bucketed.select(col("vec_id").as("d1"),
-        col("bucket"), explode(array(masks: _*)).as("m"))
-      .select(col("d1"), col("bucket").bitwiseXOR(col("m")).as("bkey"))
-    val b = bucketed.select(col("vec_id").as("d2"), col("bucket").as("bkey"))
-    probed.join(b, "bkey").filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-  }
-
   /** Band count for the embedding LSH OR-construction (round 8): the
     * all-pairs-near-dup candidate join uses `embedBands` INDEPENDENT
     * hash tables (bands), each over its own [[embedPlanesFor]]-derived
@@ -771,23 +755,6 @@ object Dedup {
     val buckets = math.max(2L, (n + embedDocsPerBucket - 1) / embedDocsPerBucket)
     math.max(8, 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1))
   }
-
-  /** Derived multi-probe radius for the embed near-dup candidate join
-    * (round 8): the probe family has C(np, ≤r) masks, and candidate
-    * volume ≈ n · masks · occupancy — with a FIXED r = 3, the mask count
-    * itself grows cubically in the derived plane count (C(13,≤3) = 378
-    * at the 30× corpus → ~170M candidate rows, measured 165 s). Capping
-    * the family at ~300 masks (= C(12,≤3), the largest graded/sf1.0
-    * family) keeps candidate volume ∝ n: r = 3 through np = 12 — every
-    * graded SF (np = 8) AND the synthetic sf1.0 (np = 12) are unchanged,
-    * so oracle hashes and prior scale tables hold — then 2 through
-    * np = 24 (C(24,≤2) = 301), then 1. Mirrored as the same integer
-    * CASE in the oracle (the embedPlanesFor discipline). The trade is
-    * recall at the bucket boundary, not correctness: the PAIR DEFINITION
-    * is bucket-hamming ≤ r(np) on both engines.
-    */
-  def embedProbeHammingFor(nPlanes: Int): Int =
-    if (nPlanes <= 12) 3 else if (nPlanes <= 24) 2 else 1
 
   /** Oracle CTE chain for the banded (OR-construction) md5-hyperplane
     * LSH signatures over `embeddings` (np → planes → dots → bsigs):

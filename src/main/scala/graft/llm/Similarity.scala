@@ -1357,9 +1357,10 @@ object Similarity {
     // q_dedup_embed), so the oracle recomputes the buckets in SQL and
     // selects the identical candidate set (bucket hamming <= 2 from the
     // query's bucket ≡ the multi-probe XOR expansion, pinned by the
-    // embedCandidates spec), then reranks by the 6dp-rounded cosine with
-    // a vec_id tiebreak. The approximation is part of the operator's
-    // definition; recall vs brute force is separately spec'd in LlmSpec.
+    // HofReference.embedCandidates spec), then reranks by the
+    // 6dp-rounded cosine with a vec_id tiebreak. The approximation is
+    // part of the operator's definition; recall vs brute force is
+    // separately spec'd in LlmSpec.
     "q_sim_ann" -> Q(
       s"""WITH planes AS (
         |  SELECT g.p, gd.d,

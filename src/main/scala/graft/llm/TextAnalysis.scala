@@ -1742,8 +1742,9 @@ object TextAnalysis {
       val d = docs(s, dir)
       Pin.scope { p =>
         // cache the histogram so the budget count and the trainer's
-        // first argmax share ONE corpus pass (bpeTrain's round-1 pin is
-        // the same cache entry; its round chain releases it)
+        // first argmax share ONE corpus pass (bpeTrain's round 1 frames
+        // this held pin again, which returns it as it is; its round chain
+        // releases it)
         val seqs = p.frame(bpeSeqs(d),
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val (merges, _) = bpeTrain(p, seqs, rounds = bpeBudgetFor(seqs))

@@ -38,7 +38,7 @@ object Pin {
     private val held = ArrayBuffer.empty[(AnyRef, () => Unit)]
 
     private def hold[P <: AnyRef](pin: P)(release: => Unit): P = {
-      if (!held.exists(_._1 eq pin)) held += ((pin, () => release))
+      held += ((pin, () => release))
       pin
     }
 
@@ -47,11 +47,12 @@ object Pin {
       if (i < 0) None else Some(held.remove(i)._2)
     }
 
-    /** A DataFrame cache at `level`. */
-    def frame(plan: DataFrame, level: StorageLevel): DataFrame = {
-      val df = plan.persist(level)
-      hold(df)(df.unpersist(): Unit)
-    }
+    /** A DataFrame cache at `level`; a frame this scope already holds is
+      * returned as it is, not persisted a second time.
+      */
+    def frame(plan: DataFrame, level: StorageLevel): DataFrame =
+      if (held.exists(_._1 eq plan)) plan
+      else hold(plan.persist(level))(plan.unpersist(): Unit)
 
     /** The plan's rows persisted MEMORY_AND_DISK. */
     def rows(plan: DataFrame, schema: StructType): Rows =

@@ -91,28 +91,78 @@ class ConnectorPipelineSpec extends AnyFunSuite {
     assert(out == Map("ServerSideEncryption" -> "AES256"))
   }
 
+  /** Hand-stages `parts` as the part files of `csvName`, each under the
+    * table's header.
+    */
+  private def stageParts(csvName: String, header: Seq[String],
+      parts: Seq[Seq[String]]): Unit = {
+    val dir = cs.stagedPath(csvName)
+    graft.util.Fs.deleteRecursively(dir)
+    new java.io.File(dir).mkdirs()
+    parts.zipWithIndex.foreach { case (rows, i) =>
+      val w = new java.io.PrintWriter(f"$dir/part-$i%05d.csv")
+      try (header.mkString(",") +: rows).foreach(w.println) finally w.close()
+    }
+  }
+
+  private def tableDir(table: String): java.io.File =
+    new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+
+  /** Every `_temporary` directory under `dir`, at any depth. */
+  private def temporaries(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.filter(_.isDirectory).flatMap(d =>
+      if (d.getName == "_temporary") Seq(d) else temporaries(d))
+
   test("failed load leaves the target table untouched (COPY rollback, core.py:259-266)") {
     val nation = graft.Engine.table(spark, TestSpark.sfDir, "nation")
     Connector.writeTable(cs, nation, "t_conn_txn")
-    val before = spark.table("t_conn_txn").collect().map(_.toString).sorted.toSeq
-    // hand-stage a CSV whose rows cannot cast to the table schema, then
-    // attempt an append load: the parse happens in the staging phase, so
-    // the failure must not publish anything into the table
-    val badDir = cs.stagedPath("bad-load.csv")
-    graft.util.Fs.deleteRecursively(badDir)
-    new java.io.File(badDir).mkdirs()
-    val w = new java.io.PrintWriter(s"$badDir/part-00000.csv")
-    w.println(nation.columns.mkString(","))
-    w.println("not_a_number,oops,also_not_a_number,text")
-    w.close()
+    def rows = spark.table("t_conn_txn").collect().map(_.toString).sorted.toSeq
+    val before = rows
+    def assertUntouched(load: String): Unit = {
+      assert(rows == before, s"$load: failed load must leave the target byte-identical")
+      val left = temporaries(tableDir("t_conn_txn"))
+      assert(left.isEmpty, s"$load: the aborted insert left ${left.mkString(",")}")
+    }
+    // one part file whose only row cannot cast to the table schema
+    stageParts("bad-load.csv", nation.columns.toSeq,
+      Seq(Seq("not_a_number,oops,also_not_a_number,text")))
     intercept[Exception](
       Connector.loadStaged(cs, "t_conn_txn", "bad-load.csv"))
-    val after = spark.table("t_conn_txn").collect().map(_.toString).sorted.toSeq
-    assert(after == before, "failed load must leave the target byte-identical")
-    // and no staging temp dirs leak
-    val leaked = new java.io.File("/tmp/graft_test_stage")
-      .listFiles().filter(_.getName.startsWith(".load_tmp_"))
-    assert(leaked.isEmpty, s"leaked temp dirs: ${leaked.mkString(",")}")
+    assertUntouched("one bad file")
+    // four part files, the malformed row in the last: without a shuffle
+    // ("all") the good files' write tasks can commit before the bad one
+    // fails, so only the job abort keeps them out of the table; with the
+    // even layout the parse fails in the shuffle-map stage instead
+    val good = nation.collect().map(_.mkString(",")).toSeq
+    stageParts("bad-last-part.csv", nation.columns.toSeq,
+      good.grouped(9).toSeq :+ Seq(good.head, "not_a_number,oops,also_not_a_number,text"))
+    val staged = cs.stagedPath("bad-last-part.csv")
+    assert(spark.read.option("header", "true").option("mode", "FAILFAST")
+      .schema(spark.table("t_conn_txn").schema)
+      .csv((0 until 3).map(i => f"$staged/part-$i%05d.csv"): _*).count() == good.size,
+      "only the last part may hold a malformed row")
+    Seq("all", "even").foreach { style =>
+      intercept[Exception](Connector.loadStaged(cs, "t_conn_txn",
+        "bad-last-part.csv", distStyle = style, verbose = false))
+      assertUntouched(s"distStyle $style")
+    }
+  }
+
+  test("a warm staged append runs 3 Spark jobs: the CSV stage write, the layout shuffle, the insert") {
+    val nation = graft.Engine.table(spark, TestSpark.sfDir, "nation")
+    Connector.writeTable(cs, nation, "t_conn_jobs", verbose = false)
+    Connector.writeTable(cs, nation, "t_conn_jobs", append = true, verbose = false)
+    def details(r: graft.Counted.Run[_]): String =
+      r.stageDetails.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n")
+    val append = graft.Counted(spark)(Connector.writeTable(cs, nation,
+      "t_conn_jobs", append = true, verbose = false))
+    assert(append.jobs === 3, s"warm append ran ${append.jobs} jobs:\n${details(append)}")
+    // a replace also drops and creates the table; recorded, not pinned
+    val replace = graft.Counted(spark)(Connector.writeTable(cs, nation,
+      "t_conn_jobs", verbose = false))
+    info(s"a warm replace runs ${replace.jobs} jobs")
+    assert(spark.table("t_conn_jobs").count() == nation.count())
   }
 
   test("applyLayout: distkey hash-partitions, sortkey sorts within partitions") {

@@ -9,7 +9,8 @@ import Similarity.{dot, planeComponent, toDouble}
 /** Spec-only interpreted HOF references of the codegen kernels: each is
   * the semantic spec its kernel is pinned against (LlmSpec asserts exact
   * agreement on the real corpus; where an oracle states the same fold,
-  * it states this form).
+  * it states this form), and the multi-probe candidate join that pins
+  * q_sim_ann's probe set.
   */
 object HofReference {
 
@@ -42,6 +43,31 @@ object HofReference {
     emb.select(col("vec_id"), col("embedding"),
       bits.reduce(_ + _).as("bucket"))
   }
+
+  /** Multi-probe embedding candidates: vectors whose LSH buckets (`nPlanes`
+    * sign bits) differ in at most `probeHamming` bits. One side expands
+    * by [[Similarity.probeMasks]], then an equi-join on the probed bucket
+    * pairs them. The single-query form of this probe is q_sim_ann's
+    * candidate set; the all-pairs dedup uses the banded
+    * [[Dedup.embedBandCandidates]] instead.
+    */
+  def embedCandidates(bucketed: DataFrame, nPlanes: Int, probeHamming: Int): DataFrame = {
+    val masks = Similarity.probeMasks(nPlanes, probeHamming).map(lit)
+    val probed = bucketed.select(col("vec_id").as("d1"),
+        col("bucket"), explode(array(masks: _*)).as("m"))
+      .select(col("d1"), col("bucket").bitwiseXOR(col("m")).as("bkey"))
+    val b = bucketed.select(col("vec_id").as("d2"), col("bucket").as("bkey"))
+    probed.join(b, "bkey").filter(col("d1") < col("d2"))
+      .select("d1", "d2").distinct()
+  }
+
+  /** The multi-probe radius for `nPlanes` planes: the probe family has
+    * C(np, ≤r) masks, capped near 300 (= C(12,≤3)) so candidate volume
+    * stays linear in the corpus: r = 3 through 12 planes, 2 through 24,
+    * then 1.
+    */
+  def embedProbeHammingFor(nPlanes: Int): Int =
+    if (nPlanes <= 12) 3 else if (nPlanes <= 24) 2 else 1
 
   /** [[Similarity.assignToCentroids]]'s argmax (NearestCentroid). */
   def assignToCentroidsHof(emb: DataFrame, cents: DataFrame): DataFrame = {

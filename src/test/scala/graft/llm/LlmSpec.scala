@@ -1492,9 +1492,9 @@ class LlmSpec extends AnyFunSuite {
     }
     // probe-radius derivation: r = 3 through np = 12 (all graded SFs and
     // the synthetic sf1.0 unchanged), then 2, then 1
-    assert((8 to 12).forall(Dedup.embedProbeHammingFor(_) == 3))
-    assert((13 to 24).forall(Dedup.embedProbeHammingFor(_) == 2))
-    assert(Dedup.embedProbeHammingFor(25) == 1)
+    assert((8 to 12).forall(HofReference.embedProbeHammingFor(_) == 3))
+    assert((13 to 24).forall(HofReference.embedProbeHammingFor(_) == 2))
+    assert(HofReference.embedProbeHammingFor(25) == 1)
   }
 
   test("embedBandCandidates equals pairs sharing >= 1 band bucket (OR-construction, round 8)") {
@@ -1529,7 +1529,7 @@ class LlmSpec extends AnyFunSuite {
     val truth = a.join(b, col("d1") < col("d2"))
       .filter(bit_count(col("b1").bitwiseXOR(col("b2"))) <= 3)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cands = Dedup.embedCandidates(bucketed, nPlanes = 8, probeHamming = 3)
+    val cands = HofReference.embedCandidates(bucketed, nPlanes = 8, probeHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands == truth, s"diff: ${cands.diff(truth)} / ${truth.diff(cands)}")
     bucketed.unpersist()

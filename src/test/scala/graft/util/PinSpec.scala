@@ -47,6 +47,48 @@ class PinSpec extends AnyFunSuite {
     assert(df.count() === nation.count())
   }
 
+  /** The messages CacheManager logs while `body` runs; a second persist
+    * of cached data logs "Asked to cache already cached data".
+    */
+  private def cacheWarnings(body: => Any): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.CacheManager")
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("graft-cache-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try body finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("framing one DataFrame twice in a scope persists it once; one release frees it") {
+    val plan = nation.select(col("n_regionkey"), col("n_name"))
+    Pin.scope { p =>
+      val warnings = cacheWarnings {
+        val a = p.frame(plan, StorageLevel.MEMORY_AND_DISK)
+        val b = p.frame(a, StorageLevel.MEMORY_AND_DISK)
+        assert(a eq b)
+        assert(b.count() === nation.count())
+        assert(b.storageLevel === StorageLevel.MEMORY_AND_DISK)
+        p.release(b)
+        assert(a.storageLevel === StorageLevel.NONE, "one release must free the frame")
+      }
+      assert(warnings.isEmpty, s"the frame was persisted twice: $warnings")
+    }
+  }
+
   test("memo keeps one cached frame per (session, canonical plan)") {
     val a = Pin.memo(nation.select(col("n_regionkey")).distinct(),
       StorageLevel.DISK_ONLY)
@@ -61,10 +103,13 @@ class PinSpec extends AnyFunSuite {
 
   test("q_hits, q_bpe_merges and q_bpe_encode leave no rows cached") {
     Seq("q_hits", "q_bpe_merges", "q_bpe_encode").foreach { q =>
-      val added = Pins.addedBy(spark) {
-        assert(Registry.all(q).fn(spark, TestSpark.sfDir).collect().nonEmpty)
+      val warnings = cacheWarnings {
+        val added = Pins.addedBy(spark) {
+          assert(Registry.all(q).fn(spark, TestSpark.sfDir).collect().nonEmpty)
+        }
+        assert(added.isEmpty, s"$q left rdds persisted: $added")
       }
-      assert(added.isEmpty, s"$q left rdds persisted: $added")
+      assert(warnings.isEmpty, s"$q persisted a frame twice: $warnings")
     }
   }
 
