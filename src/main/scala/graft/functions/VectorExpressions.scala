@@ -127,6 +127,18 @@ object VectorOps {
     Array.tabulate(nPlanes)(p =>
       Array.tabulate(dim)(d => planeComponent(offset + p, d)))
 
+  /** Driver-side dot product of `b` with `a`'s elements from `off`: the
+    * 0.0-seeded left-to-right fold [[ArrayDot]] runs, so a score or norm
+    * computed on the driver (a probe ranking, an ADC table entry, a
+    * query norm) is bit-identical to the same fold run in a plan. The
+    * one copy of this loop in the engine (ContractSpec guards it).
+    */
+  def dot(a: Array[Double], off: Int, b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < b.length) { s += a(off + i) * b(i); i += 1 }
+    s
+  }
+
   /** Sentinel for "dimension mismatch or null element" from [[lshBucket]]
     * — valid buckets are non-negative (nPlanes ≤ 62).
     */

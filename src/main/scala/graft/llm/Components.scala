@@ -830,7 +830,8 @@ object Components {
     // (quality_ppm DESC, doc_id ASC), and shiftright(kp, 42) IS
     // max(quality_ppm) (the pack's leading component). Codegen
     // HashAggregate, map-side-combinable; doc_id domain guarded loudly;
-    // [[keepBestFromLabelsRef]] is the spec-pinned semantic reference.
+    // ComponentsReference.keepBestFromLabelsRef (test scope) is the
+    // spec-pinned semantic reference.
     val idCap = (1L << 42) - 1
     val invId = when(col("doc_id") < 0 || col("doc_id") > idCap,
         raise_error(concat(lit("keepBestFromLabels: doc_id outside "
@@ -844,27 +845,6 @@ object Components {
         (lit(idCap) - col("kp").bitwiseAND(lit(idCap))).as("keep_id"),
         shiftright(col("kp"), 42).as("best_quality_ppm"),
         col("cluster_size"))
-      .orderBy(col("cluster_id"))
-  }
-
-  /** The max_by(struct) reference of [[keepBestFromLabels]]'s fused
-    * packed-long argmax (the spec pins exact agreement on the real
-    * pair-graph labeling).
-    */
-  private[graft] def keepBestFromLabelsRef(labels: DataFrame, docs: DataFrame): DataFrame = {
-    val lab = labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-    val qual = docs.select(
-        col("doc_id"), col("n_chars"),
-        size(split(col("text"), " ")).cast(DoubleType).as("n_tok"),
-        TextAnalysis.lexCount("en").as("n_stop"))
-      .select(col("doc_id"), TextAnalysis.qualityPpmCol.as("quality_ppm"))
-    lab.join(qual, "doc_id")
-      .groupBy(col("cluster_id"))
-      .agg(
-        max_by(col("doc_id"), struct(col("quality_ppm"), col("doc_id") * -1))
-          .as("keep_id"),
-        max(col("quality_ppm")).as("best_quality_ppm"),
-        count(lit(1)).as("cluster_size"))
       .orderBy(col("cluster_id"))
   }
 

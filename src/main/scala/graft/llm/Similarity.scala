@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Engine, Q}
+import graft.functions.VectorOps.{dot => dotV}
 
 /** Similarity search over the `embeddings` table (`array<float>`, dim 64).
   *
@@ -127,7 +128,7 @@ object Similarity {
     lshBuckets(emb, nPlanes).write.mode("overwrite")
       .partitionBy("bucket").parquet(path)
 
-  /** q_sim_ann operating point — single source for [[annTopK]]'s defaults
+  /** q_sim_ann operating point — single source for [[annTopK]]'s probe
     * AND the oracle SQL's interpolated constants, so changing either can
     * never silently desynchronize the mirrored candidate set (the oracle
     * previously hardcoded `range(0,4)` / `<= 2`).
@@ -189,8 +190,8 @@ object Similarity {
     * max_by(struct) form routed the corpus-sized candidate aggregation
     * through SortAggregate — per-group sorts). Same 63-bit layout and
     * the same loud id-domain guard; see [[roundedArgmaxAssign]] for the
-    * encoding argument, [[roundedArgmaxByGroupRef]] for the semantic
-    * reference LlmSpec pins against.
+    * encoding argument, `HofReference.roundedArgmaxByGroupRef` for the
+    * semantic reference LlmSpec pins against.
     */
   def roundedArgmaxByGroup(df: DataFrame, grp: String, id: String,
       cosR: String, out: String): DataFrame = {
@@ -204,32 +205,6 @@ object Similarity {
     df.groupBy(col(grp))
       .agg(max(enc).as("kp"))
       .select(col(grp), (lit(idCap) - col("kp").bitwiseAND(lit(idCap))).as(out))
-  }
-
-  /** The max_by(struct) reference of [[roundedArgmaxByGroup]] (LlmSpec
-    * asserts exact agreement on the real banded candidate set).
-    */
-  private[graft] def roundedArgmaxByGroupRef(df: DataFrame, grp: String,
-      id: String, cosR: String, out: String): DataFrame =
-    df.groupBy(col(grp))
-      .agg(max_by(col(id), struct(col(cosR), col(id) * -1)).as(out))
-
-  /** The max_by(struct) reference of [[roundedArgmaxAssign]] — kept as
-    * the semantic spec for the fused string-max encoding; LlmSpec asserts
-    * exact agreement (cent_id AND the decoded cos_r bits) on the corpus.
-    */
-  private[graft] def roundedArgmaxAssignRef(emb: DataFrame, k: Int = 8): DataFrame = {
-    val cents = emb.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cent_id"), toDouble(col("embedding")).as("cv"))
-    emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cos_r",
-        round(dot(col("v"), col("cv")) / (norm(col("v")) * norm(col("cv"))), 6))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("cent_id"), col("cos_r")),
-        struct(col("cos_r"), col("cent_id") * -1)).as("a"))
-      .select(col("vec_id"), col("a.cent_id").as("cent_id"),
-        col("a.cos_r").as("cos_r"))
   }
 
   /** SQL twin of [[roundedArgmaxAssign]] at k = 8 — the oracle CTE chain
@@ -257,12 +232,11 @@ object Similarity {
     * corpora would use more planes and fewer probes. Recall vs [[topK]]
     * is asserted by LlmSpec.
     */
-  def annTopK(emb: DataFrame, queryId: Long, k: Int, nPlanes: Int = annPlanes,
-      probeHamming: Int = annProbeHamming): DataFrame = {
-    val bucketed = lshBuckets(emb, nPlanes)
+  def annTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
+    val bucketed = lshBuckets(emb, annPlanes)
     val qRow = bucketed.filter(col("vec_id") === queryId)
       .select(col("bucket"), toDouble(col("embedding")).as("qv"))
-    val masks = probeMasks(nPlanes, probeHamming).map(lit)
+    val masks = probeMasks(annPlanes, annProbeHamming).map(lit)
     val probes = qRow.select(col("bucket"), col("qv"),
       explode(array(masks: _*)).as("mask"))
       .select(col("bucket").bitwiseXOR(col("mask")).as("bucket"), col("qv"))
@@ -365,16 +339,20 @@ object Similarity {
     ivfAssign(emb, nCentroids).write.mode("overwrite")
       .partitionBy("cent_id").parquet(path)
 
-  /** Default nProbe = 8 of 16 cells: the measured operating point for
-    * this near-uniform corpus (mean recall 0.92-0.94 over 5 queries at
-    * both sf0.001 and sf0.01 vs 0.70-0.76 at 4 probes — see DESIGN.md
+  /** q_sim_ivf operating point: 8 probes of 16 cells, the measured point
+    * for this near-uniform corpus (mean recall 0.92-0.94 over 5 queries
+    * at both sf0.001 and sf0.01 vs 0.70-0.76 at 4 probes — see DESIGN.md
     * "Known gaps / decisions", ANN operating point). Higher-contrast
-    * corpora run more cells and fewer
-    * probes; the probed fraction, not the iteration count, is what buys
-    * recall here.
+    * corpora run more cells and fewer probes; the probed fraction, not
+    * the iteration count, is what buys recall here.
     */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nCentroids: Int = 16,
-      nProbe: Int = 8): DataFrame = {
+  private val ivfCells = 16
+  private val ivfProbes = 8
+
+  /** IVF top-k: the [[ivfProbes]] of [[ivfCells]] cells closest to the
+    * query, reranked exactly.
+    */
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
     // one centroid table shared by assignment and probe selection — the
     // two MUST agree or pruning searches the wrong cells. Round 13: ONE
     // bounded driver collect (nCentroids × 64 doubles — KBs) replaces the
@@ -383,7 +361,7 @@ object Similarity {
     // call (the per-call-persist leak class of ADVICE-r12); assignment
     // runs the codegen'd kernel against the collected floats, probe
     // selection ranks the SAME floats driver-side.
-    val rows = ivfCentroids(emb, nCentroids).collect()
+    val rows = ivfCentroids(emb, ivfCells).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
     val idOf = map(rows.zipWithIndex.flatMap { case ((id, _), i) =>
       Seq(lit(i), lit(id)) }.toSeq: _*)
@@ -391,16 +369,11 @@ object Similarity {
       element_at(idOf, graft.functions.VectorExpressions
         .nearestCentroid(toDouble(col("embedding")), rows.map(_._2)))
         .as("cent_id"))
-    def dotD(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
     val qvArr = emb.filter(col("vec_id") === queryId)
       .select(toDouble(col("embedding"))).head().getSeq[Double](0).toArray
     val probed = rows.sortBy { case (id, cv) =>
-      (-dotD(qvArr, cv) / math.sqrt(dotD(cv, cv)), id)
-    }.take(nProbe).map(_._1)
+      (-dotV(qvArr, 0, cv) / math.sqrt(dotV(cv, 0, cv)), id)
+    }.take(ivfProbes).map(_._1)
     val q = emb.filter(col("vec_id") === queryId)
       .select(toDouble(col("embedding")).as("qv"),
         norm(toDouble(col("embedding"))).as("qn"))
@@ -454,6 +427,9 @@ object Similarity {
     graft.functions.VectorExpressions.dequantizeVec(
       col("codes"), col("q_min"), col("q_max"))
 
+  /** [[quantizedTopK]]'s shortlist: 10·k at q_sim_quant's k = 10. */
+  private val quantShortlist = 100
+
   /** Quantized-first-pass top-k: coarse ranking over int8 codes
     * ([[quantizeEmbeddings]]) selects a `shortlist`, exact float cosine
     * reranks it. THE serving pattern for a memory/IO-bound 100 TB
@@ -461,11 +437,10 @@ object Similarity {
     * codes; full-precision vectors are only fetched for shortlist
     * members. The coarse score is a codegen'd ArrayDot over the widened
     * codes — monotone enough per dimension (affine map of the original)
-    * that a 10×-k shortlist recovers the true neighbors; LlmSpec
-    * measures recall vs brute force.
+    * that a 10×-k shortlist ([[quantShortlist]]) recovers the true
+    * neighbors; LlmSpec measures recall vs brute force.
     */
-  def quantizedTopK(emb: DataFrame, queryId: Long, k: Int,
-      shortlist: Int = 100): DataFrame = {
+  def quantizedTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
     // asymmetric distance: codes are dequantized against the broadcast
     // per-dim stats before the coarse cosine (a raw code dot ignores the
     // per-dim affine shift and ranks garbage — measured recall 0.2)
@@ -478,7 +453,7 @@ object Similarity {
       .withColumn("coarse",
         dot(col("dq"), col("qdq")) / (norm(col("dq")) * norm(col("qdq"))))
       .orderBy(col("coarse").desc, col("vec_id"))
-      .limit(shortlist)
+      .limit(quantShortlist)
     short
       .withColumn("v", toDouble(col("embedding")))
       .withColumn("cos_r",
@@ -505,6 +480,13 @@ object Similarity {
     */
   val pqSubspaces: Int = 16
   val pqCentroids: Int = 16
+
+  /** Lloyd rounds of the PQ codebook trainer, for [[pqTopK]] and the
+    * residual codebooks of [[AnnIndex]] alike: m=16 and 2 rounds lift
+    * the round-12 PQ curve from 0.58 (m=8, 1 round) to 0.98 mean recall
+    * at sf0.1 (DESIGN.md "Round-12: the quantization tier completed").
+    */
+  val pqIters: Int = 2
 
   /** (vec_id, sub, sv): the corpus in subvector long format — one
     * in-row slice explode, m rows per vector, no shuffle.
@@ -672,9 +654,7 @@ object Similarity {
     * vs [[topK]] is LlmSpec's multi-query curve; the gate pins plumbing
     * + the recall floor (recallGate).
     */
-  def pqTopK(emb: DataFrame, queryId: Long, k: Int,
-      shortlist: Int = 0, m: Int = pqSubspaces,
-      iters: Int = 2): DataFrame = {
+  def pqTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
     // shortlist = 10·k + a 4√n headroom term (round 13 — the retired n/25
     // rule was corpus-LINEAR float reads, VERDICT-r12; a purely FIXED
     // shortlist measurably cliffs as the corpus grows: DESIGN.md
@@ -683,8 +663,7 @@ object Similarity {
     // difference: vanishing rerank fraction, measured recall held —
     // DESIGN.md "Round-13: the ANN tier finished"); one metadata-cheap
     // count derives it
-    val sl = if (shortlist > 0) shortlist
-      else AnnIndex.adcShortlistFor(k, emb.count())
+    val sl = AnnIndex.adcShortlistFor(k, emb.count())
     // one driver collect of the codebook feeds BOTH the encode pass and
     // the ADC lookup table, so the two can never see different
     // float-summed entries; the LUT itself is computed driver-side in
@@ -692,8 +671,9 @@ object Similarity {
     // the coarse scan is then ONE narrow projection + a pure-double
     // hash aggregate over codes, the faithful analog of a real ADC
     // scan's L1-resident table (no join at all)
+    val m = pqSubspaces
     val subDim = 64 / m
-    val cb = collectBooks(pqCodebooks(emb, iters, m), m)
+    val cb = collectBooks(pqCodebooks(emb, pqIters, m), m)
     val qv = emb.filter(col("vec_id") === queryId)
       .select(toDouble(col("embedding"))).head().getSeq[Double](0).toArray
     val lutQc: Seq[Seq[Double]] = (0 until m).map { s =>
@@ -743,34 +723,6 @@ object Similarity {
       .select(col("vec_id"), col("cos_r"))
       .orderBy(col("cos_r").desc, col("vec_id"))
       .limit(k)
-  }
-
-  /** IVF-PQ/ADC top-k (Jégou TPAMI'11 §IV — the composed billion-scale
-    * serving layout), self-contained train-and-search variant: the IVF
-    * coarse quantizer prunes the scan to probed cells, PQ codes of the
-    * RESIDUAL v − centroid rank candidates within them (residuals
-    * concentrate near 0, so a shared 16-entry-per-subspace codebook
-    * quantizes them far tighter than raw vectors), and an exact rerank
-    * closes. Since round 13 the whole core lives in [[AnnIndex]] —
-    * derived √n-cell grid, 2√cells probes, 10·k + 4√n shortlist (the
-    * fixed 16-cell grid scanned HALF the code table at any corpus size
-    * and the n/25 rerank was corpus-linear: VERDICT-r12's `weak`), packed
-    * one-long-per-vector codes scored by nibble-indexed plan-literal ADC
-    * tables in one narrow compiled projection (no join, no per-(vec,sub)
-    * aggregation), and no lingering persist (train unpersists its
-    * residual frame before returning — the round-12 DISK_ONLY leak).
-    * Production serving trains ONCE and reads the persisted partitioned
-    * rows instead: [[AnnIndex.writeIndex]] / [[AnnIndex.serveTopK]]
-    * (q_sim_ivfpq's backing via [[AnnIndex.servedTopK]]).
-    */
-  def ivfpqTopK(emb: DataFrame, queryId: Long, k: Int,
-      nCentroids: Int = 0, nProbe: Int = 0, m: Int = pqSubspaces,
-      iters: Int = 2, shortlist: Int = 0): DataFrame = {
-    val n = emb.count()
-    val nC = if (nCentroids > 0) nCentroids else AnnIndex.ivfCellsFor(n)
-    val model = AnnIndex.train(emb, nC, m, iters)
-    AnnIndex.topKFromCodes(emb, AnnIndex.encodeCodes(emb, model), model,
-      queryId, k, nProbe, shortlist, n)
   }
 
   /** Batched exact top-k (round 13, VERDICT-r12 #5): production retrieval
@@ -875,28 +827,15 @@ object Similarity {
       sxx(ij) / n - mu(i) * mu(j)
     }
     val trace = (0 until d).map(i => cov(i * d + i)).sum
-    def matVec(v: Array[Double]): Array[Double] = {
-      val out = new Array[Double](d)
-      var i = 0
-      while (i < d) {
-        var s = 0.0; val off = i * d; var j = 0
-        while (j < d) { s += cov(off + j) * v(j); j += 1 }
-        out(i) = s; i += 1
-      }
-      out
-    }
-    def dotA(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
+    def matVec(v: Array[Double]): Array[Double] =
+      Array.tabulate(d)(i => dotV(cov, i * d, v))
     val comps = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
     val lams = scala.collection.mutable.ArrayBuffer.empty[Double]
     val trails = scala.collection.mutable.ArrayBuffer.empty[Seq[Double]]
     def orthogonalize(v: Array[Double]): Array[Double] = {
       val w = v.clone()
       comps.foreach { c =>
-        val p = dotA(w, c)
+        val p = dotV(w, 0, c)
         var i = 0
         while (i < d) { w(i) -= p * c(i); i += 1 }
       }
@@ -908,18 +847,18 @@ object Similarity {
       // components already found (orthogonal to a true PC only on a
       // measure-zero corpus; a zero iterate falls back to keeping v)
       var v = orthogonalize(Array.fill(d)(1.0 / math.sqrt(d.toDouble)))
-      val vn0 = math.sqrt(dotA(v, v))
+      val vn0 = math.sqrt(dotV(v, 0, v))
       if (vn0 > 0) v = v.map(_ / vn0)
       val rayleighs = scala.collection.mutable.ArrayBuffer.empty[Double]
       var t = 0
       while (t < iters) {
-        rayleighs += dotA(v, matVec(v))
+        rayleighs += dotV(v, 0, matVec(v))
         val w = orthogonalize(matVec(v))
-        val wn = math.sqrt(dotA(w, w))
+        val wn = math.sqrt(dotV(w, 0, w))
         if (wn > 0) v = w.map(_ / wn)
         t += 1
       }
-      rayleighs += dotA(v, matVec(v))
+      rayleighs += dotV(v, 0, matVec(v))
       comps += v
       lams += rayleighs.last
       trails += rayleighs.toSeq
@@ -1007,17 +946,15 @@ object Similarity {
   private def topKBatchBy(emb: DataFrame, nQueries: Int, k: Int,
       cosineScore: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dotD(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
     val qs = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id"), toDouble(col("embedding")).as("qv"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
     val qIds = typedLit(qs.map(_._1))
     val qVecs = typedLit(qs.map(_._2))
-    val qNorms = typedLit(qs.map(q => math.sqrt(dotD(q._2, q._2))))
+    val qNorms = typedLit(qs.map { q =>
+      val a = q._2.toArray
+      math.sqrt(dotV(a, 0, a))
+    })
     val scoreName = if (cosineScore) "cos_r" else "dot_r"
     val base = emb
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
@@ -1069,7 +1006,7 @@ object Similarity {
     // Residual assumption, deliberate: IVF probe pruning can return
     // fewer than expected rows on corpora of a few dozen vectors
     // (probed cells may hold < k members) — that mismatch is a loud,
-    // correct signal that nProbe is too small for the corpus.
+    // correct signal that the probe count is too small for the corpus.
     val expected = math.min(k.toLong, math.max(emb.count() - 1L, 0L))
     val eff = math.min(minHits.toLong, expected)
     val exact = exactTopK.select(col("vec_id"), lit(1L).as("hit"))

@@ -600,8 +600,8 @@ object TextAnalysis {
     // long ≡ min(struct(score_bits ASC, c ASC)), in codegen
     // HashAggregate. Bounds are guarded loudly (a violation would
     // silently misorder); decode with shiftright/bitmask, never `/`
-    // (CLAUDE.md packed-long rule). [[nbClassifyRef]] keeps the
-    // min(struct) form as the spec-pinned semantic reference.
+    // (the packed-long rule). HofReference.nbClassifyRef (test scope)
+    // keeps the min(struct) form as the spec-pinned semantic reference.
     val cIdx = substring(col("c"), 2, 18).cast(LongType)
     val enc = when(col("score_bits") < 1L
           || col("score_bits") >= (1L << 61) || cIdx < 0L || cIdx > 3L,
@@ -620,7 +620,7 @@ object TextAnalysis {
 
   /** [[nbClassify]]'s scored frame — (doc_id, cls, c, score_bits) for
     * every (test doc × class): the shared input of the fused finisher
-    * and [[nbClassifyRef]].
+    * and its test-scope reference `HofReference.nbClassifyRef`.
     */
   private[graft] def nbScores(d: DataFrame): DataFrame = {
     val isTrain = bucketCol(col("doc_id")) % 10 < 8
@@ -657,17 +657,6 @@ object TextAnalysis {
       .join(broadcast(prior), Seq("c"))
       .withColumn("score_bits", col("tok_bits") + col("prior_bits"))
   }
-
-  /** The min(struct) reference of [[nbClassify]]'s fused packed-long
-    * argmin — semantics twin over the same scored frame; the spec pins
-    * exact agreement on the planted corpus.
-    */
-  private[graft] def nbClassifyRef(sc: DataFrame): DataFrame =
-    sc.groupBy(col("doc_id"), col("cls"))
-      .agg(min(struct(col("score_bits"), col("c"))).as("m"))
-      .select(col("doc_id"), col("cls"), col("m.c").as("pred_cls"),
-        col("m.score_bits").as("score_bits"),
-        (col("m.c") === col("cls")).as("correct"))
 
   /** q_cooccur_window's forward context window (positions ahead of the
     * center token that form a pair) — shared with the oracle SQL.

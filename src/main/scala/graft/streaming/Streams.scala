@@ -453,7 +453,8 @@ object Streams {
     * top-k or thresholds.
     *
     * Plan shape: (1) the arrival ranks ALL cells IN-ROW against the
-    * plan-literal centroid table and keeps its top-`nProbe`
+    * plan-literal centroid table and keeps its top
+    * [[graft.llm.AnnIndex.ivfProbesFor]]
     * (array_sort of (−score, cell) structs — no window function, which
     * streaming append mode could not run anyway), then explodes to
     * (arrival, cell) probe rows; (2) the static side is the persisted
@@ -472,19 +473,17 @@ object Streams {
     */
   def streamingAnnProbe(embStream: DataFrame,
       model: graft.llm.AnnIndex.IvfPqModel, codesStatic: DataFrame,
-      nProbe: Int = 0, minCos: Double = 0.8): DataFrame = {
-    val nP = if (nProbe > 0) nProbe
-      else graft.llm.AnnIndex.ivfProbesFor(model.nCells)
+      minCos: Double = 0.8): DataFrame = {
+    val nP = graft.llm.AnnIndex.ivfProbesFor(model.nCells)
     val m = model.m
     val subDim = model.subDim
     val centsLit = typedLit(model.cents.map(_.toSeq).toSeq)
     val booksLit = typedLit(model.books.map(_.map(_.toSeq).toSeq).toSeq)
-    def hofDot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
-    // (1) in-row top-nProbe cells for the arriving vector
+    // (1) in-row top probed cells for the arriving vector
     val v = graft.llm.Similarity.toDouble(col("embedding"))
     val scores = transform(centsLit, cv =>
-      hofDot(v, cv) / (sqrt(hofDot(v, v)) * sqrt(hofDot(cv, cv))))
+      graft.llm.Similarity.dot(v, cv) /
+        (graft.llm.Similarity.norm(v) * graft.llm.Similarity.norm(cv)))
     val ranked = array_sort(zip_with(scores,
       sequence(lit(0), lit(model.nCells - 1)),
       (s0, i) => struct((s0 * -1).as("ns"), i.as("cell"))))

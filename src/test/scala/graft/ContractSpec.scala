@@ -8,6 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ContractSpec extends AnyFunSuite {
 
+  /** Every source file under src/main/scala: (relative path, text). */
+  private lazy val mainSources: Seq[(String, String)] = {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"missing ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    walk(root).map(f =>
+      root.toPath.relativize(f.toPath).toString ->
+        java.nio.file.Files.readString(f.toPath))
+  }
+
   test("SparkEntry.entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
@@ -15,16 +27,8 @@ class ContractSpec extends AnyFunSuite {
   test("sessions come from Engine.session; mains are the five entry points") {
     // one session factory, one set of runners: a new SparkSession.builder
     // or a new one-off main belongs in Engine.session or BenchOne instead
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"missing ${root.getAbsolutePath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val sources = walk(root).map(f =>
-      root.toPath.relativize(f.toPath).toString ->
-        java.nio.file.Files.readString(f.toPath))
     def filesWith(token: String): Set[String] =
-      sources.collect { case (p, s) if s.contains(token) => p }.toSet
+      mainSources.collect { case (p, s) if s.contains(token) => p }.toSet
     assert(filesWith("SparkSession.builder") == Set("graft/Engine.scala"))
     assert(filesWith("def main") ==
       Set("Bench", "BenchOne", "Verify", "Explain", "ScaleUp")
@@ -34,18 +38,11 @@ class ContractSpec extends AnyFunSuite {
   test("on-disk indexes are published and named only by the index store") {
     // one key, one atomic publish, one drop: a second rename-publish or a
     // second graft_<family>_index_ path belongs in llm/IndexStore instead
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val sources = walk(root).map(f =>
-      root.toPath.relativize(f.toPath).toString ->
-        java.nio.file.Files.readString(f.toPath))
     val store = Set("graft/llm/IndexStore.scala")
-    assert(sources.collect { case (p, s) if s.contains(".renameTo(") => p }
+    assert(mainSources.collect { case (p, s) if s.contains(".renameTo(") => p }
       .toSet === store)
     val indexLiteral = "graft_\\S*_index_".r
-    assert(sources.collect {
+    assert(mainSources.collect {
       case (p, s) if indexLiteral.findFirstIn(s).isDefined => p
     }.toSet === store)
   }
@@ -54,17 +51,22 @@ class ContractSpec extends AnyFunSuite {
     // one owner, three lifetimes (scoped, returned, memoized): a persist,
     // unpersist, localCheckpoint or cache call belongs in util/Pin
     // instead, so no site invents its own release rule
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val sources = walk(root).map(f =>
-      root.toPath.relativize(f.toPath).toString ->
-        java.nio.file.Files.readString(f.toPath))
     val calls = Seq(".persist(", ".unpersist(", ".localCheckpoint(", ".cache(")
-    assert(sources.collect {
+    assert(mainSources.collect {
       case (p, s) if calls.exists(s.contains) => p
     }.toSet === Set("graft/util/Pin.scala"))
+  }
+
+  test("the driver-side dot fold is written once in src/main") {
+    // one copy of the 0.0-seeded left-to-right Σ a(off+i)·b(i) loop,
+    // VectorOps.dot, whose fold is ArrayDot's: a probe ranking, an ADC
+    // table or a query norm computed on the driver cannot drift from
+    // the bits a plan computes, because there is no second loop to drift
+    val fold =
+      """\{\s*\w+ \+= \w+\([^()]*\) \* \w+\([^()]*\);\s*\w+ \+= 1\s*\}""".r
+    val copies = mainSources.flatMap { case (p, s) =>
+      fold.findAllIn(s).map(_ => p) }
+    assert(copies === Seq("graft/functions/VectorExpressions.scala"))
   }
 
   test("every oracle key has a matching query") {

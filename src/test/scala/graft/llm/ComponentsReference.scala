@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Spec-only reference implementations for [[Components]]. */
@@ -125,5 +125,26 @@ object ComponentsReference {
       StructType(Seq(
         StructField("id", symSchema("src").dataType),
         StructField("label", symSchema("src").dataType))))
+  }
+
+  /** The max_by(struct) reference of [[Components.keepBestFromLabels]]'s
+    * fused packed-long argmax (the spec pins exact agreement on the real
+    * pair-graph labeling).
+    */
+  def keepBestFromLabelsRef(labels: DataFrame, docs: DataFrame): DataFrame = {
+    val lab = labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    val qual = docs.select(
+        col("doc_id"), col("n_chars"),
+        size(split(col("text"), " ")).cast(DoubleType).as("n_tok"),
+        TextAnalysis.lexCount("en").as("n_stop"))
+      .select(col("doc_id"), TextAnalysis.qualityPpmCol.as("quality_ppm"))
+    lab.join(qual, "doc_id")
+      .groupBy(col("cluster_id"))
+      .agg(
+        max_by(col("doc_id"), struct(col("quality_ppm"), col("doc_id") * -1))
+          .as("keep_id"),
+        max(col("quality_ppm")).as("best_quality_ppm"),
+        count(lit(1)).as("cluster_size"))
+      .orderBy(col("cluster_id"))
   }
 }

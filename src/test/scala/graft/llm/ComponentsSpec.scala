@@ -21,7 +21,7 @@ class ComponentsSpec extends AnyFunSuite {
       Components.simhashPairs(spark, TestSpark.sfDir))
     val docs = graft.Engine.table(spark, TestSpark.sfDir, "documents")
     val fused = Components.keepBestFromLabels(labels, docs)
-    val ref = Components.keepBestFromLabelsRef(labels, docs)
+    val ref = ComponentsReference.keepBestFromLabelsRef(labels, docs)
     assert(fused.except(ref).isEmpty && ref.except(fused).isEmpty)
     assert(fused.count() > 0)
     val plan = fused.queryExecution.executedPlan.toString

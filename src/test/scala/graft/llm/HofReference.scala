@@ -4,13 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
-import Similarity.{dot, planeComponent, toDouble}
+import Similarity.{dot, norm, planeComponent, toDouble}
 
 /** Spec-only interpreted HOF references of the codegen kernels: each is
   * the semantic spec its kernel is pinned against (LlmSpec asserts exact
   * agreement on the real corpus; where an oracle states the same fold,
-  * it states this form), and the multi-probe candidate join that pins
-  * q_sim_ann's probe set.
+  * it states this form), the multi-probe candidate join that pins
+  * q_sim_ann's probe set, and the max_by/min(struct) references of the
+  * fused packed-long argmax and argmin aggregates.
   */
 object HofReference {
 
@@ -156,4 +157,42 @@ object HofReference {
         s"transform(sequence(0, cast((size(t) + ${width - 1}) div $width as int) - 1), " +
           s"i -> array_join(slice(t, i * $width + 1, $width), ' '))")))
       .select(col("doc_id"), col("pos").as("line_no"), col("col").as("line"))
+
+  /** The max_by(struct) reference of [[Similarity.roundedArgmaxByGroup]]
+    * (LlmSpec asserts exact agreement on the real banded candidate set).
+    */
+  def roundedArgmaxByGroupRef(df: DataFrame, grp: String,
+      id: String, cosR: String, out: String): DataFrame =
+    df.groupBy(col(grp))
+      .agg(max_by(col(id), struct(col(cosR), col(id) * -1)).as(out))
+
+  /** The max_by(struct) reference of [[Similarity.roundedArgmaxAssign]]
+    * — the semantic spec for the fused packed-long encoding; LlmSpec
+    * asserts exact agreement (cent_id AND the decoded cos_r bits) on the
+    * corpus.
+    */
+  def roundedArgmaxAssignRef(emb: DataFrame, k: Int = 8): DataFrame = {
+    val cents = emb.orderBy(col("vec_id")).limit(k)
+      .select(col("vec_id").as("cent_id"), toDouble(col("embedding")).as("cv"))
+    emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      .crossJoin(broadcast(cents))
+      .withColumn("cos_r",
+        round(dot(col("v"), col("cv")) / (norm(col("v")) * norm(col("cv"))), 6))
+      .groupBy(col("vec_id"))
+      .agg(max_by(struct(col("cent_id"), col("cos_r")),
+        struct(col("cos_r"), col("cent_id") * -1)).as("a"))
+      .select(col("vec_id"), col("a.cent_id").as("cent_id"),
+        col("a.cos_r").as("cos_r"))
+  }
+
+  /** The min(struct) reference of [[TextAnalysis.nbClassify]]'s fused
+    * packed-long argmin — semantics twin over the same scored frame; the
+    * spec pins exact agreement on the planted corpus.
+    */
+  def nbClassifyRef(sc: DataFrame): DataFrame =
+    sc.groupBy(col("doc_id"), col("cls"))
+      .agg(min(struct(col("score_bits"), col("c"))).as("m"))
+      .select(col("doc_id"), col("cls"), col("m.c").as("pred_cls"),
+        col("m.score_bits").as("score_bits"),
+        (col("m.c") === col("cls")).as("correct"))
 }

@@ -659,21 +659,6 @@ class LlmSpec extends AnyFunSuite {
     assert(recalls.min >= 0.6, s"PQ worst-query recall ${recalls.min} < 0.6 ($recalls)")
   }
 
-  test("IVF-PQ top-k: mean recall >= 0.8 over 5 queries vs brute force") {
-    val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
-    val recalls = queryIds.map { q =>
-      val exact = Similarity.topK(emb, q, 10).select("vec_id")
-        .collect().map(_.getLong(0)).toSet
-      val got = Similarity.ivfpqTopK(emb, q, 10).select("vec_id")
-        .collect().map(_.getLong(0)).toSet
-      exact.intersect(got).size.toDouble / exact.size
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.8, s"IVF-PQ mean recall $mean < 0.8 ($recalls)")
-    assert(recalls.min >= 0.6,
-      s"IVF-PQ worst-query recall ${recalls.min} < 0.6 ($recalls)")
-  }
-
   test("NearestCentroid kernel assigns identically to the HOF reference") {
     import spark.implicits._
     // one MATERIALIZED centroid table feeds both forms: evaluating the
@@ -697,7 +682,7 @@ class LlmSpec extends AnyFunSuite {
     // cos_r bits (k/1e6 in double ≡ round(x, 6)'s closest-double value);
     // except() compares doubles exactly
     val fused = Similarity.roundedArgmaxAssign(emb, k = 8)
-    val ref = Similarity.roundedArgmaxAssignRef(emb, k = 8)
+    val ref = HofReference.roundedArgmaxAssignRef(emb, k = 8)
     assert(fused.except(ref).isEmpty && ref.except(fused).isEmpty)
     assert(fused.count() === emb.count())
     // and it must stay in codegen HashAggregate — the max_by struct
@@ -799,7 +784,7 @@ class LlmSpec extends AnyFunSuite {
         round(Similarity.dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 6))
       .select(col("v"), col("nb"), col("cos_r"))
     val fused = Similarity.roundedArgmaxByGroup(scored, "v", "nb", "cos_r", "nb")
-    val ref = Similarity.roundedArgmaxByGroupRef(scored, "v", "nb", "cos_r", "nb")
+    val ref = HofReference.roundedArgmaxByGroupRef(scored, "v", "nb", "cos_r", "nb")
     assert(fused.except(ref).isEmpty && ref.except(fused).isEmpty)
     assert(fused.count() > 0)
     val plan = fused.queryExecution.executedPlan.toString
@@ -812,7 +797,7 @@ class LlmSpec extends AnyFunSuite {
   test("fused packed-long nbClassify argmin equals the min(struct) reference (round 16)") {
     val planted = TextAnalysis.nbPlantedCorpus(docs)
     val fused = TextAnalysis.nbClassify(planted)
-    val ref = TextAnalysis.nbClassifyRef(TextAnalysis.nbScores(planted))
+    val ref = HofReference.nbClassifyRef(TextAnalysis.nbScores(planted))
     assert(fused.except(ref).isEmpty && ref.except(fused).isEmpty)
     assert(fused.count() > 0)
     val plan = fused.queryExecution.executedPlan.toString
@@ -1017,8 +1002,8 @@ class LlmSpec extends AnyFunSuite {
     // the model read back from the sidecars matches the published codes:
     // re-encoding the corpus with it reproduces the persisted words
     val model = AnnIndex.readModel(spark, path)
-    val re = AnnIndex.encodeCodes(emb, model)
-      .withColumnRenamed("codes64", "re64").withColumnRenamed("cell", "recell")
+    val re = AnnIndex.encodeRows(emb, model)
+      .select(col("vec_id"), col("codes64").as("re64"), col("cell").as("recell"))
     val mismatch = idx.join(re, "vec_id")
       .filter(col("codes64") =!= col("re64") || col("cell") =!= col("recell"))
       .count()
@@ -1194,16 +1179,16 @@ class LlmSpec extends AnyFunSuite {
       val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
       val recalls = queryIds.map { q =>
         val exact = ids(Similarity.mipsTopK(skewed, q, 10))
-        val got = ids(AnnIndex.mipsTopKFromCodes(skewed, rows, rows, model,
-          q, 10, n))
+        val got = ids(AnnIndex.topKFromCodes(skewed, rows, rows, model,
+          q, 10, n, cosine = false))
         exact.intersect(got).size.toDouble / exact.size
       }
       val mean = recalls.sum / recalls.size
       info(s"norm-skewed MIPS recalls: $recalls (mean $mean)")
       assert(mean >= 0.8, s"MIPS recall $mean < 0.8 ($recalls)")
       queryIds.foreach { q =>
-        val mips = ids(AnnIndex.mipsTopKFromCodes(skewed, rows, rows, model,
-          q, 10, n))
+        val mips = ids(AnnIndex.topKFromCodes(skewed, rows, rows, model,
+          q, 10, n, cosine = false))
         val cosine = ids(AnnIndex.serveTopK(spark, path, skewed, q, 10))
         assert(mips != cosine,
           s"query $q: MIPS and cosine serves returned the same ids $mips")
@@ -2705,6 +2690,32 @@ class LlmSpec extends AnyFunSuite {
       s"warm serve compiled ${second.compiles} classes")
     assert(second.jobs === 2, s"warm serve ran ${second.jobs} jobs: " +
       second.stageDetails.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n"))
+  }
+
+  test("a query id absent from the query frame fails the single-query serves with the batch serve's declared error") {
+    val path = "/tmp/graft_test_stage/ann_missing_query_index"
+    graft.util.Fs.deleteRecursively(path)
+    val corpus = clustered(seed = 6L, n = 500)
+    AnnIndex.writeIndex(vecFrame(corpus), path)
+    val rows = spark.read.schema(AnnIndex.artifactSchemas("rows"))
+      .parquet(s"$path/rows")
+    val model = AnnIndex.readModel(spark, path)
+    val absent = 999999999L
+    val frame = vecFrame(corpus.take(3))
+    val errors = Seq(
+      intercept[IllegalArgumentException](
+        AnnIndex.serveTopK(spark, path, frame, absent, 10)),
+      intercept[IllegalArgumentException](
+        AnnIndex.topKFromCodes(frame, rows, rows, model, absent, 10, 500L,
+          cosine = false)),
+      intercept[IllegalArgumentException](
+        AnnIndex.topKBatchFromCodes(frame, rows, rows, model,
+          Seq(corpus.head._1, absent), 10, 500L)))
+    errors.foreach(e =>
+      assert(e.getMessage.contains("query ids missing from the corpus"),
+        e.getMessage))
+    assert(errors(0).getMessage.endsWith("wanted 1, found 0"))
+    assert(errors(2).getMessage.endsWith("wanted 2, found 1"))
   }
 
   /** The number of data files in each cell dir of a `rows` artifact. */
