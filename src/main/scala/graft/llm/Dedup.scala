@@ -374,9 +374,6 @@ object Dedup {
       .select(col("d1"), col("d2")).distinct()
   }
 
-  /** The (doc_id, band_id, key) banding relation behind [[lshCandidates]]
-    * — shared with the occupancy audit so the two cannot drift.
-    */
   /** The corpus's DISTINCT (band_id, key) MinHash-LSH band index — the
     * structure q_dedup_incremental collapses the corpus to, and exactly
     * what a production ingest persists daily and probes per new batch
@@ -402,8 +399,10 @@ object Dedup {
   /** Persist the corpus's DISTINCT (band_id, key) index at `path/bands`,
     * partitioned by band with one file per band (the AnnIndex.writeIndex
     * file-sizing discipline: partitionBy without the repartition writes
-    * task-count × band-count slivers). A probe of band b's key set reads
-    * exactly one partition.
+    * task-count × band-count slivers). A probe reads every band's file
+    * once: [[graft.streaming.Streams.streamingBandDedup]] keys the whole
+    * index by `band_id ‖ key` and shares that one read across its three
+    * band joins.
     */
   def writeBandIndex(corpus: DataFrame, path: String): Unit =
     bandIndex(corpus).repartition(col("band_id")).write.mode("overwrite")
@@ -437,12 +436,22 @@ object Dedup {
     */
   def appendToBandIndex(newDocs: DataFrame, path: String): Unit = {
     val spark = newDocs.sparkSession
-    val fresh = bandIndex(newDocs)
+    // partitioned by band BEFORE the distinct: the distinct, a broadcast
+    // anti-join and the band-partitioned write share that one shuffle
+    val fresh = lshBands(minhashSignaturesStateless(newDocs))
+      .select(col("band_id"), col("key"))
+      .repartition(col("band_id")).distinct()
       .join(readBandIndex(spark, path), Seq("band_id", "key"), "left_anti")
+    // Spark drops this repartition when the join kept the band
+    // partitioning; a sort-merge anti-join re-splits the batch by
+    // (band_id, key), and then this shuffle keeps one file per band
     fresh.repartition(col("band_id")).write.mode("append")
       .partitionBy("band_id").parquet(s"$path/bands")
   }
 
+  /** The (doc_id, band_id, key) banding relation behind [[lshCandidates]]
+    * — shared with the occupancy audit so the two cannot drift.
+    */
   private[graft] def lshBands(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"),
       explode(array((0 until 3).map(b =>

@@ -348,19 +348,22 @@ object Streams {
     * for the new-vs-new exact tier). The corpus side is
     * [[graft.llm.Dedup.bandIndex]] — the DISTINCT (band, key) structure
     * a production ingest persists daily; here it joins as a STATIC
-    * DataFrame, so the whole streaming plan is three stateless
-    * stream-static equi left-joins over the per-row signature
-    * projection: zero state stores, no watermark required,
+    * DataFrame, read ONCE: the index is projected to one band-tagged key
+    * `band_id ‖ ':' ‖ key`, and the doc's three band keys
+    * (`"b:" ‖ h(2b) ‖ h(2b+1)`) each left-join that same projection. The
+    * three joins read one index plan, so Spark builds one exchange of the
+    * index (a broadcast, or a shuffle past the broadcast threshold) and
+    * reuses it for the other two bands — a computed index is evaluated
+    * once per batch, not once per band. The stream side is a per-row
+    * signature projection: zero state stores, no watermark required,
     * unbounded-safe at any ingest rate (the s_stream_decontam
-    * discipline, with a corpus-sized index riding the join instead of a
-    * broadcast-literal gram set — Spark picks broadcast vs shuffle by
-    * index size). Docs with fewer than 3 tokens carry no signature and
+    * discipline). Docs with fewer than 3 tokens carry no signature and
     * are dropped from the annotated stream ([[streamingSigDedup]]'s
     * contract): a doc with no shingles cannot be a near-dup.
     *
     * Output: every input column plus `n_bands_hit` / `is_dup`, matching
     * the batch twin's readout bit-for-bit (StreamingSpec pins parity on
-    * the real corpus split).
+    * the real corpus split, and the plan's exchange reuse).
     */
   def streamingBandDedup(docsStream: DataFrame,
       corpusBandIndex: DataFrame): DataFrame = {
@@ -372,23 +375,20 @@ object Streams {
     val sig =
       if (sigCols.forall(docsStream.columns.contains)) docsStream
       else graft.llm.Dedup.withMinhashSignature(docsStream)
-    val withKeys = (0 until nBands).foldLeft(sig) { (df, b) =>
-      df.withColumn(s"__k$b", concat(col(s"h${2 * b}"), col(s"h${2 * b + 1}")))
-    }
-    val probed = (0 until nBands).foldLeft(withKeys) { (df, b) =>
-      df.join(
-        corpusBandIndex.filter(col("band_id") === b)
-          .select(col("key").as(s"__k$b"), lit(1).as(s"__hit$b")),
-        Seq(s"__k$b"), "left")
+    val index = corpusBandIndex.select(
+      concat(col("band_id").cast(StringType), lit(":"), col("key")).as("__bk"),
+      lit(1).as("__hit"))
+    val keyed = sig.withColumns((0 until nBands).map(b =>
+      s"__bk$b" -> concat(lit(s"$b:"), col(s"h${2 * b}"), col(s"h${2 * b + 1}"))).toMap)
+    val probed = (0 until nBands).foldLeft(keyed) { (df, b) =>
+      df.join(index.withColumnsRenamed(Map("__bk" -> s"__bk$b", "__hit" -> s"__hit$b")),
+        Seq(s"__bk$b"), "left")
     }
     val hits = (0 until nBands)
       .map(b => coalesce(col(s"__hit$b"), lit(0)))
-      .reduce(_ + _).cast(org.apache.spark.sql.types.LongType)
-    probed
-      .withColumn("n_bands_hit", hits)
-      .withColumn("is_dup", col("n_bands_hit") > 0)
-      .select(docsStream.columns.map(col).toSeq
-        :+ col("n_bands_hit") :+ col("is_dup"): _*)
+      .reduce(_ + _).cast(LongType)
+    probed.select(docsStream.columns.map(col).toSeq
+      :+ hits.as("n_bands_hit") :+ (hits > 0).as("is_dup"): _*)
   }
 
   /** Exact-substring probe at INGEST (s_suffix_probe): emit every

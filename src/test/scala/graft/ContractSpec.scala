@@ -112,14 +112,16 @@ class ContractSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, expr, unix_micros}
     val canon = Engine.table(spark, TestSpark.sfDir, "events")
     val dir = java.nio.file.Files.createTempDirectory("events_gen").toString
-    // write the nanos-long twin (what ScaleUp also emits)
-    canon.withColumn("ts", unix_micros(col("ts")) * expr("CAST(1000 AS BIGINT)"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val viaNanos = Engine.table(spark, dir, "events")
-    assert(viaNanos.schema("ts").dataType === canon.schema("ts").dataType,
-      "both branches must surface the same ts type")
-    assert(viaNanos.exceptAll(canon).isEmpty && canon.exceptAll(viaNanos).isEmpty,
-      "nanos-long and micros generations must read to identical rows")
+    try {
+      // write the nanos-long twin (what ScaleUp also emits)
+      canon.withColumn("ts", unix_micros(col("ts")) * expr("CAST(1000 AS BIGINT)"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val viaNanos = Engine.table(spark, dir, "events")
+      assert(viaNanos.schema("ts").dataType === canon.schema("ts").dataType,
+        "both branches must surface the same ts type")
+      assert(viaNanos.exceptAll(canon).isEmpty && canon.exceptAll(viaNanos).isEmpty,
+        "nanos-long and micros generations must read to identical rows")
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("array_dot rejects non-double arrays with an analysis error") {

@@ -2134,40 +2134,42 @@ class LlmSpec extends AnyFunSuite {
       4L -> toks("g", 80),
       5L -> toks("h", 20))
     val dir = java.nio.file.Files.createTempDirectory("suffixspec").toString
-    corpus.map { case (id, t) => (id, t.mkString(" ")) }
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // brute force: every full 50-token window, corpus-wide multiset
-    // count, dup starts where count >= 2, interval-merged coverage
-    def windows(t: Seq[String]) =
-      t.sliding(50).filter(_.length == 50).map(_.mkString(" ")).toSeq
-    val cnt = corpus.flatMap(c => windows(c._2))
-      .groupBy(identity).view.mapValues(_.size).toMap
-    val exp = corpus.map { case (id, t) =>
-      val starts = windows(t).zipWithIndex
-        .collect { case (w, i) if cnt(w) >= 2 => i + 1 }
-      val covered = starts.flatMap(p => p until p + 50).distinct.size
-      val spans = starts.foldLeft(List.empty[(Int, Int)]) { (acc, p) =>
-        acc match {
-          case (s, e) :: rest if p <= e + 1 => (s, math.max(e, p + 49)) :: rest
-          case _ => (p, p + 49) :: acc
-        }
-      }.size
-      (id, t.length.toLong, math.max(t.length - 49, 0).toLong,
-        starts.size.toLong, spans.toLong, covered.toLong,
-        if (t.isEmpty) 0L else covered.toLong * 1000000L / t.length)
-    }
-    val got = graft.Registry.all("q_dedup_suffix").fn(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
-    assert(got === exp)
-    // the planted structure is detected as planted: 60 covered tokens
-    // in each of docs 1/2 (one span), two spans and 110 covered in doc 3
-    val byId = got.map(r => r._1 -> r).toMap
-    assert(byId(1L)._5 === 1L && byId(1L)._6 === 60L)
-    assert(byId(2L)._5 === 1L && byId(2L)._6 === 60L)
-    assert(byId(3L)._5 === 2L && byId(3L)._6 === 110L)
-    assert(byId(4L)._6 === 0L && byId(5L)._3 === 0L)
+    try {
+      corpus.map { case (id, t) => (id, t.mkString(" ")) }
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // brute force: every full 50-token window, corpus-wide multiset
+      // count, dup starts where count >= 2, interval-merged coverage
+      def windows(t: Seq[String]) =
+        t.sliding(50).filter(_.length == 50).map(_.mkString(" ")).toSeq
+      val cnt = corpus.flatMap(c => windows(c._2))
+        .groupBy(identity).view.mapValues(_.size).toMap
+      val exp = corpus.map { case (id, t) =>
+        val starts = windows(t).zipWithIndex
+          .collect { case (w, i) if cnt(w) >= 2 => i + 1 }
+        val covered = starts.flatMap(p => p until p + 50).distinct.size
+        val spans = starts.foldLeft(List.empty[(Int, Int)]) { (acc, p) =>
+          acc match {
+            case (s, e) :: rest if p <= e + 1 => (s, math.max(e, p + 49)) :: rest
+            case _ => (p, p + 49) :: acc
+          }
+        }.size
+        (id, t.length.toLong, math.max(t.length - 49, 0).toLong,
+          starts.size.toLong, spans.toLong, covered.toLong,
+          if (t.isEmpty) 0L else covered.toLong * 1000000L / t.length)
+      }
+      val got = graft.Registry.all("q_dedup_suffix").fn(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
+      assert(got === exp)
+      // the planted structure is detected as planted: 60 covered tokens
+      // in each of docs 1/2 (one span), two spans and 110 covered in doc 3
+      val byId = got.map(r => r._1 -> r).toMap
+      assert(byId(1L)._5 === 1L && byId(1L)._6 === 60L)
+      assert(byId(2L)._5 === 1L && byId(2L)._6 === 60L)
+      assert(byId(3L)._5 === 2L && byId(3L)._6 === 110L)
+      assert(byId(4L)._6 === 0L && byId(5L)._3 === 0L)
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("q_dedup_suffix_keep1 cuts every copy except the (min doc, min pos) canonical") {
@@ -2186,21 +2188,23 @@ class LlmSpec extends AnyFunSuite {
       4L -> toks("g", 80),
       5L -> toks("h", 20))
     val dir = java.nio.file.Files.createTempDirectory("keep1spec").toString
-    corpus.map { case (id, t) => (id, t.mkString(" ")) }
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.Registry.all("q_dedup_suffix_keep1").fn(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).toMap
-    // doc 1 is canonical for the shared run: nothing removed
-    assert(got(1L) === ((100L, 0L, 0L, 100L, 1000000L)))
-    // doc 2 loses the 11 shared windows -> one merged 60-token span
-    assert(got(2L) === ((100L, 11L, 60L, 40L, 400000L)))
-    // doc 3 keeps the first rep occurrence, loses the second (55 tokens)
-    assert(got(3L) === ((125L, 6L, 55L, 70L, 560000L)))
-    assert(got(4L)._2 === 0L && got(5L)._2 === 0L)
-    // conservation: removed + kept == n_tokens everywhere
-    got.values.foreach { case (n, _, rm, kp, _) => assert(rm + kp === n) }
+    try {
+      corpus.map { case (id, t) => (id, t.mkString(" ")) }
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = graft.Registry.all("q_dedup_suffix_keep1").fn(spark, dir).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5))).toMap
+      // doc 1 is canonical for the shared run: nothing removed
+      assert(got(1L) === ((100L, 0L, 0L, 100L, 1000000L)))
+      // doc 2 loses the 11 shared windows -> one merged 60-token span
+      assert(got(2L) === ((100L, 11L, 60L, 40L, 400000L)))
+      // doc 3 keeps the first rep occurrence, loses the second (55 tokens)
+      assert(got(3L) === ((125L, 6L, 55L, 70L, 560000L)))
+      assert(got(4L)._2 === 0L && got(5L)._2 === 0L)
+      // conservation: removed + kept == n_tokens everywhere
+      got.values.foreach { case (n, _, rm, kp, _) => assert(rm + kp === n) }
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("q_span_provenance: planted mirrors attributed to source pairs, hot-window cap applied") {
@@ -2228,16 +2232,18 @@ class LlmSpec extends AnyFunSuite {
       (0 until 3).map(i => (10L + i, "c", ok50)) ++
       (0 until 51).map(i => (100L + i, "d", hot50))
     val dir = java.nio.file.Files.createTempDirectory("spanprov").toString
-    corpus.map { case (id, src, t) => (id, src, t.mkString(" ")) }
-      .toDF("doc_id", "source", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.Registry.all("q_span_provenance").fn(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getBoolean(4))).toSeq
-    assert(got === Seq(
-      ("a", "a", 6L, 1L, false),
-      ("a", "b", 11L, 1L, true),
-      ("c", "c", 1L, 3L, false)))
+    try {
+      corpus.map { case (id, src, t) => (id, src, t.mkString(" ")) }
+        .toDF("doc_id", "source", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = graft.Registry.all("q_span_provenance").fn(spark, dir).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getBoolean(4))).toSeq
+      assert(got === Seq(
+        ("a", "a", 6L, 1L, false),
+        ("a", "b", 11L, 1L, true),
+        ("c", "c", 1L, 3L, false)))
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("q_sim_mips ranks by inner product, not cosine (magnitude matters)") {
@@ -2270,27 +2276,29 @@ class LlmSpec extends AnyFunSuite {
       (11L to 16L).map(i => (i, "zh", zText)) ++
       Seq((21L, "zh", eText), (22L, "en", zText))
     val dir = java.nio.file.Files.createTempDirectory("dsirspec").toString
-    corpus.toDF("doc_id", "lang", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.Registry.all("q_dsir_weights").fn(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getBoolean(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    // identical text ⇒ identical weight regardless of label
-    assert(got(21L)._3 === got(1L)._3)
-    assert(got(22L)._3 === got(11L)._3)
-    // target-like text scores strictly above off-target text
-    assert(got(21L)._3 > got(11L)._3)
-    // n_feats = unigrams + bigrams = 8 + 7
-    assert(got(1L)._2 === 15L && got(1L)._1 === true && got(21L)._1 === false)
-    // bucket mapping pinned against a MessageDigest replay
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest("alpha beta".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val expected = java.lang.Long.parseLong(hex.substring(0, 4), 16) % 1024
-    val b = TextAnalysis.dsirFeatures(Seq((1L, "en", "alpha beta"))
-        .toDF("doc_id", "lang", "text"))
-      .filter(col("g") === "alpha beta").select("b").as[Long].head()
-    assert(b === expected)
+    try {
+      corpus.toDF("doc_id", "lang", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = graft.Registry.all("q_dsir_weights").fn(spark, dir).collect()
+        .map(r => r.getLong(0) -> (r.getBoolean(1), r.getLong(2), r.getLong(3)))
+        .toMap
+      // identical text ⇒ identical weight regardless of label
+      assert(got(21L)._3 === got(1L)._3)
+      assert(got(22L)._3 === got(11L)._3)
+      // target-like text scores strictly above off-target text
+      assert(got(21L)._3 > got(11L)._3)
+      // n_feats = unigrams + bigrams = 8 + 7
+      assert(got(1L)._2 === 15L && got(1L)._1 === true && got(21L)._1 === false)
+      // bucket mapping pinned against a MessageDigest replay
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val hex = md.digest("alpha beta".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      val expected = java.lang.Long.parseLong(hex.substring(0, 4), 16) % 1024
+      val b = TextAnalysis.dsirFeatures(Seq((1L, "en", "alpha beta"))
+          .toDF("doc_id", "lang", "text"))
+        .filter(col("g") === "alpha beta").select("b").as[Long].head()
+      assert(b === expected)
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("q_data_card: planted per-source card (cross-source exact dups, majority lang, tie-break)") {
@@ -2305,18 +2313,20 @@ class LlmSpec extends AnyFunSuite {
       (4L, "b", "en", "THE CAT SAT ON THE MAT"),
       (5L, "b", "fr", "bonjour le monde"))
     val dir = java.nio.file.Files.createTempDirectory("cardspec").toString
-    val df = corpus.toDF("doc_id", "source", "lang", "text")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-    df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.Registry.all("q_data_card").fn(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getString(5), r.getLong(6))).toMap
-    val q = TextAnalysis.withQualityPpm(df)
-      .select(col("source"), col("quality_ppm")).as[(String, Long)]
-      .collect().groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    def meanPpm(src: String) = q(src).sum / q(src).length
-    assert(got("a") === ((3L, 16L, meanPpm("a"), 2L, "en", 2L)))
-    assert(got("b") === ((2L, 9L, meanPpm("b"), 1L, "en", 2L)))
+    try {
+      val df = corpus.toDF("doc_id", "source", "lang", "text")
+        .withColumn("n_chars", length(col("text")).cast("long"))
+      df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = graft.Registry.all("q_data_card").fn(spark, dir).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getString(5), r.getLong(6))).toMap
+      val q = TextAnalysis.withQualityPpm(df)
+        .select(col("source"), col("quality_ppm")).as[(String, Long)]
+        .collect().groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      def meanPpm(src: String) = q(src).sum / q(src).length
+      assert(got("a") === ((3L, 16L, meanPpm("a"), 2L, "en", 2L)))
+      assert(got("b") === ((2L, 9L, meanPpm("b"), 1L, "en", 2L)))
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("q_quality_model: planted tier monotonicity + fold equals broadcast-table dot") {
@@ -2830,6 +2840,19 @@ class LlmSpec extends AnyFunSuite {
     assert(inference(retrain).isEmpty, inference(retrain).mkString("\n"))
   }
 
+  /** The exchanges of a DataFrame's executed plan by node name, adaptive
+    * query stages included (`BroadcastExchange`, `Exchange` for a
+    * shuffle, `ReusedExchange` for a reuse of either).
+    */
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case e @ (_: Exchange | _: ReusedExchangeExec) => e.nodeName
+    }
+  }
+
   test("band index: the declared schema is what inference reads back; a warm probe and an append run no read job") {
     val path = "/tmp/graft_test_stage/band_schema_index"
     graft.util.Fs.deleteRecursively(path)
@@ -2844,17 +2867,73 @@ class LlmSpec extends AnyFunSuite {
       .schema === Dedup.bandIndexSchema)
     val batch = slice(ids.length / 4, ids.length / 4 + 20)
     def probe() = graft.streaming.Streams
-      .streamingBandDedup(batch, Dedup.readBandIndex(spark, path)).collect()
-    probe()
-    val warm = Counted(spark)(probe())
+      .streamingBandDedup(batch, Dedup.readBandIndex(spark, path))
+    probe().collect()
+    val warmProbe = probe()
+    val warm = Counted(spark)(warmProbe.collect())
     assert(warm.result.nonEmpty)
     assert(inference(warm).isEmpty, inference(warm).mkString("\n"))
+    // the three band joins read one exchange of the index: one broadcast
+    // build, reused by the other two bands, then the probe's own job
+    assert(warm.jobs === 2, warm.stageDetails.mkString("\n"))
+    assert(exchanges(warmProbe).sorted ===
+      Seq("BroadcastExchange", "ReusedExchange", "ReusedExchange"),
+      warmProbe.queryExecution.executedPlan.toString)
     val append = Counted(spark)(
       Dedup.appendToBandIndex(slice(ids.length * 3 / 4, ids.length), path))
     assert(inference(append).isEmpty, inference(append).mkString("\n"))
+    // one shuffle by band serves the distinct, the anti-join and the write
+    assert(append.jobs === 3, append.stageDetails.mkString("\n"))
     // the distinct invariant holds through the declared read
     val idx = Dedup.readBandIndex(spark, path)
     assert(idx.count() === idx.distinct().count())
+  }
+
+  test("band probe: the sort-merge plan returns the broadcast plan's rows") {
+    val path = "/tmp/graft_test_stage/band_smj_index"
+    graft.util.Fs.deleteRecursively(path)
+    try {
+      Dedup.writeBandIndex(docs.filter(col("doc_id") % 4 =!= 0L), path)
+      // every fourth doc is new; a copy of every eighth indexed doc is a
+      // planted duplicate, so both outcomes occur
+      def probeRows(s: org.apache.spark.sql.SparkSession) = {
+        val d = s.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+          .select(col("doc_id"), col("text"))
+        val batch = d.filter(col("doc_id") % 4 === 0L)
+          .unionByName(d.filter(col("doc_id") % 8 === 1L)
+            .withColumn("doc_id", -col("doc_id")))
+        val probed = graft.streaming.Streams
+          .streamingBandDedup(batch, Dedup.readBandIndex(s, path))
+          .select(col("doc_id"), col("n_bands_hit"), col("is_dup"))
+        val rows = probed.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+        (rows, exchanges(probed))
+      }
+      val (broadcastRows, broadcastPlan) = probeRows(spark)
+      val smj = spark.newSession()
+      smj.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // keep every shuffle partition, as at scale: coalesced into one
+      // task, any plan writes one file per band
+      smj.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val (shuffleRows, shufflePlan) = probeRows(smj)
+      assert(broadcastPlan.contains("BroadcastExchange"), broadcastPlan)
+      // the sort-merge plan shuffles the index once and reuses that
+      // shuffle for the other two bands
+      assert(!shufflePlan.contains("BroadcastExchange"), shufflePlan)
+      assert(shufflePlan.count(_ == "ReusedExchange") === 2, shufflePlan)
+      assert(shuffleRows === broadcastRows)
+      assert(broadcastRows.exists(_._3) && broadcastRows.exists(!_._3))
+      assert(broadcastRows.filter(_._1 < 0).forall(_._2 === 3L),
+        "a verbatim copy of an indexed doc hits all three bands")
+      // an append over the sort-merge anti-join still writes one file per band
+      Dedup.appendToBandIndex(
+        smj.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+          .select(col("doc_id"), col("text")).filter(col("doc_id") % 4 === 0L),
+        path)
+      val files = new java.io.File(s"$path/bands").listFiles().filter(_.isDirectory)
+        .map(_.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
+      assert(files === Seq(2, 2, 2), "one file per band from the write, one from the append")
+    } finally graft.util.Fs.deleteRecursively(path)
   }
 
   test("drop plus rebuild in one JVM serves the rebuilt index's model, recall unchanged") {

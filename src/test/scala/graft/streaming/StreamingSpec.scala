@@ -302,6 +302,41 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streamingBandDedup evaluates a computed band index once per micro-batch, rows equal to the batch call") {
+    import spark.implicits._
+    val docs = graft.Engine.table(spark, TestSpark.sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    // a computed index (not a persisted one): each exchange of it the
+    // plan does not reuse re-runs the corpus signature and distinct
+    val idx = graft.llm.Dedup.bandIndex(docs.filter(col("doc_id") % 4 =!= 0L))
+    val arrivals = docs.filter(col("doc_id") % 4 === 0L)
+      .unionByName(docs.filter(col("doc_id") % 8 === 1L)
+        .withColumn("doc_id", -col("doc_id")))
+      .as[(Long, String)].collect()
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.streamingBandDedup(mem.toDF().toDF("doc_id", "text"), idx)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("t_bandreuse").start()
+    try {
+      mem.addData(arrivals.toSeq: _*); q.processAllAvailable()
+      val plan = q.asInstanceOf[
+          org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ReusedExchange"), plan)
+      val got = spark.table("t_bandreuse")
+        .select(col("doc_id"), col("n_bands_hit"), col("is_dup"))
+        .as[(Long, Long, Boolean)].collect().toSet
+      val want = Streams.streamingBandDedup(
+          arrivals.toSeq.toDF("doc_id", "text"), idx)
+        .select(col("doc_id"), col("n_bands_hit"), col("is_dup"))
+        .as[(Long, Long, Boolean)].collect().toSet
+      assert(got == want,
+        s"extra: ${(got -- want).take(3)}; missing: ${(want -- got).take(3)}")
+      assert(want.exists(_._3) && want.exists(!_._3))
+    } finally q.stop()
+  }
+
   test("streamingAnnProbe flags planted copies against the persisted index, equals its batch form, zero state") {
     import spark.implicits._
     val emb = graft.Engine.table(spark, TestSpark.sfDir, "embeddings")
